@@ -218,10 +218,17 @@ object Bench {
       else if (canarySec < CanaryBand._1) canarySec - CanaryBand._1
       else if (canarySec > CanaryBand._2) canarySec - CanaryBand._2
       else 0.0
+    // a full run that loses the band keys to a failed canary member says
+    // so, instead of looking like a subset run
+    val canarySuppressed =
+      if (canaryFull || only.nonEmpty) ""
+      else s""""canary_suppressed":"failed canary member: ${
+        canary.filterNot(m => byNameAll.get(m).exists(_ >= 0)).mkString(",")}""""
     val canaryHealth =
       if (canaryFull)
         f""","canary_band":[${CanaryBand._1}%.1f,${CanaryBand._2}%.1f],""" +
         f""""canary_in_band":$canaryInBand,"canary_dist":$canaryDist%.3f"""
+      else if (canarySuppressed.nonEmpty) "," + canarySuppressed
       else ""
     val health =
       f""""dirty_kb_start":$dirtyStartKb,"dirty_kb_run":$dirtyRunKb,""" +
@@ -249,6 +256,7 @@ object Bench {
     // the line would blow the stdout tail that rounds 3-8 hit)
     val lineBand = if (canaryFull)
       f""""canary_in_band":$canaryInBand,"canary_dist":$canaryDist%.3f,"""
+    else if (canarySuppressed.nonEmpty) canarySuppressed + ","
     else ""
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","canary_sec":$canarySec%.3f,"canary_n":$canaryN,"dirty_flag":$dirtyFlag,$lineBand"value_norm":${nrm(total)}%.1f,"nq":${
       results.size},"queries":${jmap(head)},"families":${jmap(fams)

@@ -2797,7 +2797,7 @@ object Queries {
     val emb = tbl(s, dir, "embeddings")
     val centroids = emb.filter(col("vec_id") < 8).orderBy("vec_id")
       .select("embedding").collect().map(_.getSeq[Float](0).toArray).toSeq
-    Similarity.ivfCentroidKnn(emb, emb.filter(col("vec_id") < 10), k = 5, centroids)
+    Similarity.ivfMultiProbeKnn(emb, emb.filter(col("vec_id") < 10), k = 5, centroids, nProbe = 1)
       .orderBy("q_id", "n_id")
   }
 
@@ -5095,7 +5095,7 @@ object Queries {
 
   q("q_corpus_pipeline", {
     // the FULL corpus pipeline as ONE oracle-backed query (r12; the
-    // composition gate's correctness half — ProbeCorpusPipeline holds
+    // composition gate's correctness half — PLANS.md:1948-1954 records
     // the staged-equivalence + cost half at sf1/sf10): lang gate →
     // quality gate → near-dup MinHash dedup (exact regime: the oracle
     // replays exact LSH; the dispatcher default is regime-pinned

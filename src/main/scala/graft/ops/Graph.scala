@@ -38,23 +38,8 @@ object Graph {
     * construction use [[knnGraph]].
     */
   def knnGraphBrute(vectors: DataFrame, k: Int, idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    // BLOCKED kernel when the schema allows it (r17, VERDICT r16 #3):
-    // row-identical output (SimilaritySpec holds blocked ≡ expression
-    // on fixture + tie/zero-norm adversaries), ~an order of magnitude
-    // less per-pair overhead, and only partitions×n×k candidate rows
-    // reach the top-k window instead of all n². Non-(long id,
-    // float-array vec) frames keep the expression path.
-    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
-    val blockedOk = vectors.schema(idCol).dataType == LongType &&
-      (vectors.schema(vecCol).dataType match {
-        case ArrayType(FloatType, _) => true
-        case _ => false
-      })
-    symmetrize(
-      if (blockedOk) Similarity.bruteForceKnnBlocked(vectors, vectors, k, idCol, vecCol)
-      else Similarity.bruteForceKnn(vectors, vectors, k, idCol, vecCol))
-  }
+                    vecCol: String = "embedding"): DataFrame =
+    symmetrize(Similarity.bruteForceKnnBlocked(vectors, vectors, k, idCol, vecCol))
 
   /** ANN-backed kNN-graph construction over a PERSISTED IVF index
     * (r13, VERDICT r12 §2): every indexed vector is joined to its own
@@ -179,7 +164,7 @@ object Graph {
       // spread the QUERY side across the shuffle width: the cell layout
       // may sit in a handful of parquet files (a compacted small index
       // is exactly that), and the scan's split count would cap the whole
-      // scoring stage's parallelism (the bruteForceKnn scan rule;
+      // scoring stage's parallelism (the spreadForScan rule;
       // measured 2.8× at sf1). The corpus side needs no spread — it is
       // either broadcast or shuffled on the cell key anyway.
       val q = Similarity.spreadForScan(cells)
@@ -198,8 +183,7 @@ object Graph {
           pmod(Pipeline.md5Hash60(col(idCol)),
             greatest(ceil(col("__ck") / maxCellVecs.toDouble).cast("long"),
               lit(1L)))))
-      val c = keyed(cells).select(col(idCol).as("n_id"),
-        col(vecCol).as("n_vec"), Similarity.l2Norm(col(vecCol)).as("n_norm"),
+      val c = Similarity.vecSide(keyed(cells), "n", idCol, vecCol,
         col("__cell2").as("cell"))
       // spread the QUERY side here too (same scan rule as the exact
       // branch): the capped regime targets exactly the largest/skewed
@@ -212,9 +196,8 @@ object Graph {
         else keyed(qSrc.select(col(idCol), col(vecCol)).withColumn("cell",
           explode(Similarity.ivfAssignCells(col(vecCol),
             Similarity.readIvfCodebook(spark, indexPath), nProbe))))
-      val q = qb.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-        Similarity.l2Norm(col(vecCol)).as("q_norm"), col("__cell2").as("cell"))
-      Similarity.cellTopK(q, c, k)
+      Similarity.cellTopK(
+        Similarity.vecSide(qb, "q", idCol, vecCol, col("__cell2").as("cell")), c, k)
     }
   }
 

@@ -297,16 +297,16 @@ object Pipeline {
     * packed frame: every surviving doc with (quality, n_tok, shard,
     * window_id, off).
     *
-    * Composition discipline (what ProbeCorpusPipeline measures at
-    * sf1/sf10): the narrow gates fuse into the scan; the heavy stages
+    * Composition discipline (measured at sf1/sf10, PLANS.md:1948-1954):
+    * the narrow gates fuse into the scan; the heavy stages
     * keep their own shuffle keys (band digest / gram hash / stratum /
     * shard) with nothing re-shuffled twice on the same key; the
     * near-dup drop set and the contaminated-id set stay
     * drop-list-sized (broadcast anti joins), so the corpus itself is
     * never shuffled between the gates. End-to-end survivors equal the
-    * staged composition of the individual operators exactly (the probe
-    * asserts it), because every stage is deterministic in its input —
-    * no stage depends on partitioning or arrival order.
+    * staged composition of the individual operators exactly (the staged
+    * run matched it row for row), because every stage is deterministic
+    * in its input — no stage depends on partitioning or arrival order.
     */
   /** `dedupMaxBucket` follows the [[Dedup.minhashLsh]] contract (ADVICE
     * r12): default [[Dedup.AutoBucket]] = the dispatcher decides the
@@ -333,7 +333,7 @@ object Pipeline {
     // final pass — left lazy, the lang+quality lineage re-executes in
     // every broadcast subtree and the composed job ran 2x SLOWER than
     // the five stages run separately (the r12 composition gate's
-    // finding, ProbeCorpusPipeline: 34.4 vs 17.9 s at sf1 before this
+    // finding, PLANS.md:1948-1954: 34.4 vs 17.9 s at sf1 before this
     // line). Lazy checkpoint: the first consumer materializes it inside
     // a job it was running anyway.
     val gated = docs

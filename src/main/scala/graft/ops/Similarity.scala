@@ -6,12 +6,28 @@ import org.apache.spark.sql.{Column, DataFrame}
 
 /** Similarity search over embedding columns (`array<float>`).
   *
-  * Two paths:
-  *  - brute-force cosine top-k: exact; the query side is broadcast, so the
-  *    corpus is never shuffled — one scan, linear in corpus size.
-  *  - LSH-bucketed (random-hyperplane sign bits): the scale path — corpus
-  *    and queries shuffle on a small bucket key; only same-bucket pairs
-  *    are scored. Recall is tunable via the number of hyperplanes/probes.
+  * Every kNN search is a candidate generator feeding one top-k tail:
+  *  - a generator joins a query side to a corpus side, each projected by
+  *    [[vecSide]], and scores the pairs it produces. The generators are
+  *    all pairs (brute force, hard negatives, int8 codes), a shared LSH
+  *    bucket, a shared IVF cell (single or multi-probe, in-memory or
+  *    persisted codebook), PQ codes, a PQ shortlist (two-stage) and the
+  *    two-hop neighbourhood of NN-Descent refinement.
+  *  - [[topKPerQuery]] keeps each query's k best pairs.
+  * [[bruteForceKnnBlocked]] also ranks inside its own scan, then hands
+  * its survivors to the same tail.
+  *
+  * Result contract, shared by every kNN entry point: rows
+  * (q_id, n_id, cos) — (q_id, n_id, adc) for the PQ scores, which rank
+  * ascending — with the score rounded to 6 places and ties broken by
+  * n_id ascending.
+  *  - A zero or null vector has cosine 0.0 against every vector.
+  *  - NaN or ±Inf components can make the score NaN. Spark's double
+  *    order puts NaN above every number, so a NaN cosine ranks first and
+  *    a NaN ADC distance last.
+  *  - A null id never pairs: the self-pair filter `q_id != n_id` (or
+  *    the id equi-join) is null for it. The exception is
+  *    [[hardNegativeKnn]], whose only predicate is the label mismatch.
   *
   * All dot products run in double precision with a sequential fold
   * (deterministic, engine-reproducible).
@@ -28,14 +44,6 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
 
-  /** Exact top-k cosine neighbors for each query vector.
-    * Queries are expected small (they are broadcast); the corpus side
-    * streams through one scan + a per-query-partition top-k window.
-    */
-  /** cosine with both norms hoisted to the join inputs: per pair only the
-    * dot product is evaluated; each side's norm is computed once per row
-    * before the join (bit-identical result — same IEEE ops, same order).
-    */
   /** Round-robin the streamed side of a broadcast score scan across the
     * session's shuffle width. The scan's input split count caps the whole
     * O(|corpus|·|queries|) stage: a corpus arriving as a few small files
@@ -46,58 +54,107 @@ object Similarity {
   def spreadForScan(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
 
-  private def cosineHoisted(qVec: Column, nVec: Column,
-                            qNorm: Column, nNorm: Column): Column =
-    // zero-norm guard: cosine against the zero vector is undefined — rank
-    // it last (0.0) instead of failing the whole scan under ANSI mode
-    when(qNorm * nNorm =!= 0.0, dot(qVec, nVec) / (qNorm * nNorm)).otherwise(0.0)
+  /** One side of a kNN candidate join: `<prefix>_id`, `<prefix>_vec` and
+    * the hoisted `<prefix>_norm`, plus the `extra` columns the generator
+    * joins on (cell, label, bucket).
+    */
+  private[ops] def vecSide(df: DataFrame, prefix: String, idCol: String,
+                           vecCol: String, extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as(s"${prefix}_id"), col(vecCol).as(s"${prefix}_vec"),
+      l2Norm(col(vecCol)).as(s"${prefix}_norm")) ++ extra: _*)
 
-  def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      l2Norm(col(vecCol)).as("q_norm")))
-    val c = spreadForScan(corpus)
-      .select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-      l2Norm(col(vecCol)).as("n_norm"))
-    val scored = q.join(c, col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(cosineHoisted(col("q_vec"), col("n_vec"), col("q_norm"), col("n_norm")), 6)
-          .as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
+  /** Cosine with both norms hoisted to the join inputs ([[vecSide]]'s
+    * `q_norm`/`n_norm`): per pair only `pairDot` is evaluated; each side's
+    * norm is computed once per row before the join (bit-identical result —
+    * same IEEE ops, same order).
+    */
+  private def cosineHoisted(pairDot: Column): Column = {
+    val den = col("q_norm") * col("n_norm")
+    // zero-norm guard: cosine against the zero vector is undefined — rank
+    // it last (0.0) instead of failing the whole scan under ANSI mode; a
+    // null norm (null vector) makes the test null and takes 0.0 as well
+    when(den =!= 0.0, pairDot / den).otherwise(0.0)
+  }
+
+  /** The contract score of a candidate pair: hoisted cosine, rounded to 6. */
+  private def cos6(pairDot: Column = dot(col("q_vec"), col("n_vec"))): Column =
+    round(cosineHoisted(pairDot), 6).as("cos")
+
+  /** The one top-k tail: project (q_id, n_id, score) from a candidate pair
+    * frame and keep each query's k best — highest score first (lowest when
+    * `ascending`, for distances), then n_id ascending.
+    */
+  private[ops] def topKPerQuery(pairs: DataFrame, k: Int, score: Column,
+                                ascending: Boolean = false): DataFrame = {
+    val scored = pairs.select(col("q_id"), col("n_id"), score)
+    val s = col(scored.columns(2))
+    val w = Window.partitionBy("q_id")
+      .orderBy(if (ascending) s.asc else s.desc, col("n_id"))
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
   }
 
+  /** Exact top-k cosine neighbors for each query vector.
+    * Queries are expected small (they are broadcast); the corpus side
+    * streams through one scan + a per-query-partition top-k window.
+    */
+  def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int,
+                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val q = broadcast(vecSide(queries, "q", idCol, vecCol))
+    val c = vecSide(spreadForScan(corpus), "n", idCol, vecCol)
+    topKPerQuery(q.join(c, col("q_id") =!= col("n_id")), k, cos6())
+  }
+
   /** BLOCKED brute-force kNN (r17, VERDICT r16 #3): row-identical to
-    * [[bruteForceKnn]] for `long` ids + `array<float>` vectors, with the
-    * O(|corpus|·|queries|) scoring run as a tight JVM loop over a
-    * broadcast query block instead of a Catalyst broadcast-nested-loop
-    * join feeding a pair-scale window. Each corpus task keeps one
+    * [[bruteForceKnn]] on every input, with the O(|corpus|·|queries|)
+    * scoring run as a tight JVM loop over a broadcast query block instead
+    * of a Catalyst broadcast-nested-loop join feeding a pair-scale window.
+    * Needs `long` ids and `array<float>` vectors on both sides; any other
+    * schema runs [[bruteForceKnn]] itself. Each corpus task keeps one
     * bounded top-k buffer PER QUERY ordered by the final total order
     * (cos6 desc, n_id asc), so only partitions×|queries|×k candidate
-    * rows ever reach the (unchanged) global window — the map-side
-    * group-limit the expression form cannot do.
+    * rows ever reach the (shared) top-k tail — the map-side group-limit
+    * the expression form cannot do.
     *
     * Bit-identity argument, piece by piece:
     *  - dot: index-order `((double) a(i)) * ((double) b(i))` fold — the
     *    FloatDotProduct codegen loop verbatim.
     *  - norms: `sqrt(dot(v, v))` per row, hoisted — as in cosineHoisted.
-    *  - zero-norm guard: `if (den != 0) dot/den else 0.0` — same.
+    *  - zero-norm guard: `if (den != 0) dot/den else 0.0` — same; a null
+    *    vector takes the 0.0 branch, as its null norm does there.
     *  - round: Spark's Round(double, 6) is
     *    `BigDecimal(d).setScale(6, HALF_UP).toDouble` over the decimal
-    *    text form, NaN/±Inf passed through — replicated verbatim
-    *    (SimilaritySpec asserts equality against the expression path on
-    *    fixture + adversarial vectors).
+    *    text form, NaN/±Inf passed through — replicated verbatim.
+    *  - order: Spark's double order (`SQLOrderingUtil.compareDoubles`):
+    *    NaN above every number and equal to itself, -0.0 == 0.0.
+    *  - a null id skips the row, as the null `q_id != n_id` test does.
     *  - per-partition top-k under a TOTAL order, unioned, re-ranked by
     *    the same order = global top-k exactly (any global winner is a
     *    partition winner). Ranks within k are preserved because the
     *    comparator is identical and total (n_id unique).
-    * The queries frame collects to the driver — the same rows
-    * bruteForceKnn ships as a broadcast relation, so the size contract
-    * is unchanged.
+    * AdviceRegressionSpec holds blocked ≡ expression on duplicate,
+    * zero-norm, NaN, ±Inf, null-vector and null-id rows. The queries frame
+    * collects to the driver — the same rows bruteForceKnn ships as a
+    * broadcast relation, so the size contract is unchanged.
     */
   def bruteForceKnnBlocked(corpus: DataFrame, queries: DataFrame, k: Int,
                            idCol: String = "vec_id",
                            vecCol: String = "embedding"): DataFrame = {
+    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
+    def blockedOk(df: DataFrame): Boolean =
+      df.schema(idCol).dataType == LongType && (df.schema(vecCol).dataType match {
+        case ArrayType(FloatType, _) => true
+        case _ => false
+      })
+    if (blockedOk(corpus) && blockedOk(queries))
+      blockedTopK(corpus, queries, k, idCol, vecCol)
+    else bruteForceKnn(corpus, queries, k, idCol, vecCol)
+  }
+
+  /** The kernel behind [[bruteForceKnnBlocked]], for long ids and
+    * float-array vectors.
+    */
+  private def blockedTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+                          idCol: String, vecCol: String): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     def dotD(a: Array[Float], b: Array[Float]): Double = {
@@ -107,19 +164,20 @@ object Similarity {
       while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
       acc
     }
+    def normD(v: Array[Float]): Double = if (v == null) 0.0 else math.sqrt(dotD(v, v))
     def round6(x: Double): Double =
       if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
       else scala.math.BigDecimal(x)
         .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
     val qRows = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
-      .collect()
+      .collect().filterNot(_.isNullAt(0))
     val qIds = qRows.map(_.getLong(0))
-    val qVecs = qRows.map(_.getSeq[Float](1).toArray)
-    val qNorms = qVecs.map(v => math.sqrt(dotD(v, v)))
+    val qVecs = qRows.map(r => if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray)
+    val qNorms = qVecs.map(normD)
     val bc = spark.sparkContext.broadcast((qIds, qVecs, qNorms))
     val part = spreadForScan(corpus)
       .select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-      .as[(Long, Array[Float])]
+      .as[(java.lang.Long, Array[Float])]
       .mapPartitions { it =>
         val (ids, vecs, norms) = bc.value
         val nq = ids.length
@@ -128,17 +186,22 @@ object Similarity {
         val bufC = Array.fill(nq)(new Array[Double](k))
         val bufI = Array.fill(nq)(new Array[Long](k))
         val bufN = new Array[Int](nq)
-        // candidate (c, id) is strictly better than slot (bc, bi)?
-        def beats(c: Double, id: Long, bc0: Double, bi: Long): Boolean =
-          c > bc0 || (c == bc0 && id < bi)
-        while (it.hasNext) {
-          val (nId, nVec) = it.next()
-          val nNorm = math.sqrt(dotD(nVec, nVec))
+        // candidate (c, id) is strictly better than slot (bc, bi) under
+        // Spark's double order?
+        def beats(c: Double, id: Long, bc0: Double, bi: Long): Boolean = {
+          val o = if (c == bc0) 0 else java.lang.Double.compare(c, bc0)
+          o > 0 || (o == 0 && id < bi)
+        }
+        // a null corpus id never pairs
+        for ((boxedId, nVec) <- it if boxedId != null) {
+          val nId = boxedId.longValue
+          val nNorm = normD(nVec)
           var qi = 0
           while (qi < nq) {
             if (ids(qi) != nId) {
-              val den = norms(qi) * nNorm
-              val raw = if (den != 0.0) dotD(vecs(qi), nVec) / den else 0.0
+              val qVec = vecs(qi)
+              val den = if (qVec == null || nVec == null) 0.0 else norms(qi) * nNorm
+              val raw = if (den != 0.0) dotD(qVec, nVec) / den else 0.0
               val n0 = bufN(qi)
               val cs = bufC(qi); val is0 = bufI(qi)
               // Rounding is the per-pair cost ceiling (decimal-string
@@ -148,10 +211,11 @@ object Similarity {
               // the k-th slot: round6 moves a value by < 1e-6 (5e-7
               // half-step + representation slack), so
               // raw < kth − 1e-6 ⇒ cos6 < kth ⇒ cannot beat or tie the
-              // k-th entry. Once the buffer warms up (first k corpus
-              // rows per query) almost every pair takes this branch,
-              // leaving the dot product as the true per-pair cost.
-              if (bufN(qi) < k || raw >= cs(k - 1) - 1e-6) {
+              // k-th entry. A NaN raw is never skipped (it ranks first).
+              // Once the buffer warms up (first k corpus rows per
+              // query) almost every pair takes this branch, leaving the
+              // dot product as the true per-pair cost.
+              if (n0 < k || !(raw < cs(k - 1) - 1e-6)) {
                 val cos = round6(raw)
                 if (n0 < k || beats(cos, nId, cs(n0 - 1), is0(n0 - 1))) {
                   // insertion sort from the tail
@@ -172,8 +236,7 @@ object Similarity {
             (ids(qi), bufI(qi)(j), bufC(qi)(j)))
         }
       }.toDF("q_id", "n_id", "cos")
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    part.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
+    topKPerQuery(part, k, col("cos"))
   }
 
   /** Hard-negative mining for contrastive training data: each query's
@@ -187,25 +250,12 @@ object Similarity {
   def hardNegativeKnn(corpus: DataFrame, queries: DataFrame, k: Int,
                       labelCol: String = "label", idCol: String = "vec_id",
                       vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      l2Norm(col(vecCol)).as("q_norm"), col(labelCol).as("q_label")))
-    val c = spreadForScan(corpus).select(col(idCol).as("n_id"),
-      col(vecCol).as("n_vec"), l2Norm(col(vecCol)).as("n_norm"),
+    val q = broadcast(vecSide(queries, "q", idCol, vecCol, col(labelCol).as("q_label")))
+    val c = vecSide(spreadForScan(corpus), "n", idCol, vecCol,
       col(labelCol).as("n_label"))
-    val scored = q.join(c, col("q_label") =!= col("n_label"))
-      .select(col("q_id"), col("n_id"),
-        round(cosineHoisted(col("q_vec"), col("n_vec"), col("q_norm"), col("n_norm")), 6)
-          .as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
+    topKPerQuery(q.join(c, col("q_label") =!= col("n_label")), k, cos6())
   }
 
-  /** Random-hyperplane LSH bucket id: `planes` sign bits packed into a
-    * long. Hyperplanes are plan-time literal arrays (seeded, deterministic
-    * across runs and engines), so each sign bit is one fused
-    * FloatDotProduct against a constant — not a dim×planes interpreted
-    * expression tree.
-    */
   /** The seeded random hyperplanes backing lshBucket — exposed so the
     * DuckDB oracle can embed the identical planes as double literals
     * (Double.toString round-trips bit-exactly through any correctly
@@ -217,6 +267,12 @@ object Similarity {
       Array.fill(dim)(rnd.nextFloat() * 2f - 1f)
     }
 
+  /** Random-hyperplane LSH bucket id: `planes` sign bits packed into a
+    * long. Hyperplanes are plan-time literal arrays (seeded, deterministic
+    * across runs and engines), so each sign bit is one fused
+    * FloatDotProduct against a constant — not a dim×planes interpreted
+    * expression tree.
+    */
   def lshBucket(vec: Column, dim: Int, planes: Int = 8): Column = {
     val bits = hyperplanes(dim, planes).zipWithIndex.map { case (plane, p) =>
       val proj = graft.functions.ArrayKernels.floatDot(vec, typedLit(plane))
@@ -232,24 +288,13 @@ object Similarity {
   def lshKnn(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
              planes: Int = 8, idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      l2Norm(col(vecCol)).as("q_norm"), lshBucket(col(vecCol), dim, planes).as("bucket"))
-    val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-      l2Norm(col(vecCol)).as("n_norm"), lshBucket(col(vecCol), dim, planes).as("bucket"))
-    val scored = q.join(c, Seq("bucket")).filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(cosineHoisted(col("q_vec"), col("n_vec"), col("q_norm"), col("n_norm")), 6)
-          .as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
+    def side(df: DataFrame, prefix: String) = vecSide(df, prefix, idCol, vecCol,
+      lshBucket(col(vecCol), dim, planes).as("bucket"))
+    val pairs = side(queries, "q").join(side(corpus, "n"), Seq("bucket"))
+      .filter(col("q_id") =!= col("n_id"))
+    topKPerQuery(pairs, k, cos6())
   }
 
-  /** Assign each vector to its nearest centroid by cosine (ties broken
-    * by the lowest centroid index). The codebook is a plan-time literal
-    * (collected once — IVF codebooks are tiny relative to the corpus),
-    * so assignment is a narrow codegen'd projection: `|codebook|` fused
-    * dot products per row, no join, no shuffle.
-    */
   /** One (cos, -id) struct per centroid — the shared scoring step behind
     * both assignment forms. Struct ordering then gives the deterministic
     * argmax contract: max/descending = (cos DESC, -id DESC) =
@@ -266,6 +311,12 @@ object Similarity {
       struct(ccos.as("c"), lit(-i).as("negid"))
     }
 
+  /** Assign each vector to its nearest centroid by cosine (ties broken
+    * by the lowest centroid index). The codebook is a plan-time literal
+    * (collected once — IVF codebooks are tiny relative to the corpus),
+    * so assignment is a narrow codegen'd projection: `|codebook|` fused
+    * dot products per row, no join, no shuffle.
+    */
   def ivfAssignCell(vec: Column, centroids: Seq[Array[Float]]): Column =
     // array_max keeps the hot corpus-assignment path O(k) per row (the
     // nProbe>1 form below pays a k log k sort instead)
@@ -286,36 +337,29 @@ object Similarity {
 
   /** Multi-probe IVF search: the corpus lives in exactly one cell, each
     * query fans out to its `nProbe` nearest cells — the standard
-    * recall-vs-cost knob (nProbe=1 is [[ivfCentroidKnn]]; nProbe=|cells|
-    * degenerates to brute force). The fan-out multiplies the QUERY side
-    * only — queries are the small side by construction — and a (q, n)
-    * pair can meet at most once because each corpus vector owns one
-    * cell, so no dedup step is needed before the top-k window.
+    * recall-vs-cost knob (nProbe=1 searches only the query's own cell;
+    * nProbe=|cells| degenerates to brute force). The fan-out multiplies
+    * the QUERY side only — queries are the small side by construction —
+    * and a (q, n) pair can meet at most once because each corpus vector
+    * owns one cell, so no dedup step is needed before the top-k window.
     */
   def ivfMultiProbeKnn(corpus: DataFrame, queries: DataFrame, k: Int,
                        centroids: Seq[Array[Float]], nProbe: Int,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      l2Norm(col(vecCol)).as("q_norm"),
+    val q = vecSide(queries, "q", idCol, vecCol,
       explode(ivfAssignCells(col(vecCol), centroids, nProbe)).as("cell"))
-    val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-      l2Norm(col(vecCol)).as("n_norm"),
+    val c = vecSide(corpus, "n", idCol, vecCol,
       ivfAssignCell(col(vecCol), centroids).as("cell"))
     cellTopK(q, c, k)
   }
 
-  /** The shared cell-join top-k tail: score each (query, same-cell
-    * corpus vector) pair, keep each query's k best (cos DESC, id ASC).
+  /** The shared cell-join generator: every (query, same-cell corpus
+    * vector) pair of two [[vecSide]] frames carrying a `cell` column,
+    * into the top-k tail.
     */
-  private[ops] def cellTopK(q: DataFrame, c: DataFrame, k: Int): DataFrame = {
-    val scored = q.join(c, Seq("cell")).filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(cosineHoisted(col("q_vec"), col("n_vec"), col("q_norm"), col("n_norm")), 6)
-          .as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
-  }
+  private[ops] def cellTopK(q: DataFrame, c: DataFrame, k: Int): DataFrame =
+    topKPerQuery(q.join(c, Seq("cell")).filter(col("q_id") =!= col("n_id")), k, cos6())
 
   /** One NN-Descent refinement round (Dong, Moses & Li 2011, the
     * neighbor-of-my-neighbor principle) over a DIRECTED kNN frame
@@ -332,8 +376,6 @@ object Similarity {
     * connected component, so a cell-confined nProbe=1 IVF graph (each
     * component ⊆ one cell, already the within-cell exact top-k) refines
     * to itself — start from nProbe ≥ 2 (see [[Graph.knnGraphRefined]]).
-    * Same rounding/tie contract as every kNN path (cos rounded to 6,
-    * ties by n_id).
     */
   def knnRefine(knn: DataFrame, vectors: DataFrame, k: Int,
                 idCol: String = "vec_id",
@@ -346,16 +388,9 @@ object Similarity {
     val hop = und.as("a").join(und.as("b"), col("a.n_id") === col("b.q_id"))
       .select(col("a.q_id").as("q_id"), col("b.n_id").as("n_id"))
     val cand = hop.union(und).filter(col("q_id") =!= col("n_id")).distinct()
-    val q = vectors.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      l2Norm(col(vecCol)).as("q_norm"))
-    val c = vectors.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-      l2Norm(col(vecCol)).as("n_norm"))
-    val scored = cand.join(q, "q_id").join(c, "n_id")
-      .select(col("q_id"), col("n_id"),
-        round(cosineHoisted(col("q_vec"), col("n_vec"), col("q_norm"), col("n_norm")), 6)
-          .as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
+    val pairs = cand.join(vecSide(vectors, "q", idCol, vecCol), "q_id")
+      .join(vecSide(vectors, "n", idCol, vecCol), "n_id")
+    topKPerQuery(pairs, k, cos6())
   }
 
   /** Multi-probe search against a PERSISTED index: the corpus side reads
@@ -371,12 +406,9 @@ object Similarity {
                                 vecCol: String = "embedding"): DataFrame = {
     val codebook = readIvfCodebook(spark, path)
     val corpus = spark.read.parquet(ivfCellsPath(spark, path))
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      l2Norm(col(vecCol)).as("q_norm"),
+    val q = vecSide(queries, "q", idCol, vecCol,
       explode(ivfAssignCells(col(vecCol), codebook, nProbe)).as("cell"))
-    val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-      l2Norm(col(vecCol)).as("n_norm"), col("cell"))
-    cellTopK(q, c, k)
+    cellTopK(q, vecSide(corpus, "n", idCol, vecCol, col("cell")), k)
   }
 
   /** Fixed-point scale for kmeansCodebook's centroid means: 2^20, a
@@ -439,18 +471,6 @@ object Similarity {
     }
     centroids
   }
-
-  /** IVF with a coarse centroid codebook: assign corpus + queries to
-    * cells, search only the query's own cell (nProbe = 1). The codebook
-    * here is any Seq of vectors (callers typically run k-means offline;
-    * the assignment signature is the same).
-    */
-  def ivfCentroidKnn(corpus: DataFrame, queries: DataFrame, k: Int,
-                     centroids: Seq[Array[Float]], idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame =
-    // exactly the nProbe = 1 case of the multi-probe search — one
-    // implementation carries the assignment/tie-break contract
-    ivfMultiProbeKnn(corpus, queries, k, centroids, nProbe = 1, idCol, vecCol)
 
   /** SemDeDup-style semantic deduplication: assign every vector to its
     * trained k-means cell, then within each cell drop any vector whose
@@ -560,13 +580,7 @@ object Similarity {
     val intDot = aggregate(
       zip_with(col("q_code"), col("n_code"), (x, y) => x * y),
       lit(0L), (acc, x) => acc + x)
-    val scored = q.join(c, col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"),
-        round(when(col("q_norm") * col("n_norm") =!= 0.0,
-          intDot.cast("double") / (col("q_norm") * col("n_norm")))
-          .otherwise(0.0), 6).as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
+    topKPerQuery(q.join(c, col("q_id") =!= col("n_id")), k, cos6(intDot.cast("double")))
   }
 
   /** Seeded product-quantization codebooks: `m` subspaces of `dim/m`
@@ -644,10 +658,8 @@ object Similarity {
     val q = broadcast(queries.select(col(idCol).as("q_id") +: dtCols: _*))
     val adc = (0 until m).map(j => element_at(col(s"dt$j"), col(s"c$j")))
       .reduceLeft(_ + _)
-    val scored = q.join(c, col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"), round(adc, 6).as("adc"))
-    val w = Window.partitionBy("q_id").orderBy(col("adc").asc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
+    topKPerQuery(q.join(c, col("q_id") =!= col("n_id")), k, round(adc, 6).as("adc"),
+      ascending = true)
   }
 
   /** Two-stage retrieval: a cheap compressed-domain shortlist (PQ ADC,
@@ -670,18 +682,10 @@ object Similarity {
                   vecCol: String = "embedding"): DataFrame = {
     val shortlist = pqKnn(corpus, queries, kShortlist, codebooks, idCol, vecCol)
       .select("q_id", "n_id")
-    val qv = broadcast(queries.select(col(idCol).as("q_id"),
-      col(vecCol).as("q_vec"), l2Norm(col(vecCol)).as("q_norm")))
-    val cv = spreadForScan(corpus).select(col(idCol).as("n_id"),
-      col(vecCol).as("n_vec"), l2Norm(col(vecCol)).as("n_norm"))
-    val rescored = cv.join(broadcast(shortlist), Seq("n_id"))
-      .join(qv, Seq("q_id"))
-      .select(col("q_id"), col("n_id"),
-        round(cosineHoisted(col("q_vec"), col("n_vec"), col("q_norm"), col("n_norm")), 6)
-          .as("cos"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("n_id"))
-    rescored.withColumn("rn", row_number().over(w)).filter(col("rn") <= kFinal)
-      .drop("rn")
+    val qv = broadcast(vecSide(queries, "q", idCol, vecCol))
+    val cv = vecSide(spreadForScan(corpus), "n", idCol, vecCol)
+    topKPerQuery(cv.join(broadcast(shortlist), Seq("n_id")).join(qv, Seq("q_id")),
+      kFinal, cos6())
   }
 
   /** Per-group centroid of an embedding column, in long format
@@ -726,10 +730,8 @@ object Similarity {
       col(idCol).as("q_id") +: col(cellCol).as("cell") +: dtCols: _*))
     val adc = (0 until m).map(j => element_at(col(s"dt$j"), col(s"c$j")))
       .reduceLeft(_ + _)
-    val scored = q.join(c, Seq("cell")).filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"), round(adc, 6).as("adc"))
-    val w = Window.partitionBy("q_id").orderBy(col("adc").asc, col("n_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
+    topKPerQuery(q.join(c, Seq("cell")).filter(col("q_id") =!= col("n_id")), k,
+      round(adc, 6).as("adc"), ascending = true)
   }
 
   /** IVF-style coarse quantization using an existing label/centroid
@@ -739,11 +741,8 @@ object Similarity {
   def ivfKnn(corpus: DataFrame, queries: DataFrame, k: Int,
              cellCol: String, idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      l2Norm(col(vecCol)).as("q_norm"), col(cellCol).as("cell"))
-    val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-      l2Norm(col(vecCol)).as("n_norm"), col(cellCol).as("cell"))
-    cellTopK(q, c, k)
+    cellTopK(vecSide(queries, "q", idCol, vecCol, col(cellCol).as("cell")),
+      vecSide(corpus, "n", idCol, vecCol, col(cellCol).as("cell")), k)
   }
 
   /** PERSISTED IVF index: the trained codebook (`codebook.parquet`,

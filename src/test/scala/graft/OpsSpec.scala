@@ -1503,7 +1503,8 @@ class OpsSpec extends AnyFunSuite {
     assert((20L until 40L).map(cells).toSet.size == 1)
     assert(cells(0L) != cells(39L))
     // the codebook drives cell-restricted kNN end-to-end
-    val knn = Similarity.ivfCentroidKnn(vecs, vecs.filter($"vec_id" === 0), k = 3, codebook)
+    val knn = Similarity.ivfMultiProbeKnn(vecs, vecs.filter($"vec_id" === 0), k = 3,
+        codebook, nProbe = 1)
       .collect().map(_.getLong(1))
     assert(knn.forall(_ < 20L)) // neighbors come from the same cluster
   }
@@ -3025,19 +3026,32 @@ class AdviceRegressionSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(13)
     def vec() = Array.fill(8)(rnd.nextFloat() * 2 - 1)
     // adversaries: exact duplicate vectors (rounded-cos ties resolved by
-    // the n_id tie-break) and a zero-norm vector (the cos=0.0 guard)
-    val base = (0 until 80).map(i => (i.toLong, vec()))
-    val dups = (80 until 90).map(i => (i.toLong, base(i - 80)._2.clone()))
-    val zero = Seq((90L, Array.fill(8)(0f)))
-    val vecs = (base ++ dups ++ zero).toDF("vec_id", "embedding")
+    // the n_id tie-break), a zero-norm vector (the cos=0.0 guard), a NaN
+    // and a ±Inf component (NaN scores, which rank first), a null vector
+    // (scores 0.0) and a null id (never pairs)
+    val base = (0 until 80).map(i => (Option(i.toLong), vec()))
+    val dups = (80 until 90).map(i => (Option(i.toLong), base(i - 80)._2.clone()))
+    val zero = Seq((Option(90L), Array.fill(8)(0f)))
+    val nan = vec(); nan(2) = Float.NaN
+    val inf = vec(); inf(0) = Float.PositiveInfinity; inf(5) = Float.NegativeInfinity
+    val odd = Seq((Option(91L), nan), (Option(92L), inf),
+      (Option(93L), null: Array[Float]), (None, vec()))
+    val vecs = (base ++ dups ++ zero ++ odd).toDF("vec_id", "embedding")
+    // bit-exact score compare: NaN == NaN here, unlike Double equality
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(rows(Similarity.bruteForceKnnBlocked(vecs, vecs, 3)) ==
-      rows(Similarity.bruteForceKnn(vecs, vecs, 3)))
+      .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue,
+        java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet
+    val all = rows(Similarity.bruteForceKnn(vecs, vecs, 3))
+    assert(all.exists(r => java.lang.Double.isNaN(java.lang.Double.longBitsToDouble(r._3))))
+    assert(rows(Similarity.bruteForceKnnBlocked(vecs, vecs, 3)) == all)
     // asymmetric query subset + k larger than some partitions' rows
-    val q = vecs.filter($"vec_id" % 7 === 0)
+    val q = vecs.filter($"vec_id" % 7 === 0 || $"vec_id" > 90 || $"vec_id".isNull)
     assert(rows(Similarity.bruteForceKnnBlocked(vecs, q, 4)) ==
       rows(Similarity.bruteForceKnn(vecs, q, 4)))
+    // an int id column is outside the blocked kernel's schema: it falls
+    // back to the expression path instead of failing
+    val intIds = vecs.select($"vec_id".cast("int").as("vec_id"), $"embedding")
+    assert(rows(Similarity.bruteForceKnnBlocked(intIds, intIds, 3)) == all)
   }
 
   test("multi-probe IVF probing every cell equals brute force") {

@@ -624,7 +624,8 @@ class PlanSpec extends AnyFunSuite {
     // without the gate's lazy localCheckpoint the lang+quality lineage
     // re-executes in every broadcast subtree (dedup anti probe,
     // decontamination gram scan, final pass) — the composed job ran 2x
-    // slower than its own stages until ProbeCorpusPipeline caught it.
+    // slower than its own stages until the r12 composition gate caught
+    // it (PLANS.md:1948-1954).
     // That recompute is invisible to the exchange and probe-job sweeps
     // (it shows only in wall time), so pin the plan shape directly: the
     // only parquet scan left in the composed plan is the EVAL slice;

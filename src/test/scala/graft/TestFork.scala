@@ -1,8 +1,7 @@
 package graft
 
 /** Shared test-scope plumbing (r13 review: the forked-JVM runner and the
-  * add-opens list were duplicated verbatim across specs, and the probes
-  * each re-defined the same nanoTime helper).
+  * add-opens list were duplicated verbatim across specs).
   */
 object ForkedJvm {
   /** JDK-17 module opens Spark needs when a session is created outside
@@ -35,13 +34,5 @@ object ForkedJvm {
     val p = pb.start()
     val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
     (p.waitFor(), out)
-  }
-}
-
-object Timed {
-  /** (result, seconds) of `body` — the probes' shared wall clock. */
-  def apply[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime(); val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
   }
 }

@@ -1,7 +1,12 @@
 #!/usr/bin/env python3
 """Local pre-check of SparkEntry oracle parity.
 
-Usage: oracle_check.py <sfDir> <verifyOutDir>
+Usage: oracle_check.py [--publish] <sfDir> <verifyOutDir>
+
+Full gate (all declared queries, publishes CORRECTNESS_LOCAL.json):
+    sbt "runMain graft.Verify <sfDir> <outDir>"
+    python3 tools/oracle_check.py --publish <sfDir> <outDir>
+--publish may appear anywhere on the command line.
 
 Replicates the driver's t2 compare: for each query dir under
 <verifyOutDir>, read the Spark parquet result, run the corresponding
@@ -9,6 +14,7 @@ oracle SQL from oracle_sql.json in DuckDB (tables = views over the
 sfDir parquet files), then compare with columns sorted by name and
 rows sorted by all columns. Floats compared to 9 significant digits.
 """
+import argparse
 import json
 import math
 import sys
@@ -41,7 +47,7 @@ def table_hash(df: pd.DataFrame):
     return [tuple(cell(v) for v in row) for row in df.itertuples(index=False)]
 
 
-def main(sf_dir: str, out_dir: str) -> int:
+def main(sf_dir: str, out_dir: str, publish: bool = False) -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -132,7 +138,7 @@ def main(sf_dir: str, out_dir: str) -> int:
     if missing:
         print(f"MISSING from out_dir ({len(missing)} oracle queries not "
               f"checked): {missing[:10]}{'...' if len(missing) > 10 else ''}")
-    if "--publish" in sys.argv:
+    if publish:
         if missing:
             print("NOT publishing CORRECTNESS_LOCAL.json: oracle queries missing")
             return 2
@@ -143,4 +149,10 @@ def main(sf_dir: str, out_dir: str) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    ap = argparse.ArgumentParser(description="Local DuckDB-parity pre-check.")
+    ap.add_argument("sf_dir", help="directory holding the <table>.parquet inputs")
+    ap.add_argument("out_dir", help="graft.Verify output (query dirs + oracle_sql.json)")
+    ap.add_argument("--publish", action="store_true",
+                    help="write CORRECTNESS_LOCAL.json (full runs only)")
+    args = ap.parse_args()
+    sys.exit(main(args.sf_dir, args.out_dir, args.publish))
