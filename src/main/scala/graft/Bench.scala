@@ -206,8 +206,8 @@ object Bench {
       else -1.0
     // canary-band flag (r14 #2): only meaningful on full runs with all
     // canary members present. On SUBSET runs (SPARK_GRAFT_QUERIES set —
-    // the driver never sets it) the flag and distance are suppressed
-    // entirely (r17, VERDICT r16 #6): a meaningless
+    // the driver never sets it) the flag and distance are replaced by a
+    // `canary_suppressed` marker (r17, VERDICT r16 #6): a meaningless
     // `canary_in_band=false` on a filtered run read as a health alarm.
     val canaryFull = canaryN == canary.size
     val canaryInBand = canaryFull &&
@@ -218,10 +218,11 @@ object Bench {
       else if (canarySec < CanaryBand._1) canarySec - CanaryBand._1
       else if (canarySec > CanaryBand._2) canarySec - CanaryBand._2
       else 0.0
-    // a full run that loses the band keys to a failed canary member says
-    // so, instead of looking like a subset run
+    // a run that loses the band keys says why — a subset run or a failed
+    // canary member — so neither looks like a health key merely missing
     val canarySuppressed =
-      if (canaryFull || only.nonEmpty) ""
+      if (canaryFull) ""
+      else if (only.nonEmpty) """"canary_suppressed":"subset run""""
       else s""""canary_suppressed":"failed canary member: ${
         canary.filterNot(m => byNameAll.get(m).exists(_ >= 0)).mkString(",")}""""
     val canaryHealth =

@@ -23,8 +23,7 @@ object FlfFormat {
   /** Write as a fixed-length file. `coalesce1` forces a single output file
     * for byte-parity with the reference's single-file writer (SURVEY.md
     * §7.4); leave false at scale to let every task write its own split.
-    */
-  /** `mode`: Spark SaveMode name — the reference writer's open-mode
+    * `mode`: Spark SaveMode name — the reference writer's open-mode
     * properties map onto it (force_create_new = errorifexists [default],
     * truncate_existing = overwrite; writer.rs:112-121, 173-179).
     */
@@ -42,7 +41,7 @@ object FlfFormat {
     * cell (lpad/rpad truncation semantics).
     */
   def formatColumn(value: Column, c: FixedColumn): Column = {
-    val s = asText(value, c.dtype)
+    val s = asText(value)
     val pad = c.padSymbol.toString
     c.alignment match {
       case Alignment.Right => lpad(s, c.length, pad)
@@ -54,11 +53,11 @@ object FlfFormat {
     }
   }
 
-  /** Text rendering per dtype. Floats keep Spark's canonical
-    * double/float-to-string form; a NULL renders as an all-pad cell (the
-    * flf format has no null marker — parsing an all-pad cell yields NULL
-    * for nullable columns, the round-trip-consistent choice).
+  /** Text rendering of any dtype: its string cast. Floats keep Spark's
+    * canonical double/float-to-string form; a NULL renders as an all-pad
+    * cell (the flf format has no null marker — parsing an all-pad cell
+    * yields NULL for nullable columns, the round-trip-consistent choice).
     */
-  private def asText(value: Column, t: FlfType): Column =
+  private def asText(value: Column): Column =
     coalesce(value.cast("string"), lit(""))
 }

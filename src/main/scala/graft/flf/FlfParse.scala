@@ -27,18 +27,23 @@ object FlfParse {
     * two projections so the slicer evaluates once (CollapseProject keeps
     * non-cheap producers used more than once in their own projection).
     */
-  def parse(lines: DataFrame, schema: FixedSchema): DataFrame = {
-    val alignCode: Alignment => Int = {
-      case Alignment.Left => 0; case Alignment.Right => 1; case Alignment.Center => 2
-    }
-    val cells = graft.functions.SliceFixedLine(col("value"),
-      schema.columns.map(_.offset), schema.columns.map(_.length),
-      schema.columns.map(c => alignCode(c.alignment)),
-      schema.columns.map(_.padSymbol))
-    lines.select(cells.as("__cells"))
+  def parse(lines: DataFrame, schema: FixedSchema): DataFrame =
+    lines.select(cells(col("value"), schema))
       .select(schema.columns.zipWithIndex.map { case (c, i) =>
         fromTrimmed(col("__cells").getItem(i), c)
       }: _*)
+
+  /** Every column's trimmed cell of `line` in one SliceFixedLine walk, as
+    * the `__cells` array both [[parse]] and [[parseQuarantine]] index.
+    */
+  private def cells(line: Column, schema: FixedSchema): Column = {
+    val alignCode: Alignment => Int = {
+      case Alignment.Left => 0; case Alignment.Right => 1; case Alignment.Center => 2
+    }
+    graft.functions.SliceFixedLine(line,
+      schema.columns.map(_.offset), schema.columns.map(_.length),
+      schema.columns.map(c => alignCode(c.alignment)),
+      schema.columns.map(_.padSymbol)).as("__cells")
   }
 
   /** Schema evolution — the reference's namesake scenario: a fleet of
@@ -111,7 +116,8 @@ object FlfParse {
     * (null on failure) and `_quarantined` flags rows where any
     * NON-NULLABLE column failed; callers split on the flag and route bad
     * rows — raw line retained for repair — to a side sink while the good
-    * rows commit. A pure narrow projection like the strict path.
+    * rows commit. A pure narrow projection over the same fused slicer as
+    * the strict path.
     */
   def parseQuarantine(lines: DataFrame, schema: FixedSchema,
                       lineCol: String = "value"): DataFrame = {
@@ -121,14 +127,14 @@ object FlfParse {
       s"parseQuarantine reserves column name(s) '$lineCol' (raw line) and " +
         s"'_quarantined' (flag); rename schema column(s) ${reserved.mkString(", ")} " +
         "or pass a different lineCol")
-    val parsedCols = schema.columns.map { c =>
-      castStrict(trimPad(substring(col(lineCol), c.offset + 1, c.length), c),
-        c.dtype).as(c.name)
+    val parsedCols = schema.columns.zipWithIndex.map { case (c, i) =>
+      castStrict(col("__cells").getItem(i), c.dtype).as(c.name)
     }
     val bad = schema.columns.filterNot(_.isNullable)
       .map(c => col(c.name).isNull)
       .reduceOption(_ || _).getOrElse(lit(false))
-    lines.select(col(lineCol) +: parsedCols: _*)
+    lines.select(col(lineCol), cells(col(lineCol), schema))
+      .select(col(lineCol) +: parsedCols: _*)
       .withColumn("_quarantined", bad)
   }
 

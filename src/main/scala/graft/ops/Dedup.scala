@@ -72,23 +72,13 @@ object Dedup {
   def minhashSignature(shingleCol: Column, k: Int): Column =
     minhashFromPairs(shingleHashPairs(shingleCol), k)
 
-  /** MinHash-LSH near-duplicate pairs over `df(idCol, textCol)`.
-    *
-    * Pipeline: shingle → signature(bands*rows) → explode one row per band
-    * with a band digest → self-join on (band, digest) for candidates →
-    * verify exact shingle Jaccard >= threshold. The only shuffles are the
-    * band-bucket exchange and the two verification joins on id — all
-    * key-partitioned, no quadratic blowup. Skewed buckets (boilerplate
-    * documents) are bounded by the band digest's 128-bit spread; AQE's
-    * skew-join handles the rest.
-    */
   /** Shared LSH prep: the shingle frame (with sorted xxhash64 shingle
     * hashes for exact verification) and the banded signature rows.
     * Both are localCheckpointed: each feeds several consumers, and
     * projection collapse would otherwise recompute the md5 pyramid per
-    * use (see the minhashLsh scaladoc for the full rationale).
-    */
-  /** Returns (shingle frame, band frame, band-row count). The count is
+    * use (see the comment in minhashLsh for the full rationale).
+    *
+    * Returns (shingle frame, band frame, band-row count). The count is
     * `-1` when the bands are not checkpointed; otherwise it is read off
     * the SAME job that materializes the checkpoint (lazy localCheckpoint
     * + count — one action instead of eager-checkpoint-then-probe), so
@@ -139,7 +129,17 @@ object Dedup {
     } else (sh, bandRows, -1L)
   }
 
-  /** `maxBucket` contract. A (band, digest) bucket holding k docs
+  /** MinHash-LSH near-duplicate pairs over `df(idCol, textCol)`.
+    *
+    * Pipeline: shingle → signature(bands*rows) → explode one row per band
+    * with a band digest → self-join on (band, digest) for candidates →
+    * verify exact shingle Jaccard >= threshold. The only shuffles are the
+    * band-bucket exchange and the two verification joins on id — all
+    * key-partitioned, no quadratic blowup. Skewed buckets (boilerplate
+    * documents) are bounded by the band digest's 128-bit spread; AQE's
+    * skew-join handles the rest.
+    *
+    * `maxBucket` contract. A (band, digest) bucket holding k docs
     * contributes C(k,2) candidate pairs, and on vocabulary-limited
     * corpora the per-band minima concentrate on the few globally-smallest
     * shingle hashes, so the hottest bucket grows as a LINEAR FRACTION of
@@ -210,55 +210,9 @@ object Dedup {
     */
   val DefaultProbeFloorDocs: Long = 8192L
 
-  /** One dispatched LSH run: the regime the probe chose and why, plus the
-    * verified pairs. `candidateRetention` is the band-level recall proxy —
-    * the fraction of exact candidate pairs still generated after the cap
-    * (1.0 in the exact regime). It is a PESSIMISTIC bound on verified-pair
-    * recall (a true pair survives if ANY of its band buckets is under the
-    * cap); measure with q_eval_dedup_recall before trusting a cap on a
-    * new corpus.
+  /** Sampled LSH routing decides only on an adequate sample: at least
+    * this many sampled band rows (see [[HotKeys.ProbeAmbiguityBand]]).
     */
-  /** `probed = false` marks a floor-skipped dispatch (corpus at or below
-    * `probeFloorDocs`): the regime is exact by construction and the three
-    * `est*`/`maxBucketObserved` fields are `-1` (never measured).
-    * `probeMode` records which probe produced the stats (the SpanDispatch
-    * convention): `"none"` = floor-skipped; `"exact"` = the full
-    * band-checkpoint aggregate (stats exact); `"sampled"` = the
-    * document-sampled pre-probe, where `nDocs`/`estCandidates` are
-    * unbiased S-scaled estimates, `maxBucketObserved` is a sample LOWER
-    * BOUND, and in the capped regime `estCandidatesCapped`/
-    * `candidateRetention` are not-estimable sentinels (-1 / NaN) — the
-    * ≤cap mass sits below sample resolution at S ≫ cap.
-    */
-  case class LshDispatch(regime: String, nDocs: Long, estCandidates: Long,
-                         estCandidatesCapped: Long, maxBucketObserved: Long,
-                         candidateRetention: Double, cap: Int,
-                         probed: Boolean, probeMode: String,
-                         pairs: DataFrame)
-
-  /** Document-sample modulus for the LSH pre-probe — the span
-    * dispatcher's two-phase pattern ([[DefaultSpanProbeSampleMod]])
-    * applied to the band-bucket distribution: docs with
-    * `md5(id) mod S == 0` are shingled/banded and ONE streaming
-    * aggregate over their bucket histogram estimates the candidate
-    * mass. A bucket of k docs keeps Binomial(k, 1/S) sampled members,
-    * so E[C(k_s,2)]·S² = C(k,2) exactly and the candidates-per-doc
-    * routing ratio scales by one clean S. On a clear-EXACT decision the
-    * full band frame is built WITHOUT its checkpoint (the self-join's
-    * two scans share one exchange — the span exact-route insight) and
-    * without the checkpoint's count job, so the probe's cost is ~1/S of
-    * the shingle+minhash CPU instead of the r14 path's full-corpus
-    * materialization-ahead-of-time (12.8% of the routed total at sf100).
-    */
-  val DefaultLshProbeSampleMod: Int = 64
-
-  /** Sampled LSH routing only decides when the estimated candidates/doc
-    * ratio clears the threshold by this band on an adequate sample
-    * (≥ [[MinSampledBandRows]] sampled band rows); otherwise the exact
-    * checkpointed probe runs — small and borderline corpora behave
-    * exactly as before.
-    */
-  val LshProbeAmbiguityBand: Double = 4.0
   val MinSampledBandRows: Long = 8192L
 
   /** Phase-1 engagement gate: the sampled pre-probe itself costs one
@@ -275,9 +229,9 @@ object Dedup {
 
   /** Size-aware MinHash-LSH dispatcher (the Ranks.groupedPercentiles
     * pattern applied to dedup). ONE cheap probe over the
-    * already-checkpointed band rows (groupBy (band, digest) count →
-    * Σ C(k,2), its ≤cap restriction, max k, total rows — all
-    * map-side-combined on a frame of `bands` rows per doc) decides:
+    * already-checkpointed band rows ([[HotKeys.mass]] over the
+    * (band, digest) buckets — map-side-combined on a frame of `bands`
+    * rows per doc) decides:
     *
     *  - Σ C(k,2) ≤ `maxCandidatesPerDoc` · nDocs → EXACT: candidate
     *    generation is linear-in-corpus work, no reason to pay recall.
@@ -293,7 +247,7 @@ object Dedup {
     * corpus: sf0.01 (298 raw ≈ 0.6/doc) … sf1 (2.05M ≈ 41/doc) exact;
     * sf3+ (the n² onset: ~31M ≈ 204/doc) capped. The probe is an eager
     * construction-time job, accounted in the probe-job budget sweep
-    * (PlanSpec).
+    * (PlanSpec). See [[Dispatch]] for the reported statistics.
     */
   def minhashLshAuto(df: DataFrame, textCol: String, idCol: String,
                      shingleN: Int = 3, bands: Int = 3, rows: Int = 3,
@@ -301,21 +255,17 @@ object Dedup {
                      cappedBucket: Int = DefaultCappedBucket,
                      maxCandidatesPerDoc: Long = DefaultMaxCandidatesPerDoc,
                      probeFloorDocs: Long = DefaultProbeFloorDocs,
-                     probeSampleMod: Int = DefaultLshProbeSampleMod,
+                     probeSampleMod: Int = HotKeys.ProbeSampleMod,
                      minSampledBandRows: Long = MinSampledBandRows,
                      probeSampleMinBytes: Long = DefaultLshProbeSampleMinBytes)
-      : LshDispatch = {
+      : Dispatch = {
     // Phase 1 — SAMPLED pre-probe (r15, the span two-phase pattern):
     // shingle/band 1/S of the docs, one streaming bucket-histogram
-    // aggregate, no checkpoints. Route immediately when the S-scaled
-    // candidates/doc estimate clears the threshold by the ambiguity
-    // band on an adequate sample; the clear-EXACT route then builds the
+    // aggregate, no checkpoints. The clear-EXACT route then builds the
     // band frame CHECKPOINT-FREE (its two self-join scans share one
-    // exchange) and skips the checkpoint's count job — at sf100 the r14
-    // path's probe tax was 12.8% of the routed total, all of it work
-    // the exact route can avoid pre-paying. Thin samples and boundary
-    // ratios fall through to the exact probe, so fixtures and
-    // near-threshold corpora keep exact stats and unchanged routing.
+    // exchange) and skips the checkpoint's count job; the clear-CAPPED
+    // route keeps the checkpoint (the stop-shingle gate's keep-aggregate
+    // plus both self-join sides = three consumers).
     // fail CLOSED on plans without real size statistics (review r15):
     // a LogicalRDD (localCheckpointed input — pervasive in this
     // library) reports defaultSizeInBytes = Long.MaxValue, which would
@@ -323,115 +273,51 @@ object Dedup {
     // corpora the gate protects. Unknown size -> phase 2, the same
     // fail-safe direction as AsOfJoinPlan's broadcast threshold.
     val szStats = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (probeSampleMod > 1 && szStats >= BigInt(probeSampleMinBytes) &&
-        szStats < BigInt(Long.MaxValue) / 2) {
-      val s = probeSampleMod.toLong
-      val sampled = df.filter(
-        pmod(Pipeline.md5Hash60(col(idCol)), lit(s)) === 0L)
-      val halfS = col("k").cast("double") * (col("k") - 1).cast("double") / 2
-      val (_, bandS, _) = shingleBands(sampled, textCol, idCol, shingleN,
-        bands, rows, checkpointBands = false, checkpointSh = false)
-      val st = bandS.groupBy("band", "digest").agg(count(lit(1)).as("k"))
-        .agg(sum(halfS).as("cand"), max(col("k")).as("max_k"),
-          sum(col("k")).as("band_rows"))
-        .collect()(0)
-      def lngS(i: Int): Long = if (st.isNullAt(i)) 0L else st.getLong(i)
-      def dblS(i: Int): Double = if (st.isNullAt(i)) 0.0 else st.getDouble(i)
-      val (candS, maxKS, rowsS) = (dblS(0), lngS(1), lngS(2))
-      val nDocsEst = rowsS * s / math.max(bands, 1)
-      // estimated raw candidates per doc = candS·S² / (rowsS·S/bands)
-      val ratio =
-        if (rowsS > 0) candS * s * bands / rowsS else 0.0
-      val thr = maxCandidatesPerDoc.toDouble
-      if (rowsS >= minSampledBandRows && ratio <= thr / LshProbeAmbiguityBand) {
-        // clear EXACT: no cap is applied, so the capped mass IS the
-        // mass (the SpanDispatch estPairsCapped convention)
-        val (sh, bandRows, _) = shingleBands(df, textCol, idCol, shingleN,
-          bands, rows, checkpointBands = false)
-        return LshDispatch(regime = "exact", nDocs = nDocsEst,
-          estCandidates = (candS * s * s).toLong,
-          estCandidatesCapped = (candS * s * s).toLong,
-          maxBucketObserved = maxKS, candidateRetention = 1.0,
-          cap = Int.MaxValue, probed = true, probeMode = "sampled",
+    val sample =
+      if (szStats >= BigInt(probeSampleMinBytes) &&
+          szStats < BigInt(Long.MaxValue) / 2)
+        HotKeys.sampled(df, idCol, probeSampleMod, minSampledBandRows, bands,
+          maxCandidatesPerDoc, Seq("band", "digest"))(
+          shingleBands(_, textCol, idCol, shingleN, bands, rows,
+            checkpointBands = false, checkpointSh = false)._2)
+      else None
+    sample.map { s =>
+      val (sh, bandRows, _) = shingleBands(df, textCol, idCol, shingleN,
+        bands, rows, checkpointBands = !s.exact)
+      Dispatch.fromSample(s, cappedBucket, verifiedPairs(sh,
+        if (s.exact) bandRows else capBuckets(bandRows, cappedBucket), threshold))
+    }.getOrElse {
+      // Phase 2 — exact probe (fallback; also probeSampleMod <= 1): the
+      // r14 behavior verbatim — band checkpoint + count job + one
+      // map-side-combined bucket aggregate riding on it
+      val (sh, bandRows, nBandRows) = shingleBands(df, textCol, idCol, shingleN, bands, rows)
+      val nDocs = nBandRows / math.max(bands, 1)
+      if (nDocs <= probeFloorDocs)
+        // sub-floor corpus: exact is certain (see [[DefaultProbeFloorDocs]]),
+        // the probe would be the only superfluous job — skip it
+        Dispatch("exact", "none", nDocs, estPairs = -1L, estPairsCapped = -1L,
+          maxKey = -1L, retention = 1.0, cap = Int.MaxValue,
           pairs = verifiedPairs(sh, bandRows, threshold))
+      else {
+        val (routed, exact, m) =
+          probeRoute(bandRows, bands, cappedBucket, maxCandidatesPerDoc)
+        Dispatch.fromMass(exact, nDocs, m, cappedBucket,
+          verifiedPairs(sh, routed, threshold))
       }
-      if (rowsS >= minSampledBandRows && ratio >= thr * LshProbeAmbiguityBand) {
-        // clear CAPPED: the stop-shingle gate's keep-aggregate plus both
-        // self-join sides give the band frame three consumers — build it
-        // WITH the checkpoint, as before. The ≤cap mass is not estimable
-        // from the sample (k ≤ cap buckets almost never draw 2 sampled
-        // members at S ≫ cap) — sentinels, never plausible wrong numbers.
-        val (sh, bandRows, _) = shingleBands(df, textCol, idCol, shingleN,
-          bands, rows)
-        return LshDispatch(regime = "capped", nDocs = nDocsEst,
-          estCandidates = (candS * s * s).toLong,
-          estCandidatesCapped = -1L,
-          maxBucketObserved = maxKS, candidateRetention = Double.NaN,
-          cap = cappedBucket, probed = true, probeMode = "sampled",
-          pairs = verifiedPairs(sh, capBuckets(bandRows, cappedBucket),
-            threshold))
-      }
-    }
-    // Phase 2 — exact probe (fallback; also probeSampleMod <= 1): the
-    // r14 behavior verbatim — band checkpoint + count job + one
-    // map-side-combined bucket aggregate riding on it
-    val (sh, bandRows, nBandRows) = shingleBands(df, textCol, idCol, shingleN, bands, rows)
-    val nDocs = nBandRows / math.max(bands, 1)
-    if (nDocs <= probeFloorDocs)
-      // sub-floor corpus: exact is certain (see [[DefaultProbeFloorDocs]]),
-      // the probe would be the only superfluous job — skip it
-      LshDispatch(regime = "exact", nDocs = nDocs, estCandidates = -1L,
-        estCandidatesCapped = -1L, maxBucketObserved = -1L,
-        candidateRetention = 1.0, cap = Int.MaxValue, probed = false,
-        probeMode = "none",
-        pairs = verifiedPairs(sh, bandRows, threshold))
-    else {
-      val (routed, exact, (_, cand, candCapped, maxK)) =
-        probeRoute(bandRows, bands, cappedBucket, maxCandidatesPerDoc)
-      LshDispatch(
-        regime = if (exact) "exact" else "capped",
-        nDocs = nDocs, estCandidates = cand,
-        // routed-plan candidate mass (the SpanDispatch convention): the
-        // exact regime applies no cap, so the capped mass IS the mass
-        estCandidatesCapped = if (exact) cand else candCapped,
-        maxBucketObserved = maxK,
-        candidateRetention =
-          if (exact) 1.0 else candCapped.toDouble / math.max(cand, 1L),
-        cap = if (exact) Int.MaxValue else cappedBucket,
-        probed = true, probeMode = "exact",
-        pairs = verifiedPairs(sh, routed, threshold))
     }
   }
 
   /** The dispatcher's probe + route over a CHECKPOINTED band frame: one
-    * map-side-combined aggregate, then either the frame unchanged (exact)
-    * or its ≤cap restriction. Stats tuple: (nDocs, ΣC(k,2), capped
-    * ΣC(k,2), max bucket).
+    * [[HotKeys.mass]] aggregate, then either the frame unchanged (exact)
+    * or its ≤cap restriction.
     */
   private def probeRoute(bandRows: DataFrame, bands: Int, cappedBucket: Int,
                          maxCandidatesPerDoc: Long)
-      : (DataFrame, Boolean, (Long, Long, Long, Long)) = {
-    // pair mass sums in DOUBLE: a hot bucket of k docs contributes
-    // k(k-1)/2, and at the corpus sizes this probe exists to defend
-    // against (k a linear fraction of 1e10+ docs) the Long form wraps
-    // silently and could route the most degenerate corpus EXACT (r12
-    // review). Double is approximate above 2^53 — routing is an
-    // order-of-magnitude decision, and the reported estimates saturate
-    // at Long.MaxValue.
-    val half = col("k").cast("double") * (col("k") - 1).cast("double") / 2
-    val st = bandRows.groupBy("band", "digest").agg(count(lit(1)).as("k"))
-      .agg(sum(half).as("cand"),
-        sum(when(col("k") <= cappedBucket, half).otherwise(lit(0.0d)))
-          .as("cand_capped"),
-        max(col("k")).as("max_k"), sum(col("k")).as("band_rows"))
-      .collect()(0)
-    def lng(i: Int): Long = if (st.isNullAt(i)) 0L else st.getLong(i)
-    def dbl(i: Int): Double = if (st.isNullAt(i)) 0.0 else st.getDouble(i)
-    val (cand, candCapped, maxK) = (dbl(0), dbl(1), lng(2))
-    val nDocs = lng(3) / bands // each banded doc emits exactly `bands` rows
-    val exact = cand <= maxCandidatesPerDoc.toDouble * math.max(nDocs, 1L)
-    val routed = if (exact) bandRows else capBuckets(bandRows, cappedBucket)
-    (routed, exact, (nDocs, cand.toLong, candCapped.toLong, maxK))
+      : (DataFrame, Boolean, HotKeys.Mass) = {
+    val m = HotKeys.mass(bandRows, Seq("band", "digest"), cappedBucket)
+    val nDocs = m.rows / bands // each banded doc emits exactly `bands` rows
+    val exact = m.pairs <= maxCandidatesPerDoc.toDouble * math.max(nDocs, 1L)
+    (if (exact) bandRows else capBuckets(bandRows, cappedBucket), exact, m)
   }
 
   /** [[probeRoute]] with the dispatcher defaults, band frame only — the
@@ -625,178 +511,55 @@ object Dedup {
   val DefaultCappedGramDocs: Int = 50
   val DefaultMaxPairsPerGramRow: Long = 8L
 
-  /** Document-sample modulus for the span pre-probe: docs with
-    * `md5(id) mod S == 0` (deterministic, engine-reproducible) feed a
-    * streaming window-frequency aggregate that never materializes the
-    * full gram frame. Estimators are exactly unbiased: a window shared
-    * by k docs keeps Binomial(k, 1/S) sampled postings, and
-    * E[C(k_s,2)]·S² = C(k,2) for every k, so pair mass scales by S² and
-    * gram rows by S — the routing RATIO (pairs per gram row) scales by
-    * a clean S with no bias term. At sf100 the checkpointed probe's wall
-    * was 569 s against an 86 s routed plan, all of it gram-frame
-    * materialization the EXACT route never consumes (its two self-join
-    * scans share one exchange); the sampled pre-probe shingles 1/S of
-    * the corpus and drops the checkpoint entirely.
+  /** The sampled span pre-probe decides only on an adequate sample: at
+    * least this many sampled gram rows (see [[HotKeys.ProbeAmbiguityBand]]).
     */
-  val DefaultSpanProbeSampleMod: Int = 64
-
-  /** The sampled pre-probe only decides when the estimated pairs/row
-    * ratio is OUTSIDE `[threshold/band, threshold·band]` AND the sample
-    * carried at least [[MinSampledGramRows]] gram rows; anything closer
-    * to the boundary (or any corpus small enough to sample thinly) falls
-    * back to the exact checkpointed probe, so small/ambiguous corpora
-    * behave exactly as before. Real corpus shapes sit decades from the
-    * boundary (sf100: 0.002 pairs/row vs 8; the boilerplate adversarial
-    * shape: hundreds vs 8), so the band only ever catches genuinely
-    * borderline inputs — where the exact probe's cost is modest anyway.
-    */
-  val SpanProbeAmbiguityBand: Double = 4.0
   val MinSampledGramRows: Long = 65536L
-
-  /** One dispatched shared-span run: regime, probe stats over the
-    * window-frequency distribution, band-level pair retention
-    * (capped-pair mass / exact-pair mass; 1.0 in the exact regime), and
-    * the pair frame. `estPairsCapped` is the pair mass of the ROUTED
-    * plan in EVERY probe mode: equal to `estPairs` in the exact regime
-    * (no cap is applied, so the capped mass IS the mass — consistent
-    * with `pairRetention = 1.0`), the ≤cap-restricted mass in the
-    * exact-probe capped regime, and the -1 sentinel in the sampled
-    * capped regime. `probeMode` records which probe produced the stats:
-    * `"exact"` = the full checkpointed window-frequency aggregate (stats
-    * are exact); `"sampled"` = the document-sampled streaming pre-probe,
-    * where `nGramRows`/`estPairs` are unbiased S-scaled estimates,
-    * `maxGramDocsObserved` is a sample LOWER BOUND, and in the capped
-    * regime `estPairsCapped`/`pairRetention` are reported as
-    * not-estimable sentinels (-1 / NaN): the ≤cap pair mass sits below
-    * sample resolution at S ≫ cap, and a plausible-looking wrong number
-    * is worse than an honest sentinel — see [[sharedNgramPairsAuto]].
-    */
-  case class SpanDispatch(regime: String, nGramRows: Long, estPairs: Long,
-                          estPairsCapped: Long, maxGramDocsObserved: Long,
-                          pairRetention: Double, cap: Int,
-                          probeMode: String, pairs: DataFrame)
 
   /** Size-aware shared-span dispatcher (the minhashLshAuto pattern on
     * the window-posting distribution), two-phase since r14:
     *
-    * Phase 1 — SAMPLED pre-probe: docs with `md5(id) mod S == 0`
-    * (S = `probeSampleMod`) feed one streaming window-frequency
-    * aggregate — no checkpoint, 1/S of the shingle CPU. When the
-    * S-scaled pairs/row estimate clears the routing threshold by the
-    * ambiguity band on an adequate sample, route immediately: the exact
-    * regime builds CHECKPOINT-FREE (its two self-join scans share one
-    * exchange — the r13 sf100 run paid 569 s materializing a gram
-    * checkpoint the exact route never read), the capped regime keeps
-    * the checkpoint (keep-aggregate + both join sides = three
-    * consumers).
+    * Phase 1 — SAMPLED pre-probe ([[HotKeys.sampled]], S =
+    * `probeSampleMod`): one streaming window-frequency aggregate over the
+    * sampled docs — no checkpoint, 1/S of the shingle CPU. A clear
+    * decision routes immediately: the exact regime builds
+    * CHECKPOINT-FREE (its two self-join scans share one exchange — the
+    * r13 sf100 run paid 569 s materializing a gram checkpoint the exact
+    * route never read), the capped regime keeps the checkpoint
+    * (keep-aggregate + both join sides = three consumers). The OUTPUT
+    * pairs do not depend on the probe: capGrams gates on FULL window
+    * counts regardless.
     *
     * Phase 2 — exact probe (fallback; also `probeSampleMod <= 1`): the
     * r12 behavior verbatim — gram frame checkpoints lazily, ONE
-    * map-side-combined probe (groupBy window count → Σ C(k,2), its
-    * ≤cap restriction, max k, total rows) rides on it. Small corpora
+    * map-side-combined [[HotKeys.mass]] probe rides on it. Small corpora
     * (sample under [[MinSampledGramRows]]) and boundary ratios always
     * land here, so fixtures and near-threshold inputs keep exact stats
     * and unchanged routing. No row-count floor: unlike the band frame
     * (`bands` rows/doc) the gram frame's worst case is not bounded by
-    * its row count alone.
+    * its row count alone. See [[Dispatch]] for the reported statistics.
     */
   def sharedNgramPairsAuto(df: DataFrame, textCol: String, idCol: String,
                            n: Int = 8,
                            cappedGramDocs: Int = DefaultCappedGramDocs,
                            maxPairsPerGramRow: Long = DefaultMaxPairsPerGramRow,
-                           probeSampleMod: Int = DefaultSpanProbeSampleMod,
+                           probeSampleMod: Int = HotKeys.ProbeSampleMod,
                            minSampledGramRows: Long = MinSampledGramRows)
-      : SpanDispatch = {
-    // Phase 1 — sampled streaming pre-probe (no checkpoint, 1/S of the
-    // shingling): route here when the decision is clear; fall through to
-    // the exact probe when the sample is thin or the ratio sits inside
-    // the ambiguity band. Deciding from the sample keeps the probe's
-    // cost at ~1/S of the corpus scan INCLUDING shingle CPU — the r13
-    // sf100 measurement showed the checkpointed probe's 569 s wall was
-    // 87% of the span total while the routed plan (exact regime) never
-    // reads the checkpoint it paid for.
-    if (probeSampleMod > 1) {
-      val s = probeSampleMod.toLong
-      val sampled = df.filter(
-        pmod(Pipeline.md5Hash60(col(idCol)), lit(s)) === 0L)
-      val half = col("k").cast("double") * (col("k") - 1).cast("double") / 2
-      // no k_s<=cap sum here: the ≤cap mass is below sample resolution
-      // at S ≫ cap (see the capped branch), so only the resolvable
-      // statistics are aggregated
-      val st = gramFrame(sampled, textCol, idCol, n)
-        .groupBy("g").agg(count(lit(1)).as("k"))
-        .agg(sum(half).as("cand"),
-          max(col("k")).as("max_k"), sum(col("k")).as("gram_rows"))
-        .collect()(0)
-      def lngS(i: Int): Long = if (st.isNullAt(i)) 0L else st.getLong(i)
-      def dblS(i: Int): Double = if (st.isNullAt(i)) 0.0 else st.getDouble(i)
-      val (candS, maxKS, rowsS) = (dblS(0), lngS(1), lngS(2))
-      // estimated pairs per FULL gram row = (candS·S²)/(rowsS·S)
-      val ratio = if (rowsS > 0) candS * s / rowsS else 0.0
-      val thr = maxPairsPerGramRow.toDouble
-      if (rowsS >= minSampledGramRows && ratio <= thr / SpanProbeAmbiguityBand) {
-        // clear EXACT: build checkpoint-free — the exact self-join's two
-        // gram scans share one exchange, so nothing is materialized
-        // exact regime applies no cap, so the capped mass IS the mass
-        // (the sampled k_s<=cap sum would be the biased quantity the
-        // capped branch refuses to report — never surface it)
-        return SpanDispatch(regime = "exact",
-          nGramRows = rowsS * s, estPairs = (candS * s * s).toLong,
-          estPairsCapped = (candS * s * s).toLong,
-          maxGramDocsObserved = maxKS, pairRetention = 1.0,
-          cap = Int.MaxValue, probeMode = "sampled",
-          pairs = gramSelfJoin(gramFrame(df, textCol, idCol, n)))
-      }
-      if (rowsS >= minSampledGramRows && ratio >= thr * SpanProbeAmbiguityBand) {
-        // clear CAPPED: the gate's keep-aggregate + both join sides give
-        // the gram frame three consumers — checkpoint it as before.
-        // The ≤cap pair mass is NOT estimable from this sample: with
-        // S ≫ cap a window of k ≤ cap docs almost never draws 2 sampled
-        // members (candCappedS ≈ 0, biased low) while a k ≫ cap window
-        // can pass the k_s ≤ cap test (biased high) — so the capped
-        // diagnostics are reported as not-estimable sentinels rather
-        // than plausible-looking wrong numbers. The OUTPUT pairs are
-        // unaffected: capGrams gates on FULL window counts regardless.
+      : Dispatch =
+    HotKeys.sampled(df, idCol, probeSampleMod, minSampledGramRows, 1,
+        maxPairsPerGramRow, Seq("g"))(gramFrame(_, textCol, idCol, n))
+      .map { s =>
+        val grams = gramFrame(df, textCol, idCol, n)
+        Dispatch.fromSample(s, cappedGramDocs, gramSelfJoin(
+          if (s.exact) grams
+          else capGrams(grams.localCheckpoint(false), cappedGramDocs)))
+      }.getOrElse {
         val grams = gramFrame(df, textCol, idCol, n).localCheckpoint(false)
-        return SpanDispatch(regime = "capped",
-          nGramRows = rowsS * s, estPairs = (candS * s * s).toLong,
-          estPairsCapped = -1L,
-          maxGramDocsObserved = maxKS,
-          pairRetention = Double.NaN,
-          cap = cappedGramDocs, probeMode = "sampled",
-          pairs = gramSelfJoin(capGrams(grams, cappedGramDocs)))
+        val m = HotKeys.mass(grams, Seq("g"), cappedGramDocs)
+        val exact = m.pairs <= maxPairsPerGramRow.toDouble * math.max(m.rows, 1L)
+        Dispatch.fromMass(exact, m.rows, m, cappedGramDocs, gramSelfJoin(
+          if (exact) grams else capGrams(grams, cappedGramDocs)))
       }
-    }
-    val grams = gramFrame(df, textCol, idCol, n).localCheckpoint(false)
-    // double pair-mass sums, as in probeRoute: the Long form wraps on
-    // exactly the degenerate input this gate exists to catch
-    val half = col("k").cast("double") * (col("k") - 1).cast("double") / 2
-    val st = grams.groupBy("g").agg(count(lit(1)).as("k"))
-      .agg(sum(half).as("cand"),
-        sum(when(col("k") <= cappedGramDocs, half).otherwise(lit(0.0d)))
-          .as("cand_capped"),
-        max(col("k")).as("max_k"), sum(col("k")).as("gram_rows"))
-      .collect()(0)
-    def lng(i: Int): Long = if (st.isNullAt(i)) 0L else st.getLong(i)
-    def dbl(i: Int): Double = if (st.isNullAt(i)) 0.0 else st.getDouble(i)
-    val (candD, candCappedD, maxK, gramRows) = (dbl(0), dbl(1), lng(2), lng(3))
-    val (cand, candCapped) = (candD.toLong, candCappedD.toLong)
-    val exact = candD <= maxPairsPerGramRow.toDouble * math.max(gramRows, 1L)
-    SpanDispatch(
-      regime = if (exact) "exact" else "capped",
-      nGramRows = gramRows, estPairs = cand,
-      // routed-plan pair mass (see SpanDispatch): the exact regime
-      // applies no cap, so reporting the ≤cap-restricted sum here would
-      // give the same field a different meaning than the sampled route
-      estPairsCapped = if (exact) cand else candCapped,
-      maxGramDocsObserved = maxK,
-      pairRetention =
-        if (exact) 1.0 else candCapped.toDouble / math.max(cand, 1L),
-      cap = if (exact) Int.MaxValue else cappedGramDocs,
-      probeMode = "exact",
-      pairs = gramSelfJoin(
-        if (exact) grams else capGrams(grams, cappedGramDocs)))
-  }
 
   /** Incremental shared-span filter: drop incoming docs sharing ANY
     * verbatim n-token window with an already-kept base doc — the

@@ -85,7 +85,7 @@ object Graph {
                vecCol: String = "embedding"): DataFrame =
     if (maxCellVecs == AutoCellVecs)
       knnGraphAuto(spark, indexPath, k, nProbe, idCol = idCol,
-        vecCol = vecCol).edges
+        vecCol = vecCol).pairs
     else
       symmetrize(directedIvfKnn(spark, indexPath, k, nProbe, maxCellVecs,
         idCol, vecCol))
@@ -101,51 +101,26 @@ object Graph {
     */
   val DefaultMaxCellVecs: Int = 4096
 
-  /** One dispatched kNN-graph build: the regime the probe chose and why,
-    * plus the symmetrized edges. `candidateRetention` is the capped
-    * fraction of within-cell candidate pairs still scored (1.0 exact) —
-    * for graphs a PROXY, not a bound: a sub-bucket's top-k may promote
-    * farther neighbors rather than drop edges.
-    */
-  case class KnnGraphDispatch(regime: String, nVecs: Long, nCells: Long,
-                              maxCellObserved: Long, estPairs: Long,
-                              estPairsCapped: Long,
-                              candidateRetention: Double, cap: Int,
-                              edges: DataFrame)
-
-  /** Size-aware kNN-graph dispatcher: ONE single-row aggregate over the
-    * stored cell histogram (counts, pair mass in overflow-safe double —
-    * the r12 probe rule) routes exact vs sub-bucketed. See [[knnGraph]]
-    * for the contract.
+  /** Size-aware kNN-graph dispatcher: ONE [[HotKeys.mass]] aggregate
+    * over the stored cell histogram routes exact vs sub-bucketed. See
+    * [[knnGraph]] for the contract and [[Dispatch]] for the reported
+    * statistics (`pairs` = the symmetrized edges).
     */
   def knnGraphAuto(spark: org.apache.spark.sql.SparkSession,
                    indexPath: String, k: Int, nProbe: Int = 1,
                    cappedCellVecs: Int = DefaultMaxCellVecs,
                    idCol: String = "vec_id",
-                   vecCol: String = "embedding"): KnnGraphDispatch = {
+                   vecCol: String = "embedding"): Dispatch = {
     val cells = spark.read.parquet(Similarity.ivfCellsPath(spark, indexPath))
-    val half = col("__ck").cast("double") * (col("__ck") - 1).cast("double") / 2
-    val s = ceil(col("__ck") / cappedCellVecs.toDouble).cast("double")
-    val sub = col("__ck").cast("double") / s
-    val st = cells.groupBy("cell").agg(count(lit(1)).as("__ck"))
-      .agg(sum(half).as("est"),
-        sum(when(col("__ck") <= cappedCellVecs, half)
-          .otherwise(s * sub * (sub - lit(1.0)) / 2)).as("est_capped"),
-        max("__ck").as("max_ck"), sum("__ck").as("n"),
-        count(lit(1)).as("n_cells"))
-      .collect()(0)
-    def dbl(i: Int): Double = if (st.isNullAt(i)) 0.0 else st.getDouble(i)
-    def lng(i: Int): Long = if (st.isNullAt(i)) 0L else st.getLong(i)
-    val (est, estCapped, maxCk, n, nCells) =
-      (dbl(0), dbl(1), lng(2), lng(3), lng(4))
-    val exact = maxCk <= cappedCellVecs
-    KnnGraphDispatch(
-      regime = if (exact) "exact" else "capped",
-      nVecs = n, nCells = nCells, maxCellObserved = maxCk,
-      estPairs = est.toLong, estPairsCapped = estCapped.toLong,
-      candidateRetention = if (exact) 1.0 else estCapped / math.max(est, 1.0),
-      cap = if (exact) Int.MaxValue else cappedCellVecs,
-      edges = symmetrize(directedIvfKnn(spark, indexPath, k, nProbe,
+    // an over-cap cell splits into s = ceil(k/cap) sub-buckets of k/s
+    // vectors: s·C(k/s, 2) pairs are still scored
+    val s = ceil(HotKeys.k / cappedCellVecs.toDouble).cast("double")
+    val sub = HotKeys.k.cast("double") / s
+    val m = HotKeys.mass(cells, Seq("cell"), cappedCellVecs,
+      overCap = s * sub * (sub - lit(1.0)) / 2)
+    val exact = m.maxKey <= cappedCellVecs
+    Dispatch.fromMass(exact, m.rows, m, cappedCellVecs,
+      symmetrize(directedIvfKnn(spark, indexPath, k, nProbe,
         if (exact) Int.MaxValue else cappedCellVecs, idCol, vecCol)))
   }
 

@@ -510,6 +510,10 @@ class SliceFixedLineSpec extends AnyFunSuite {
     val fused = FlfParse.parse(df, schema).collect().map(_.toSeq)
     val composed = FlfParse.parseComposed(df, schema).collect().map(_.toSeq)
     assert(fused.toSeq == composed.toSeq)
+    val quarantined = FlfParse.parseQuarantine(df, schema)
+      .select(schema.columns.map(c => org.apache.spark.sql.functions.col(c.name)): _*)
+      .collect().map(_.toSeq)
+    assert(quarantined.toSeq == composed.toSeq)
   }
 
   test("fused slicer == composed path on fixture A + edge rows") {

@@ -905,17 +905,17 @@ class OpsSpec extends AnyFunSuite {
       (3L, "yet another unrelated document text body"))
     val d = Dedup.minhashLshAuto(near.toDF("doc_id", "text"), "text", "doc_id")
     assert(d.regime == "exact")
-    assert(d.nDocs == 4 && d.cap == Int.MaxValue && d.candidateRetention == 1.0)
+    assert(d.nInput == 4 && d.cap == Int.MaxValue && d.retention == 1.0)
     // 4 docs sit under the probe floor: exact is certain by construction,
     // so the dispatcher must NOT have paid the bucket-distribution probe
-    assert(!d.probed && d.estCandidates == -1L)
+    assert(!d.probed && d.estPairs == -1L)
     val got = d.pairs.select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(got == Set((0L, 1L)))
     // with the floor disabled the probe runs, measures the linear
     // candidate mass, and still routes exact — identical pairs
     val dp = Dedup.minhashLshAuto(near.toDF("doc_id", "text"), "text",
       "doc_id", probeFloorDocs = 0)
-    assert(dp.probed && dp.regime == "exact" && dp.estCandidates >= 0)
+    assert(dp.probed && dp.regime == "exact" && dp.estPairs >= 0)
     assert(dp.pairs.select("a_id", "b_id").as[(Long, Long)].collect().toSet == got)
     // the dispatched exact result == the forced-exact result
     val forced = Dedup.minhashLsh(near.toDF("doc_id", "text"), "text", "doc_id",
@@ -938,10 +938,10 @@ class OpsSpec extends AnyFunSuite {
     val d = Dedup.minhashLshAuto(df, "text", "doc_id", cappedBucket = 10,
       probeFloorDocs = 0)
     assert(d.regime == "capped" && d.probed)
-    assert(d.nDocs == 82 && d.cap == 10)
-    assert(d.maxBucketObserved == 80)
+    assert(d.nInput == 82 && d.cap == 10)
+    assert(d.maxKey == 80)
     // band-level retention: only the pair's buckets (k=2) survive the cap
-    assert(d.candidateRetention > 0.0 && d.candidateRetention < 0.01)
+    assert(d.retention > 0.0 && d.retention < 0.01)
     val got = d.pairs.select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(got == Set((100L, 101L)))
     // default-arg minhashLsh on this sub-floor corpus routes EXACT without
@@ -969,7 +969,7 @@ class OpsSpec extends AnyFunSuite {
         (101L, "same words repeated here exactly verbatim now"))
     val de = auto(distinctDocs.toDF("doc_id", "text"))
     assert(de.probeMode == "sampled" && de.regime == "exact" &&
-      de.cap == Int.MaxValue && de.candidateRetention == 1.0)
+      de.cap == Int.MaxValue && de.retention == 1.0)
     val exactForced = Dedup.minhashLsh(distinctDocs.toDF("doc_id", "text"),
       "text", "doc_id", maxBucket = Int.MaxValue)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
@@ -985,8 +985,8 @@ class OpsSpec extends AnyFunSuite {
     val dc = auto(hot.toDF("doc_id", "text"))
     assert(dc.probeMode == "sampled" && dc.regime == "capped" &&
       dc.cap == Dedup.DefaultCappedBucket)
-    assert(dc.estCandidatesCapped == -1L && dc.candidateRetention.isNaN)
-    assert(dc.maxBucketObserved > 0) // sample lower bound on the family
+    assert(dc.estPairsCapped == -1L && dc.retention.isNaN)
+    assert(dc.maxKey > 0) // sample lower bound on the family
     assert(dc.pairs.select("a_id", "b_id").as[(Long, Long)].collect().toSet
       == Set((10000L, 10001L)))
     // ambiguous: the 80-doc family's ratio (~115/doc) sits inside the
@@ -2889,8 +2889,8 @@ class AdviceRegressionSpec extends AnyFunSuite {
     val d = Dedup.sharedNgramPairsAuto(df, "text", "doc_id", n = 4,
       cappedGramDocs = 10)
     assert(d.regime == "capped" && d.cap == 10)
-    assert(d.maxGramDocsObserved == 60) // the boilerplate window postings
-    assert(d.pairRetention < 0.01) // C(60,2)-class mass gated away
+    assert(d.maxKey == 60) // the boilerplate window postings
+    assert(d.retention < 0.01) // C(60,2)-class mass gated away
     val got = d.pairs.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == Map((100L, 101L) -> 5L)) // all 5 windows of the dup pair
@@ -2901,7 +2901,7 @@ class AdviceRegressionSpec extends AnyFunSuite {
       (i, s"fam${f}a fam${f}b fam${f}c fam${f}d fam${f}e fam${f}f")
     }.toDF("doc_id", "text")
     val h = Dedup.sharedNgramPairsAuto(honest, "text", "doc_id", n = 4)
-    assert(h.regime == "exact" && h.pairRetention == 1.0)
+    assert(h.regime == "exact" && h.retention == 1.0)
     val hGot = h.pairs.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toSet
     val hExact = Dedup.sharedNgramPairs(honest, "text", "doc_id", n = 4,
@@ -2951,7 +2951,7 @@ class AdviceRegressionSpec extends AnyFunSuite {
     val nb = Dedup.sharedNgramPairsAuto(near, "text", "doc_id", n = 4,
       cappedGramDocs = 10, probeSampleMod = 2, minSampledGramRows = 8)
     assert(nb.probeMode == "exact" && nb.regime == "capped")
-    assert(nb.maxGramDocsObserved == 60)
+    assert(nb.maxKey == 60)
     // thin sample (default 64k-row floor) → exact-probe fallback: the
     // small-fixture contract every existing spec relies on
     val fb = Dedup.sharedNgramPairsAuto(near, "text", "doc_id", n = 4,
@@ -3231,6 +3231,36 @@ class AdviceRegressionSpec extends AnyFunSuite {
     // sanity on the truth side: 60 vertices × 3 directed picks,
     // symmetrized-distinct can at most halve — never fewer than 90 edges
     assert(gBrute.size >= 60 * 3 / 2)
+  }
+
+  test("knnGraphAuto: a hot cell over the cap routes capped; the default " +
+    "cap routes exact with the forced-exact edges") {
+    // 48 vectors in one tight cone + 12 scattered: the cone is one hot cell
+    val rnd = new scala.util.Random(29)
+    val cone = (0L until 48L).map(i =>
+      (i, Array.tabulate(8)(j => (if (j == 0) 1f else 0f) + rnd.nextFloat() * 0.05f)))
+    val rest = (48L until 60L).map(i =>
+      (i, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
+    val df = (cone ++ rest).toDF("vec_id", "embedding")
+    val path = java.nio.file.Files.createTempDirectory("knngraphauto").toString
+    Similarity.writeIvfIndex(df, path, k = 4, iters = 2, dim = 8)
+    val hot = spark.read.parquet(Similarity.ivfCellsPath(spark, path))
+      .groupBy("cell").count().agg(max("count")).head().getLong(0)
+    assert(hot >= 48)
+    def edges(g: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      g.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val cap = (hot / 3).toInt
+    val c = Graph.knnGraphAuto(spark, path, k = 3, cappedCellVecs = cap)
+    assert(c.regime == "capped" && c.probeMode == "exact" && c.cap == cap)
+    assert(c.nInput == 60 && c.maxKey == hot)
+    assert(c.retention > 0.0 && c.retention < 1.0)
+    assert(edges(c.pairs) == edges(Graph.knnGraph(spark, path, k = 3,
+      maxCellVecs = cap)))
+    val e = Graph.knnGraphAuto(spark, path, k = 3)
+    assert(e.regime == "exact" && e.retention == 1.0 && e.cap == Int.MaxValue)
+    assert(e.estPairsCapped == e.estPairs && e.maxKey == hot)
+    assert(edges(e.pairs) == edges(Graph.knnGraph(spark, path, k = 3,
+      maxCellVecs = Int.MaxValue)))
   }
 
   test("ivfIndexAppend: search after append is bit-identical to assigning the full corpus") {
