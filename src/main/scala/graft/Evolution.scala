@@ -45,8 +45,9 @@ object Evolution {
     FlfParse.parse(lines, schema)
 
   /** `evolution convert`: fixed-length file → columnar target. The plan is
-    * scan text → project(substring/trim/cast × N) → write: narrow,
-    * shuffle-free, whole-stage-codegen'd (SURVEY.md §4).
+    * scan text → `SliceFixedLine` (every trimmed cell in one byte walk of
+    * the line) → cast each cell once → write: narrow, shuffle-free,
+    * whole-stage-codegen'd (SURVEY.md §4).
     *
     * Returns the conversion counters the reference logs per chunk
     * (rows/bytes processed, converter.rs:226-232), observed Spark-natively

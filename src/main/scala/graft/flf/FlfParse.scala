@@ -93,18 +93,20 @@ object FlfParse {
   /** Strict cast + null policy from an already-trimmed cell (reference:
     * builder/datatype.rs:66-86 + column.rs:123-131): parse failure on a
     * nullable column → NULL; on a non-nullable column the first bad row
-    * aborts the whole job (N2 strict abort).
+    * aborts the whole job (N2 strict abort). The abort is the `coalesce`
+    * fallback so that each cell is parsed once: generated code for
+    * `when(parsed.isNull, …).otherwise(parsed)` runs the cast twice, in
+    * the condition and in the value.
     */
   def fromTrimmed(trimmed: Column, c: FixedColumn): Column = {
     val parsed = castStrict(trimmed, c.dtype)
     val checked =
       if (c.isNullable) parsed
       else
-        when(parsed.isNull,
+        coalesce(parsed,
           raise_error(concat(
             lit(s"strict-mode abort: non-nullable column '${c.name}' failed to parse value '"),
-            trimmed, lit("'"))))
-          .otherwise(parsed)
+            trimmed, lit("'"))).cast(c.dtype.sparkType))
     checked.as(c.name)
   }
 

@@ -188,6 +188,30 @@ class FlfParseSpec extends AnyFunSuite {
     val got = FlfParse.parse(Seq("99991234999").toDF("value"), schema).collect().head
     assert(got.getInt(0) == 1234)
   }
+
+  test("strict read parses each numeric cell once: one try_cast per numeric column") {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
+    val numeric = Seq(FlfType.Int16T, FlfType.Int32T, FlfType.Int64T,
+      FlfType.Float16T, FlfType.Float32T, FlfType.Float64T)
+    // every numeric dtype both nullable and non-nullable, plus the two
+    // non-numeric kinds (no try_cast: boolean is a `when` chain, a
+    // string-to-string cast is removed)
+    val cols = (numeric.map(t => (t, true)) ++ numeric.map(t => (t, false)) ++
+      Seq((FlfType.BooleanT, false), (FlfType.Utf8T, false))).zipWithIndex.map {
+      case ((t, nullable), i) =>
+        FixedColumn(s"c$i", i * 4, 4, t, Alignment.Right, ' ', isNullable = nullable)
+    }
+    val schema = FixedSchema(name = "k", version = 1, columns = cols)
+    val dir = java.nio.file.Files.createTempDirectory("flfcast")
+    java.nio.file.Files.writeString(dir.resolve("data.flf"),
+      (Seq.fill(12)("   1") ++ Seq("true", "abcd")).mkString + "\n")
+    val df = FlfParse.read(spark, dir.toString, schema)
+    val tryCasts = df.queryExecution.optimizedPlan.expressions.map(_.collect {
+      case c: Cast if c.evalMode == EvalMode.TRY => c
+    }.size).sum
+    assert(tryCasts == 12)
+    assert(df.collect().head.getShort(6) == 1.toShort)
+  }
 }
 
 class ConvertMetricsSpec extends AnyFunSuite {
@@ -498,8 +522,8 @@ class FlfFormatSpec extends AnyFunSuite {
 }
 
 /** SliceFixedLine (fused one-pass cell extraction) must agree with the
-  * composed substring/trim path on every alignment, pad, and multi-byte
-  * edge — including mocked data for every dtype.
+  * composed substring/trim path on every alignment, pad, multi-byte and
+  * invalid UTF-8 edge — including mocked data for every dtype.
   */
 class SliceFixedLineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -541,6 +565,83 @@ class SliceFixedLineSpec extends AnyFunSuite {
     val lines = (1 to 400).map(_ =>
       (0 until rnd.nextInt(16)).map(_ => pool(rnd.nextInt(pool.length))).mkString)
     check(schema, lines)
+  }
+
+  /** Every column of `df`, as hex of its binary cast, in row order. */
+  private def hexRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    df.select(df.columns.map(c =>
+        org.apache.spark.sql.functions.hex(org.apache.spark.sql.functions.col(c).cast("binary"))): _*)
+      .collect().map(r => r.toSeq.map(_.asInstanceOf[String])).toSeq
+
+  /** Lines of raw bytes, cast to string with no UTF-8 validation. */
+  private def byteLines(lines: Seq[Array[Byte]]): org.apache.spark.sql.DataFrame =
+    lines.toDF("b").select(org.apache.spark.sql.functions.col("b").cast("string").as("value"))
+
+  test("fused slicer == composed path byte for byte on random invalid UTF-8") {
+    val schema = FixedSchema(name = "r", version = 1, columns = Seq(
+      FixedColumn("a", 0, 5, FlfType.Utf8T, Alignment.Right, '0', isNullable = true),
+      FixedColumn("b", 5, 6, FlfType.Utf8T, Alignment.Left, '*', isNullable = true),
+      // starts before b ends: the cursor restarts from the line's start
+      FixedColumn("c", 2, 7, FlfType.Utf8T, Alignment.Center, ' ', isNullable = true),
+      FixedColumn("d", 9, 6, FlfType.Utf8T, Alignment.Center, '\u00e9', isNullable = true)))
+    val rnd = new scala.util.Random(4)
+    // ASCII pads and letters, 'é' (C3 A9) whole, lone continuation bytes
+    // (A9 alone is a substring of the 'é' pad), 2/3/4-byte leads, 0xFF
+    val pool: Array[Array[Byte]] = Array(
+      Array(0x30), Array(0x2A), Array(0x20), Array(0x61), Array(0xC3, 0xA9),
+      Array(0x80), Array(0xA9), Array(0xBF), Array(0xC3), Array(0xE2), Array(0xF0),
+      Array(0xFF)).map(_.map(_.toByte))
+    val lines = (1 to 5000).map { _ =>
+      // the ASCII tail keeps every lead's sequence inside the line
+      (Seq.fill(rnd.nextInt(24))(pool(rnd.nextInt(pool.length))).flatten ++ "zzz".getBytes).toArray
+    }
+    val df = byteLines(lines)
+    val composed = hexRows(FlfParse.parseComposed(df, schema))
+    assert(composed.exists(_.exists(_.contains("A9"))))
+    assert(hexRows(FlfParse.parse(df, schema)) == composed)
+    assert(hexRows(FlfParse.parseQuarantine(df, schema)
+      .select(schema.columns.map(c => org.apache.spark.sql.functions.col(c.name)): _*)) == composed)
+  }
+
+  test("a line ending in a bare lead byte ends its last cell at the line's last byte") {
+    // Spark's `substring` reads past the string when the last character's
+    // lead byte promises more bytes than the line has (the composed cell
+    // gains bytes that are not in the line), so parseComposed is no
+    // oracle here: the expected cells are the line's own bytes.
+    val schema = FixedSchema(name = "t", version = 1, columns = Seq(
+      FixedColumn("l", 0, 5, FlfType.Utf8T, Alignment.Left, ' ', isNullable = true),
+      FixedColumn("r", 1, 5, FlfType.Utf8T, Alignment.Right, ' ', isNullable = true),
+      FixedColumn("e", 3, 2, FlfType.Utf8T, Alignment.Center, ' ', isNullable = true)))
+    val df = byteLines(Seq(Array(0x41, 0x42, 0xE2).map(_.toByte)))
+    assert(hexRows(FlfParse.parse(df, schema)) == Seq(Seq("4142E2", "42E2", "")))
+    assert(hexRows(FlfParse.parseQuarantine(df, schema).drop("value", "_quarantined")) ==
+      Seq(Seq("4142E2", "42E2", "")))
+  }
+
+  test("cells viewing the scan's reused row buffer survive collect and cache") {
+    val schema = FixedSchema(name = "v", version = 1, columns = Seq(
+      FixedColumn("id", 0, 6, FlfType.Int32T, Alignment.Right, '0', isNullable = false),
+      FixedColumn("name", 6, 10, FlfType.Utf8T, Alignment.Left, ' ', isNullable = false),
+      FixedColumn("city", 16, 8, FlfType.Utf8T, Alignment.Center, '*', isNullable = true)))
+    val names = Array("Åsa", "Bo", "日本語", "Überläufer", "x", "")
+    val dir = java.nio.file.Files.createTempDirectory("flfview")
+    val lines = (0 until 3000).map { i =>
+      f"${i + 1}%06d" + f"${names(i % names.length)}%-10s" +
+        ("*" + names((i / 7) % names.length).take(6)).padTo(8, '*')
+    }
+    java.nio.file.Files.writeString(dir.resolve("data.flf"), lines.mkString("\n") + "\n")
+    val path = dir.toString
+    val expected = FlfParse.parseComposed(spark.read.text(path), schema)
+      .collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Int])
+    assert(expected.map(_(1)).distinct.size == names.size)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Int])
+    assert(rows(FlfParse.read(spark, path, schema)) == expected)
+    val cached = FlfParse.read(spark, path, schema).cache()
+    try {
+      assert(cached.count() == lines.size)
+      assert(rows(cached) == expected)
+    } finally cached.unpersist()
   }
 
   test("fused slicer == composed path on mocked data for a wide mixed schema") {
