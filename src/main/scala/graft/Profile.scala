@@ -62,6 +62,11 @@ object Profile {
     spark.sparkContext.setLogLevel("WARN")
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)
+    // listener events drain asynchronously: settle the bus before each
+    // reset and before reading, so no run's late events land in another
+    // run's counters
+    def settle(): Unit =
+      org.apache.spark.sql.graftbridge.GraftListener.waitUntilListenerBusEmpty(spark.sparkContext)
     val names = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSeq)
       .getOrElse(args.toSeq)
     val dir = new java.io.File(planDir)
@@ -87,6 +92,7 @@ object Profile {
       for (_ <- 1 to 3) {
         spark.catalog.clearCache()
         System.gc()
+        settle()
         acc.reset()
         spark.sparkContext.setJobDescription(name)
         val t0 = System.nanoTime()
@@ -94,8 +100,7 @@ object Profile {
           System.err.println(s"[profile] $name FAILED: $t") }
         wall = math.min(wall, (System.nanoTime() - t0) / 1e9)
       }
-      // listener events drain asynchronously; settle before reading
-      Thread.sleep(300)
+      settle()
       if (sys.env.contains("SPARK_GRAFT_PROFILE_STAGES")) {
         import scala.jdk.CollectionConverters._
         System.err.println(s"  == $name top stages by task time ==")

@@ -183,11 +183,9 @@ object Queries {
     // stage the formatted line once: the corrupt branch references it
     // three times, and a staged projection guarantees the 30-column
     // pad/concat evaluates once per row regardless of subexpression
-    // elimination in the CASE. fanOutScan (r16): the fused
-    // format+corrupt+parse kernel is the whole cost of this query and
-    // ran on the scan's single split — rebalance first (no-op once the
-    // input has real splits; see Pipeline.fanOutScan)
-    val lines = Pipeline.fanOutScan(tbl(s, dir, "lineitem"),
+    // elimination in the CASE. The fused format+corrupt+parse kernel is
+    // the whole cost of this query: spread the scan first (Width.spread)
+    val lines = Width.spread(tbl(s, dir, "lineitem"),
         xxhash64(col("l_orderkey"), col("l_linenumber")))
       .select(col("l_orderkey"), flfLine().as("l"))
       .select(when(col("l_orderkey") % 97 === 0,
@@ -209,10 +207,10 @@ object Queries {
     // file-stream source assigns whole files to tasks, so the r16
     // one-file landing parsed its first micro-batch on ONE task no
     // matter how many cores waited (measured 2.9 s of one-task parse).
-    // fanOutScan spreads the single-split lineitem scan to session
-    // width before the write — same rows, 32 files, 32-task parse.
+    // Width.spread widens the single-split lineitem scan to session width
+    // before the write — same rows, one file per task, parallel parse.
     val landing = cachedLanding(s"flf:$dir") { d =>
-      Pipeline.fanOutScan(tbl(s, dir, "lineitem"),
+      Width.spread(tbl(s, dir, "lineitem"),
           xxhash64(col("l_orderkey"), col("l_linenumber")))
         .select(flfLine().as("value"))
         .write.mode("overwrite").text(d)
@@ -220,7 +218,7 @@ object Queries {
     val schema = FixedSchema(name = "li_stream", version = 1, columns = flfCols)
     val qname = "graft_stream_flf"
     // one trigger covers the whole landing (r17): the landing is written
-    // ~defaultParallelism files wide (fanOutScan above), and the default
+    // session-width files wide (Width.spread above), and the default
     // 16-files/trigger split it into TWO micro-batches at 32 cores —
     // each batch pays its own offset/commit-log fsyncs and sink round-
     // trip for zero added coverage (the incremental-parse contract is
@@ -253,7 +251,7 @@ object Queries {
        |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin.replace("\n", " ")) { (s, dir) =>
     // multi-file landing, as in stream_flf_ingest (r17)
     val landing = cachedLanding(s"flfq:$dir") { d =>
-      Pipeline.fanOutScan(tbl(s, dir, "lineitem"),
+      Width.spread(tbl(s, dir, "lineitem"),
           xxhash64(col("l_orderkey"), col("l_linenumber")))
         .select(when(col("l_orderkey") % 97 === 0,
             concat(substring(flfLine(), 1, 20), lit("XXXXXX"),
@@ -2753,8 +2751,8 @@ object Queries {
     val emb = tbl(s, dir, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"))
-    val c = Similarity.spreadForScan(
-      emb.select(col("vec_id").as("n_id"), col("label").as("n_label")))
+    val c = Width.spread(
+      emb.select(col("vec_id").as("n_id"), col("label").as("n_label")), col("n_id"))
     val w = Window.partitionBy("q_id").orderBy("u", "n_id")
     c.join(broadcast(q), col("q_label") =!= col("n_label"))
       .select(col("q_id"), col("n_id"),

@@ -758,12 +758,9 @@ object Dedup {
     val m2 = 2L * p0.count()
     // loop-invariant hoist (the pageRank eDeg lesson, applied here r16):
     // every iteration joins the |2E| edge frame on b_id — pre-partition
-    // it on that key ONCE, size-adaptively (~500k rows/partition, the
-    // ProbeGraphScale rule, capped at the session's shuffle width), so
-    // iterations reshuffle only the label frame
-    val nShuffle = pairs.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val nPart = math.max(1, math.min(nShuffle, math.ceil(m2 / 500000.0).toInt))
+    // it on that key ONCE, sized by Width.forWork, so iterations
+    // reshuffle only the label frame
+    val nPart = Width.forWork(pairs.sparkSession, m2.toDouble, Width.RowsPerTask)
     val edges = p0
       .union(p0.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
       .repartition(nPart, col("b_id")).localCheckpoint(false)

@@ -71,7 +71,7 @@ object FuzzyJoin {
     // fan-out and would otherwise try to BROADCAST the exploded side.
     // Spread the scan first: the ~100x variant explode otherwise runs at
     // the input's split count.
-    val variants = Similarity.spreadForScan(p)
+    val variants = Width.spread(p, col(idCol))
       .select(col(idCol) +: blockCols.map(col) :+
         explode(HashColumns.deletionVariantHashes(col(nameCol), maxEdits))
           .as("__vh"): _*)
@@ -90,9 +90,7 @@ object FuzzyJoin {
       val l = if (stats.isNullAt(1)) 0.0 else stats.getDouble(1)
       stats.getLong(0) * (1 + l + l * (l - 1) / 2)
     }
-    val sessionParts =
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val joinParts = math.max(sessionParts,
+    val joinParts = math.max(Width.session(spark),
       math.ceil(nVariants / rowsPerBuildPartition.toDouble).toInt)
     val spread0 = variants.repartition(joinParts, col("h"))
     // the opt-in hot-bucket gate, phrased as a broadcast ANTI join on

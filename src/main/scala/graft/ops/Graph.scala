@@ -136,13 +136,11 @@ object Graph {
                              vecCol: String): DataFrame = {
     val cells = spark.read.parquet(Similarity.ivfCellsPath(spark, indexPath))
     if (maxCellVecs == Int.MaxValue) {
-      // spread the QUERY side across the shuffle width: the cell layout
-      // may sit in a handful of parquet files (a compacted small index
-      // is exactly that), and the scan's split count would cap the whole
-      // scoring stage's parallelism (the spreadForScan rule;
-      // measured 2.8× at sf1). The corpus side needs no spread — it is
-      // either broadcast or shuffled on the cell key anyway.
-      val q = Similarity.spreadForScan(cells)
+      // spread the QUERY side (Width.spread): a compacted small index
+      // sits in a handful of parquet files, and the scan's split count
+      // would cap the scoring stage. The corpus side needs no spread — it
+      // is either broadcast or shuffled on the cell key anyway.
+      val q = Width.spread(cells, col(idCol))
       if (nProbe <= 1)
         Similarity.ivfKnn(cells, q, k, cellCol = "cell", idCol, vecCol)
       else
@@ -160,12 +158,9 @@ object Graph {
               lit(1L)))))
       val c = Similarity.vecSide(keyed(cells), "n", idCol, vecCol,
         col("__cell2").as("cell"))
-      // spread the QUERY side here too (same scan rule as the exact
-      // branch): the capped regime targets exactly the largest/skewed
-      // indexes where a compacted cells layout would otherwise cap the
-      // scoring stage's parallelism at its file-split count. The corpus
-      // side is shuffled on the (cell, salt) key regardless.
-      val qSrc = Similarity.spreadForScan(cells)
+      // spread the QUERY side here too, as in the exact branch; the
+      // corpus side is shuffled on the (cell, salt) key regardless
+      val qSrc = Width.spread(cells, col(idCol))
       val qb =
         if (nProbe <= 1) keyed(qSrc)
         else keyed(qSrc.select(col(idCol), col(vecCol)).withColumn("cell",
@@ -327,16 +322,8 @@ object Graph {
     // and the co-partitioning match below would silently break — the
     // loop then re-shuffles the |E| frame every iteration (measured
     // bimodal 1.5 s vs 10 s/iter at 13.4M edges before pinning).
-    // SIZE-ADAPTIVE pin (r16, guide §2 "partition count scales with
-    // input"): ~500k edge rows per partition — the ProbeGraphScale r15
-    // rule (m/500k) — capped at the session's shuffle width. A constant
-    // width pin made every per-iteration join pay width×task-launch on
-    // graphs thousands of times smaller than a partition's capacity
-    // (measured 12-15 ms/task launch at local fixture scale).
-    val nShuffle = edges.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val nPart = math.max(1, math.min(nShuffle,
-      math.ceil(mEdges / 500000.0).toInt))
+    // Sized from |E| by Width.forWork (RowsPerTask).
+    val nPart = Width.forWork(edges.sparkSession, mEdges.toDouble, Width.RowsPerTask)
     val eDeg = e.join(deg, "src")
       .repartition(nPart, col("src")).localCheckpoint(false)
     val verts = deg.select(col("src").as("p"))
@@ -377,14 +364,11 @@ object Graph {
     val deg = e.groupBy("src").agg(count(lit(1)).as("d")).localCheckpoint(false)
     // same loop-invariant hoist as pageRank: degree pre-joined, edge
     // frame pre-partitioned on src once, count pinned against AQE
-    // coalescing (ProbeGraphScale, r15); pin SIZE-ADAPTIVE from |E| = Σd
-    // via the same single-row probe (r16 — see pageRank)
+    // coalescing; the pin is sized from |E| = Σd (Width.forWork) via the
+    // same single-row probe
     val st = deg.agg(sum("d").as("m")).collect()(0)
     val mEdges = if (st.isNullAt(0)) 0L else st.getLong(0)
-    val nShuffle = edges.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val nPart = math.max(1, math.min(nShuffle,
-      math.ceil(mEdges / 500000.0).toInt))
+    val nPart = Width.forWork(edges.sparkSession, mEdges.toDouble, Width.RowsPerTask)
     val eDeg = e.join(deg, "src")
       .repartition(nPart, col("src")).localCheckpoint(false)
     val verts = deg.select(col("src").as("p"))
@@ -628,8 +612,6 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, seeds: DataFrame,
                        iters: Int): DataFrame = {
-    val nShuffle = edges.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
     // the canonical edge list materializes ONCE (r16): the two union
     // arms below each read `edges`, so an un-truncated caller lineage
     // (a knn build) would execute twice; the count that sizes the
@@ -638,10 +620,9 @@ object Graph {
     val m2 = 2L * e0.count()
     // both directions of every edge, keyed on the VOTING endpoint —
     // explicit partition count so AQE coalescing cannot break the
-    // per-round co-partitioning (the pageRank eDeg lesson); pin
-    // SIZE-ADAPTIVE (r16, ~500k rows/partition, the ProbeGraphScale
-    // rule, capped at the session's shuffle width — see pageRank)
-    val nPart = math.max(1, math.min(nShuffle, math.ceil(m2 / 500000.0).toInt))
+    // per-round co-partitioning (the pageRank eDeg lesson), sized by
+    // Width.forWork
+    val nPart = Width.forWork(edges.sparkSession, m2.toDouble, Width.RowsPerTask)
     val nb = e0.select(col("pa").as("v"), col("pb").as("u"))
       .union(e0.select(col("pb").as("v"), col("pa").as("u")))
       .repartition(nPart, col("v")).localCheckpoint(false)

@@ -18,32 +18,39 @@ object HotKeys {
   /** One key histogram's pair statistics: `pairs` = Σ C(k,2); `pairsCapped`
     * = the same sum with each key over the cap counted as the caller's
     * `overCap` mass instead (0 unless the caller splits hot keys); `maxKey`
-    * = the hottest key's k; `rows` = Σ k.
+    * = the hottest key's k; `rows` = Σ k; `keys` = the number of keys.
     */
-  case class Mass(pairs: Double, pairsCapped: Double, maxKey: Long, rows: Long)
+  case class Mass(pairs: Double, pairsCapped: Double, maxKey: Long, rows: Long,
+                  keys: Long)
 
   /** The per-key row count inside [[mass]]'s aggregate, for `overCap`. */
   val k: Column = col("k")
 
-  /** ONE map-side-combined probe: `groupBy(keys).count`, then a single-row
-    * aggregate. Pair mass sums in DOUBLE: a hot key of k rows contributes
-    * k(k-1)/2, and at the corpus sizes this probe exists to defend against
-    * (k a linear fraction of 1e10+ rows) the Long form wraps silently and
-    * could route the most degenerate input EXACT (r12 review). Double is
-    * approximate above 2^53 — routing is an order-of-magnitude decision,
-    * and the reported estimates saturate at Long.MaxValue. An empty input
-    * reads as all zeros.
+  /** ONE map-side-combined probe: `groupBy(keys).count`, then a fold of the
+    * per-key statistics in each partition, reduced on the driver (one small
+    * record per partition; unlike a global aggregate there is no
+    * single-partition exchange, so the probe is the histogram's shuffle
+    * job plus one result job). Pair mass sums in DOUBLE: a hot key of k
+    * rows contributes k(k-1)/2, and at the corpus sizes this probe exists
+    * to defend against (k a linear fraction of 1e10+ rows) the Long form
+    * wraps silently and could route the most degenerate input EXACT (r12
+    * review). Double is approximate above 2^53 — routing is an
+    * order-of-magnitude decision, and the reported estimates saturate at
+    * Long.MaxValue. An empty input reads as all zeros.
     */
   def mass(rows: DataFrame, keys: Seq[String], cap: Int,
            overCap: Column = lit(0.0)): Mass = {
     val half = k.cast("double") * (k - 1).cast("double") / 2
-    val r = rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("k"))
-      .agg(coalesce(sum(half), lit(0.0)),
-        coalesce(sum(when(k <= cap, half).otherwise(overCap)), lit(0.0)),
-        coalesce(max(k), lit(0L)), coalesce(sum(k), lit(0L)))
-      .collect()(0)
-    Mass(r.getDouble(0), r.getDouble(1), r.getLong(2), r.getLong(3))
+    rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("k"))
+      .select(half, when(k <= cap, half).otherwise(overCap).cast("double"), k)
+      .rdd.aggregate(Mass(0.0, 0.0, 0L, 0L, 0L))((m, r) =>
+        plus(m, Mass(r.getDouble(0), r.getDouble(1), r.getLong(2), r.getLong(2), 1L)),
+        plus)
   }
+
+  private def plus(a: Mass, b: Mass): Mass =
+    Mass(a.pairs + b.pairs, a.pairsCapped + b.pairsCapped,
+      math.max(a.maxKey, b.maxKey), a.rows + b.rows, a.keys + b.keys)
 
   /** Document-sample modulus of the sampled pre-probe: docs with
     * `md5(id) mod S == 0` (deterministic, engine-reproducible) feed one

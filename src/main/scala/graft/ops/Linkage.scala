@@ -218,20 +218,13 @@ object Linkage {
                                passes: Seq[(Column, Column)],
                                caps: Seq[Long],
                                estPairs: Double = -1.0): DataFrame = {
-    val nShuffle = left.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    // SIZE the pin from the dispatcher's own pair estimate (r17, VERDICT
-    // r16 #2 — the Graph ~rows-per-partition rule): the downstream
-    // FS scoring is ~µs per PAIR, so ~64k pairs keep a task at a few
-    // hundred ms; an UNCONDITIONAL session-width pin (r16) paid 32 task
-    // launches on pair frames thousands of times smaller than that
-    // (q_golden_record's fixture chain measured 2.2x slower at small
-    // scale, and FASTER at 8 cores than 32). Callers without an estimate
-    // (the forced exact/capped path — no probe ran) keep session width.
+    // SIZE the pin from the dispatcher's own pair estimate
+    // (Width.forWork, PairsPerTask). Callers without an estimate (the
+    // forced exact/capped path — no probe ran) keep session width.
+    val spark = left.sparkSession
     val nPart =
-      if (estPairs < 0) nShuffle
-      else math.max(1, math.min(nShuffle,
-        math.ceil(estPairs / 65536.0).toInt))
+      if (estPairs < 0) Width.session(spark)
+      else Width.forWork(spark, estPairs, Width.PairsPerTask)
     passes.zip(caps).map { case ((lk, rk), cap) =>
       val l = left.select(col(leftId), lk.as("__bk"))
       val r = right.select(col(rightId), rk.as("__bk"))
@@ -247,9 +240,9 @@ object Linkage {
         }
       lf.join(rf, "__bk").select(leftId, rightId)
     }.reduce(_ union _)
-      // PIN the pair-dedup exchange at the session shuffle width (r16,
-      // guide §2.5): everything downstream of this exchange is CPU-heavy
-      // per PAIR (the FS scoring's levenshtein) while the id-pair rows
+      // PIN the pair-dedup exchange at `nPart` (r16, guide §2.5):
+      // everything downstream of this exchange is CPU-heavy per PAIR
+      // (the FS scoring's levenshtein) while the id-pair rows
       // are ~16 bytes, so AQE's byte-based coalescing — which only sees
       // bytes — folded the post-shuffle stage to a handful of tasks
       // (measured at sf0.1: 9.4 s of scoring task time squeezed onto 6

@@ -22,43 +22,6 @@ object Pipeline {
   def md5Hash60(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
 
-  /** Rebalance an UNDER-PARALLEL scan before a CPU-heavy per-row kernel
-    * (r16, guide §2.5 "input skew: one huge unsplittable file …
-    * repartition immediately after the read"): parquet cannot split
-    * below a row group, so a single-row-group file scans as ONE task no
-    * matter how many cores wait — and a fused parse/tokenize kernel
-    * then runs serially (measured: flf_quarantine's parse stage, 2.8 s
-    * of task time on the 1-split sf0.1 lineitem scan ≈ its whole wall).
-    * Hash-repartition on a caller-supplied high-cardinality key to the
-    * default parallelism, ONLY when the scan has less than half that
-    * many splits — at production scale a table is thousands of splits
-    * and this is a planning-time no-op, so the shuffle exists exactly
-    * where the parallelism is otherwise wasted. A KEYED repartition,
-    * not round-robin: round-robin pays a per-partition sort
-    * (sortBeforeRepartition — measured 2.5× the kernel's own task time
-    * on the 600k-row quarantine fixture) and is nondeterministic across
-    * actions; the hash placement is deterministic (guide §2.5), so the
-    * result frame also stays safe for multi-action consumers. Not for
-    * plans whose aggregation happily runs one-task (count-pruned
-    * projections cost nothing).
-    */
-  def fanOutScan(df: DataFrame, key: Column): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    // SCAN/PROJECTION inputs only (ADVICE r16): under AQE, `.rdd` on a
-    // plan that CONTAINS exchanges finalizes and executes the upstream
-    // query stages as driver-blocking jobs, and that work is not reused
-    // by the separately-planned repartition below. Guard: a plan with
-    // any exchange already has an AQE-sized width — rebalancing it is
-    // not this helper's job, so it no-ops instead of silently running
-    // the upstream twice. Exchange-free plans produce their RDD lazily
-    // (no job), so the split-count read below stays plan-time.
-    val hasExchange = df.queryExecution.sparkPlan.exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
-    if (hasExchange) df
-    else if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target, key)
-    else df
-  }
-
   /** Deterministic hash sample: keep rows whose md5-based bucket (of
     * `mod`) falls below `keep`. Unlike `df.sample()` this is stable
     * across runs, partitionings, and engines — the property a training

@@ -44,16 +44,6 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
 
-  /** Round-robin the streamed side of a broadcast score scan across the
-    * session's shuffle width. The scan's input split count caps the whole
-    * O(|corpus|·|queries|) stage: a corpus arriving as a few small files
-    * (or one shuffle partition) would serialize the quadratic loop on a
-    * handful of tasks no matter how many executors exist. The exchange
-    * moves |corpus| rows once — nothing at pair scale.
-    */
-  def spreadForScan(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-
   /** One side of a kNN candidate join: `<prefix>_id`, `<prefix>_vec` and
     * the hoisted `<prefix>_norm`, plus the `extra` columns the generator
     * joins on (cell, label, bucket).
@@ -100,7 +90,7 @@ object Similarity {
   def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val q = broadcast(vecSide(queries, "q", idCol, vecCol))
-    val c = vecSide(spreadForScan(corpus), "n", idCol, vecCol)
+    val c = vecSide(Width.spread(corpus, col(idCol)), "n", idCol, vecCol)
     topKPerQuery(q.join(c, col("q_id") =!= col("n_id")), k, cos6())
   }
 
@@ -175,7 +165,7 @@ object Similarity {
     val qVecs = qRows.map(r => if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray)
     val qNorms = qVecs.map(normD)
     val bc = spark.sparkContext.broadcast((qIds, qVecs, qNorms))
-    val part = spreadForScan(corpus)
+    val part = Width.spread(corpus, col(idCol))
       .select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
       .as[(java.lang.Long, Array[Float])]
       .mapPartitions { it =>
@@ -251,7 +241,7 @@ object Similarity {
                       labelCol: String = "label", idCol: String = "vec_id",
                       vecCol: String = "embedding"): DataFrame = {
     val q = broadcast(vecSide(queries, "q", idCol, vecCol, col(labelCol).as("q_label")))
-    val c = vecSide(spreadForScan(corpus), "n", idCol, vecCol,
+    val c = vecSide(Width.spread(corpus, col(idCol)), "n", idCol, vecCol,
       col(labelCol).as("n_label"))
     topKPerQuery(q.join(c, col("q_label") =!= col("n_label")), k, cos6())
   }
@@ -576,7 +566,7 @@ object Similarity {
   def sq8Knn(corpus: DataFrame, queries: DataFrame, k: Int,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val q = broadcast(sq8Encode(queries, idCol, vecCol, "q"))
-    val c = sq8Encode(spreadForScan(corpus), idCol, vecCol, "n")
+    val c = sq8Encode(Width.spread(corpus, col(idCol)), idCol, vecCol, "n")
     val intDot = aggregate(
       zip_with(col("q_code"), col("n_code"), (x, y) => x * y),
       lit(0L), (acc, x) => acc + x)
@@ -627,6 +617,37 @@ object Similarity {
     array(codebooks(j).map(c => pqSubDist(vec, j * sub, c)): _*)
   }
 
+  /** The PQ-encoded corpus side: `n_id`, the `extra` columns, and one
+    * 1-based argmin code `c<j>` per subspace (first-match tie-break:
+    * identical to DuckDB list_position(l, list_min(l))). The distance
+    * arrays are staged in their own projection: argmin consumes each
+    * array twice (position + min), and CollapseProject would otherwise
+    * re-inline the full literal distance chain per consumer, doubling the
+    * tree.
+    */
+  private def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
+                       codebooks: Seq[Seq[Array[Float]]], extra: Column*): DataFrame = {
+    val staged = corpus.select(Seq(col(idCol).as("n_id")) ++ extra ++
+      codebooks.indices.map(j => pqDistArray(col(vecCol), j, codebooks).as(s"d$j")): _*)
+    staged.select(staged.columns.take(1 + extra.size).map(col).toSeq ++
+      codebooks.indices.map { j =>
+        array_position(col(s"d$j"), array_min(col(s"d$j"))).cast("int").as(s"c$j")
+      }: _*)
+  }
+
+  /** The broadcast query side of ADC: `q_id`, the `extra` columns, and
+    * one distance table `dt<j>` per subspace.
+    */
+  private def pqTables(queries: DataFrame, idCol: String, vecCol: String,
+                       codebooks: Seq[Seq[Array[Float]]], extra: Column*): DataFrame =
+    broadcast(queries.select(Seq(col(idCol).as("q_id")) ++ extra ++
+      codebooks.indices.map(j => pqDistArray(col(vecCol), j, codebooks).as(s"dt$j")): _*))
+
+  /** A candidate's ADC distance: its m table lookups, summed. */
+  private def adcScore(m: Int): Column =
+    round((0 until m).map(j => element_at(col(s"dt$j"), col(s"c$j"))).reduceLeft(_ + _),
+      6).as("adc")
+
   /** Product-quantization ADC top-k: corpus vectors are encoded to one
     * centroid index per subspace (a narrow argmin projection — at rest
     * this is the m-byte-per-vector representation, 16-32x smaller than
@@ -640,26 +661,10 @@ object Similarity {
   def pqKnn(corpus: DataFrame, queries: DataFrame, k: Int,
             codebooks: Seq[Seq[Array[Float]]], idCol: String = "vec_id",
             vecCol: String = "embedding"): DataFrame = {
-    val m = codebooks.length
-    // corpus → PQ codes (1-based argmin, first-match tie-break: identical
-    // to DuckDB list_position(l, list_min(l))). The distance arrays are
-    // staged in their own projection: argmin consumes each array twice
-    // (position + min), and CollapseProject would otherwise re-inline the
-    // full literal distance chain per consumer, doubling the tree.
-    val staged = spreadForScan(corpus).select(
-      col(idCol).as("n_id") +:
-        (0 until m).map(j => pqDistArray(col(vecCol), j, codebooks).as(s"d$j")): _*)
-    val codeCols = (0 until m).map { j =>
-      array_position(col(s"d$j"), array_min(col(s"d$j"))).cast("int").as(s"c$j")
-    }
-    val c = staged.select(col("n_id") +: codeCols: _*)
-    // queries → ADC distance tables
-    val dtCols = (0 until m).map(j => pqDistArray(col(vecCol), j, codebooks).as(s"dt$j"))
-    val q = broadcast(queries.select(col(idCol).as("q_id") +: dtCols: _*))
-    val adc = (0 until m).map(j => element_at(col(s"dt$j"), col(s"c$j")))
-      .reduceLeft(_ + _)
-    topKPerQuery(q.join(c, col("q_id") =!= col("n_id")), k, round(adc, 6).as("adc"),
-      ascending = true)
+    val c = pqEncode(Width.spread(corpus, col(idCol)), idCol, vecCol, codebooks)
+    val q = pqTables(queries, idCol, vecCol, codebooks)
+    topKPerQuery(q.join(c, col("q_id") =!= col("n_id")), k,
+      adcScore(codebooks.length), ascending = true)
   }
 
   /** Two-stage retrieval: a cheap compressed-domain shortlist (PQ ADC,
@@ -683,7 +688,7 @@ object Similarity {
     val shortlist = pqKnn(corpus, queries, kShortlist, codebooks, idCol, vecCol)
       .select("q_id", "n_id")
     val qv = broadcast(vecSide(queries, "q", idCol, vecCol))
-    val cv = vecSide(spreadForScan(corpus), "n", idCol, vecCol)
+    val cv = vecSide(Width.spread(corpus, col(idCol)), "n", idCol, vecCol)
     topKPerQuery(cv.join(broadcast(shortlist), Seq("n_id")).join(qv, Seq("q_id")),
       kFinal, cos6())
   }
@@ -716,22 +721,10 @@ object Similarity {
   def ivfPqKnn(corpus: DataFrame, queries: DataFrame, k: Int,
                codebooks: Seq[Seq[Array[Float]]], cellCol: String,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val m = codebooks.length
-    // distance arrays staged for the same CollapseProject reason as pqKnn
-    val staged = corpus.select(
-      col(idCol).as("n_id") +: col(cellCol).as("cell") +:
-        (0 until m).map(j => pqDistArray(col(vecCol), j, codebooks).as(s"d$j")): _*)
-    val codeCols = (0 until m).map { j =>
-      array_position(col(s"d$j"), array_min(col(s"d$j"))).cast("int").as(s"c$j")
-    }
-    val c = staged.select(col("n_id") +: col("cell") +: codeCols: _*)
-    val dtCols = (0 until m).map(j => pqDistArray(col(vecCol), j, codebooks).as(s"dt$j"))
-    val q = broadcast(queries.select(
-      col(idCol).as("q_id") +: col(cellCol).as("cell") +: dtCols: _*))
-    val adc = (0 until m).map(j => element_at(col(s"dt$j"), col(s"c$j")))
-      .reduceLeft(_ + _)
+    val c = pqEncode(corpus, idCol, vecCol, codebooks, col(cellCol).as("cell"))
+    val q = pqTables(queries, idCol, vecCol, codebooks, col(cellCol).as("cell"))
     topKPerQuery(q.join(c, Seq("cell")).filter(col("q_id") =!= col("n_id")), k,
-      round(adc, 6).as("adc"), ascending = true)
+      adcScore(codebooks.length), ascending = true)
   }
 
   /** IVF-style coarse quantization using an existing label/centroid

@@ -828,11 +828,11 @@ object Stats {
         sum(decs(c) * decs(c)).cast("double").as(s"ss_$c"))) ++
       pairs.map { case (a, b) =>
         sum(decs(a) * decs(b)).cast("double").as(s"sp_${a}__$b") }
-    // fanOutScan (r16): ~k² exact-decimal multiplies per row is CPU
-    // work the fixture's single-split scan serialized onto one task
-    // (1.6 s of task time ≈ the whole wall); decimal sums are exact, so
-    // the rebalanced combine order cannot move the result
-    val wide = Pipeline.fanOutScan(df.select(cols.map(col): _*),
+    // Width.spread: ~k² exact-decimal multiplies per row is CPU work the
+    // fixture's single-split scan serialized onto one task (1.6 s of
+    // task time ≈ the whole wall); decimal sums are exact, so the
+    // rebalanced combine order cannot move the result
+    val wide = Width.spread(df.select(cols.map(col): _*),
         xxhash64(cols.map(col): _*))
       .agg(aggs.head, aggs.tail: _*)
     val n = col("n").cast("double")
@@ -1276,33 +1276,18 @@ object Stats {
     // Both self-join arms and the rank window reuse this ONE pinned
     // exchange (ClusteredDistribution(g) is satisfied), so no shuffle
     // is added; parallelism is still bounded by |groups|.
-    // SIZE-ADAPTIVE (r17, VERDICT r16 #2): the r16 pin was an
-    // unconditional session width — 32 task launches for a 3-row test
-    // frame. One groups-bounded probe on the checkpointed input yields
-    // the exact pair fan-out Σ T_g(T_g−1)/2: size the pin at ~250k
-    // pairs/task (the O(T²) kernel is ~sub-µs per pair), overshoot the
-    // group count 8× so distinct groups rarely hash-collide into one
-    // task, cap at session width. The probe costs one collect over the
-    // per-group counts — |groups|-bounded at any scale — and the
-    // checkpoint means the input aggregation still runs exactly once.
-    val nShuffle = df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
+    // SIZED from the exact pair fan-out Σ T_g(T_g−1)/2 (Width.forWork,
+    // PairsPerTask), read by one HotKeys.mass probe on the checkpointed
+    // input (bytes on the driver stay constant at any group count; the
+    // checkpoint means the input aggregation still runs exactly once).
+    // Capped at 8× the group count so distinct groups rarely hash-collide
+    // into one task while a tiny input still plans a few tasks.
     val h0 = df.select(gCol.as("g"), tCol.cast("long").as("t"),
       vCol.cast("long").as("v"))
       .localCheckpoint(false) // consumers: probe + both self-join arms
-    val gstats = h0.groupBy("g").agg(count(lit(1)).as("n")).collect()
-    val nGroups = gstats.length
-    val totalPairs = gstats.map { r =>
-      val n = r.getLong(1).toDouble; n * (n - 1) / 2
-    }.sum
-    // 4× overshoot on the work-part count: hashing g into exactly
-    // ceil(pairs/250k) buckets routinely collides two heavy groups onto
-    // one task (the §2.5 "synthetic keys with too few distinct values"
-    // failure); 4× spreads them while still letting a tiny input plan
-    // 1-4 tasks instead of 32.
-    val workParts = math.max(1L, math.ceil(totalPairs / 250000.0).toLong)
-    val nPart = math.max(1, math.min(math.min(nShuffle.toLong, 8L * nGroups),
-      4L * workParts).toInt)
+    val m = HotKeys.mass(h0, Seq("g"), Int.MaxValue)
+    val nPart = math.max(1L, math.min(8L * m.keys,
+      Width.forWork(df.sparkSession, m.pairs, Width.PairsPerTask))).toInt
     val h = h0.repartition(nPart, col("g"))
     val p = h.as("a").join(h.as("b"),
         col("a.g") === col("b.g") && col("b.t") > col("a.t"))

@@ -26,8 +26,8 @@ object GraftBridge {
 }
 
 /** Test/tooling accessor for the `private[spark]` listener bus: the
-  * probe-job budget sweep (PlanSpec) must drain async listener events
-  * deterministically before reading its per-query job counter.
+  * probe-job budget sweep (PlanSpec) and `graft.Profile` must drain async
+  * listener events deterministically before reading their job counters.
   */
 object GraftListener {
   def waitUntilListenerBusEmpty(sc: org.apache.spark.SparkContext): Unit =
