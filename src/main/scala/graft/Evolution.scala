@@ -63,6 +63,8 @@ object Evolution {
               quarantine: Option[String] = None): Map[String, Any] = {
     import org.apache.spark.sql.functions.{col, count, count_if, lit, not}
     val schema = FixedSchema.fromPath(schemaPath)
+    // before the quarantine job below writes anything
+    if (target == Target.Flf) FlfFormat.requireContiguous(schema)
     // With --quarantine, non-nullable parse failures no longer abort the
     // job (N2 strict): bad rows are written — raw line intact, for
     // repair/replay — to the quarantine dir, and only clean rows reach

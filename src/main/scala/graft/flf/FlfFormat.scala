@@ -1,5 +1,6 @@
 package graft.flf
 
+import graft.functions.FormatFixedLine
 import graft.schema._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -9,16 +10,35 @@ import org.apache.spark.sql.{Column, DataFrame}
   * Spark-first re-expression of the reference's fixed-length-file sink and
   * the mocker's pad-and-serialize step (reference:
   * crates/evolution-writer/src/writer.rs:35-272,
-  * crates/evolution-mocker/src/mocker.rs:146-152). Pure `lpad`/`rpad`/
-  * `concat` projection — narrow, shuffle-free, codegen'd.
+  * crates/evolution-mocker/src/mocker.rs:146-152). One narrow projection,
+  * shuffle-free and codegen'd: each column's string cast feeds one
+  * FormatFixedLine kernel, which pads every cell and writes the row into
+  * one pre-sized buffer.
   */
 object FlfFormat {
 
   /** Render the schema's columns of `df` into one fixed-width line per row,
     * as a single-column DataFrame (`value: string`) ready for `write.text`.
+    * The cells are written back to back, so the schema must be contiguous:
+    * each column's offset is the sum of the lengths before it.
     */
-  def format(df: DataFrame, schema: FixedSchema): DataFrame =
-    df.select(concat(schema.columns.map(c => formatColumn(col(c.name), c)): _*).as("value"))
+  def format(df: DataFrame, schema: FixedSchema): DataFrame = {
+    requireContiguous(schema)
+    df.select(line(schema.columns.map(c => col(c.name)), schema.columns).as("value"))
+  }
+
+  /** Fails unless each column's offset is the sum of the lengths before
+    * it. The writer lays cells back to back, so a gap or an overlap would
+    * write lines that parse back wrong.
+    */
+  def requireContiguous(schema: FixedSchema): Unit =
+    schema.columns.zip(schema.columns.scanLeft(0)(_ + _.length)).foreach {
+      case (c, expected) =>
+        require(c.offset == expected,
+          s"flf layout not contiguous: column '${c.name}' declares offset " +
+            s"${c.offset}, expected $expected (the sum of the earlier lengths); " +
+            "the writer lays cells back to back")
+    }
 
   /** Write as a fixed-length file. `coalesce1` forces a single output file
     * for byte-parity with the reference's single-file writer (SURVEY.md
@@ -34,30 +54,21 @@ object FlfFormat {
   }
 
   /** Pad one value to its cell width per alignment + pad symbol.
-    * Right alignment ⇒ value sits right ⇒ pad on the left (lpad); Left ⇒
-    * rpad; Center splits the padding floor-left/ceil-right, matching the
-    * reference's padder output (e.g. "Alice" centered in 30 ';' cells →
-    * 12 left / 13 right, FIXTURES.md §2). Overlong values truncate to the
-    * cell (lpad/rpad truncation semantics).
+    * Right alignment ⇒ value sits right ⇒ pad on the left; Left ⇒ pad on
+    * the right; Center splits the padding floor-left/ceil-right, matching
+    * the reference's padder output (e.g. "Alice" centered in 30 ';' cells
+    * → 12 left / 13 right, FIXTURES.md §2). Overlong values truncate to
+    * the cell.
     */
-  def formatColumn(value: Column, c: FixedColumn): Column = {
-    val s = asText(value)
-    val pad = c.padSymbol.toString
-    c.alignment match {
-      case Alignment.Right => lpad(s, c.length, pad)
-      case Alignment.Left  => rpad(s, c.length, pad)
-      case Alignment.Center =>
-        val deficit = greatest(lit(c.length) - length(s), lit(0))
-        val left = floor(deficit / 2).cast("int")
-        rpad(concat(repeat(lit(pad), left), s), c.length, pad)
-    }
-  }
+  def formatColumn(value: Column, c: FixedColumn): Column = line(Seq(value), Seq(c))
 
-  /** Text rendering of any dtype: its string cast. Floats keep Spark's
-    * canonical double/float-to-string form; a NULL renders as an all-pad
-    * cell (the flf format has no null marker — parsing an all-pad cell
-    * yields NULL for nullable columns, the round-trip-consistent choice).
+  /** The cells of `values` under `cols`, as one line. A value's text is its
+    * string cast, so floats keep Spark's canonical double/float-to-string
+    * form; a NULL renders as an all-pad cell (the flf format has no null
+    * marker — parsing an all-pad cell yields NULL for nullable columns, the
+    * round-trip-consistent choice).
     */
-  private def asText(value: Column): Column =
-    coalesce(value.cast("string"), lit(""))
+  private def line(values: Seq[Column], cols: Seq[FixedColumn]): Column =
+    FormatFixedLine(values.map(_.cast("string")), cols.map(_.length),
+      cols.map(_.alignment.code), cols.map(_.padSymbol))
 }

@@ -36,15 +36,11 @@ object FlfParse {
   /** Every column's trimmed cell of `line` in one SliceFixedLine walk, as
     * the `__cells` array both [[parse]] and [[parseQuarantine]] index.
     */
-  private def cells(line: Column, schema: FixedSchema): Column = {
-    val alignCode: Alignment => Int = {
-      case Alignment.Left => 0; case Alignment.Right => 1; case Alignment.Center => 2
-    }
+  private def cells(line: Column, schema: FixedSchema): Column =
     graft.functions.SliceFixedLine(line,
       schema.columns.map(_.offset), schema.columns.map(_.length),
-      schema.columns.map(c => alignCode(c.alignment)),
+      schema.columns.map(_.alignment.code),
       schema.columns.map(_.padSymbol)).as("__cells")
-  }
 
   /** Schema evolution — the reference's namesake scenario: a fleet of
     * fixed-length files written under successive schema generations

@@ -48,7 +48,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Catalyst expression so the cast/null policy stays in built-in,
   * oracle-matchable Spark operators (FlfParse.castStrict).
   *
-  * alignCodes: 0 = Left (rtrim), 1 = Right (ltrim), 2 = Center (both).
+  * alignCodes: `Alignment.code` — 0 = Left (rtrim), 1 = Right (ltrim),
+  * 2 = Center (both).
   */
 case class SliceFixedLine(child: Expression, offsets: Seq[Int], lengths: Seq[Int],
                           alignCodes: Seq[Int], pads: Seq[Char])
@@ -128,7 +129,16 @@ object SliceFixedLine {
   }
 
   /** Byte index `count` code points after `from`, clamped to `nb`. */
-  private def skip(base: AnyRef, off: Long, nb: Int, from: Int, count: Int): Int = {
+  private def skip(base: AnyRef, off: Long, nb: Int, from: Int, count: Int): Int =
+    walk(base, off, nb, from, count).toInt
+
+  /** Walks up to `count` code points forward from byte `from` of `[0, nb)`,
+    * 8 bytes at a time while a word has no high bit set. Returns the byte
+    * index reached, clamped to `nb`, in the low 32 bits, and the code
+    * points left unwalked because the bytes ran out in the high 32 bits.
+    * FormatFixedLine counts its cells with the same walk.
+    */
+  private[functions] def walk(base: AnyRef, off: Long, nb: Int, from: Int, count: Int): Long = {
     var idx = from
     var left = count
     while (left > 0 && idx < nb) {
@@ -138,7 +148,7 @@ object SliceFixedLine {
         idx += UTF8String.numBytesForFirstByte(Platform.getByte(base, off + idx)); left -= 1
       }
     }
-    math.min(idx, nb)
+    (left.toLong << 32) | math.min(idx, nb)
   }
 
   /** End of the character at `p`, clamped to `hi`. */

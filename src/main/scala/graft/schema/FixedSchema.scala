@@ -9,12 +9,14 @@ import scala.jdk.CollectionConverters._
   *
   * Mirrors the reference's `padder::Alignment` usage
   * (reference: crates/evolution-schema/src/column.rs:61-66, default Right).
+  * `code` is how the fixed-width kernels (SliceFixedLine, FormatFixedLine)
+  * take it: 0 = Left, 1 = Right, 2 = Center.
   */
-sealed trait Alignment
+sealed abstract class Alignment(val code: Int)
 object Alignment {
-  case object Left extends Alignment
-  case object Right extends Alignment
-  case object Center extends Alignment
+  case object Left extends Alignment(0)
+  case object Right extends Alignment(1)
+  case object Center extends Alignment(2)
   def fromString(s: String): Alignment = s match {
     case "Left"   => Left
     case "Right"  => Right

@@ -521,6 +521,180 @@ class FlfFormatSpec extends AnyFunSuite {
   }
 }
 
+/** The composed per-cell chain FlfFormat ran before FormatFixedLine:
+  * `lpad`/`rpad`/`repeat`/`length`/`concat` over each value's string cast,
+  * a NULL being the empty string. The byte-parity oracle for the kernel.
+  */
+object ComposedFormat {
+  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.{Column, DataFrame}
+
+  def format(df: DataFrame, schema: FixedSchema): DataFrame =
+    df.select(concat(schema.columns.map(c => formatColumn(col(c.name), c)): _*).as("value"))
+
+  def formatColumn(value: Column, c: FixedColumn): Column = {
+    val s = coalesce(value.cast("string"), lit(""))
+    val pad = c.padSymbol.toString
+    c.alignment match {
+      case Alignment.Right => lpad(s, c.length, pad)
+      case Alignment.Left  => rpad(s, c.length, pad)
+      case Alignment.Center =>
+        val deficit = greatest(lit(c.length) - length(s), lit(0))
+        val left = floor(deficit / 2).cast("int")
+        rpad(concat(repeat(lit(pad), left), s), c.length, pad)
+    }
+  }
+}
+
+/** FormatFixedLine (fused one-buffer line writer) must write the bytes the
+  * composed chain writes, on every alignment, pad, dtype and UTF-8 edge.
+  */
+class FormatFixedLineSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkTestSession.spark
+  import org.apache.spark.sql.functions.{col, hex}
+  import org.apache.spark.sql.types._
+  import org.apache.spark.sql.{DataFrame, Row}
+  import scala.jdk.CollectionConverters._
+
+  private def hexLines(lines: DataFrame): Seq[String] =
+    lines.select(hex(col("value"))).collect().map(_.getString(0)).toSeq
+
+  test("FormatFixedLine == composed chain byte for byte on a seeded fuzz") {
+    val rnd = new scala.util.Random(6)
+    // the 21 named pads, 'é' (2 UTF-8 bytes) and '€' (3 bytes)
+    val pads = PadSymbol.table.values.toSeq.sorted ++ Seq('é', '€')
+    val aligns = Seq(Alignment.Left, Alignment.Right, Alignment.Center)
+    val kinds = Seq[(String, FlfType, DataType)](
+      ("text", FlfType.Utf8T, StringType), ("bytes", FlfType.Utf8T, BinaryType),
+      ("f64", FlfType.Float64T, DoubleType), ("f32", FlfType.Float32T, FloatType),
+      ("i64", FlfType.Int64T, LongType), ("i32", FlfType.Int32T, IntegerType),
+      ("i16", FlfType.Int16T, ShortType), ("bool", FlfType.BooleanT, BooleanType))
+    // ASCII (pads among them), 2/3-byte BMP and astral (surrogate-pair) chars
+    val textPool = Array("a", "Z", " ", "0", "*", "é", "漢", "€", "😀", "𐀀")
+    // ASCII, whole 'é' and '€', lone continuation bytes, bare 2/3/4-byte leads, 0xFF
+    val bytePool: Array[Array[Byte]] = Array(
+      Array(0x30), Array(0x2A), Array(0x61), Array(0xC3, 0xA9), Array(0xE2, 0x82, 0xAC),
+      Array(0x80), Array(0xA9), Array(0xBF), Array(0xC3), Array(0xE2), Array(0xF0),
+      Array(0xFF)).map(_.map(_.toByte))
+    val doubles = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0, 0.0,
+      Double.MinPositiveValue, Double.MaxValue, -1e-7, 1.5, 123456.789)
+    val floats = Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, -0.0f, 0.0f,
+      Float.MinPositiveValue, Float.MaxValue, -1e-7f, 1.5f, 12345.6f)
+    // how many text values fall short of, fit exactly and overflow their cell
+    val fit = Array(0, 0, 0)
+
+    def value(kind: String, len: Int): Any = kind match {
+      case "text" =>
+        val s = Seq.fill(rnd.nextInt(len + 3))(textPool(rnd.nextInt(textPool.length))).mkString
+        fit(Integer.signum(s.codePointCount(0, s.length) - len) + 1) += 1
+        s
+      case "bytes" =>
+        val b = Seq.fill(rnd.nextInt(len + 3))(bytePool(rnd.nextInt(bytePool.length))).flatten
+        // complete a last character whose lead promises bytes past the end with
+        // ASCII: there `substring` reads past the string (tested on its own below)
+        var p = 0
+        while (p < b.length) p += org.apache.spark.unsafe.types.UTF8String.numBytesForFirstByte(b(p))
+        (b ++ Seq.fill(p - b.length)('z'.toByte)).toArray
+      case "f64" =>
+        if (rnd.nextBoolean()) doubles(rnd.nextInt(doubles.size))
+        else rnd.nextGaussian() * math.pow(10, rnd.nextInt(24) - 8)
+      case "f32" =>
+        if (rnd.nextBoolean()) floats(rnd.nextInt(floats.size))
+        else (rnd.nextGaussian() * math.pow(10, rnd.nextInt(16) - 4)).toFloat
+      case "i64" => if (rnd.nextInt(4) == 0) Long.MinValue else rnd.nextLong() >> rnd.nextInt(64)
+      case "i32" => if (rnd.nextInt(4) == 0) Int.MinValue else rnd.nextInt() >> rnd.nextInt(32)
+      case "i16" => (rnd.nextInt(65536) - 32768).toShort
+      case "bool" => rnd.nextBoolean()
+    }
+
+    for (trial <- 0 until 40) {
+      val spec = Seq.fill(1 + rnd.nextInt(12))((kinds(rnd.nextInt(kinds.size)),
+        1 + rnd.nextInt(10), aligns(rnd.nextInt(3)), pads(rnd.nextInt(pads.size))))
+      val offsets = spec.scanLeft(0)(_ + _._2)
+      val schema = FixedSchema("fuzz", 1, spec.zipWithIndex.map { case (((_, t, _), len, a, p), i) =>
+        FixedColumn(s"c$i", offsets(i), len, t, a, p, isNullable = true)
+      })
+      val raw = StructType(spec.zipWithIndex.map { case (((_, _, dt), _, _, _), i) =>
+        StructField(s"c$i", dt) })
+      val rows = Seq.fill(40)(Row.fromSeq(spec.map { case ((kind, _, _), len, _, _) =>
+        if (rnd.nextInt(8) == 0) null else value(kind, len)
+      }))
+      // binary columns reach the formatter as unvalidated strings
+      def typed(df: DataFrame): DataFrame = df.select(raw.fields.toSeq.map(f =>
+        if (f.dataType == BinaryType) col(f.name).cast("string").as(f.name) else col(f.name)): _*)
+      // an RDD relation runs generated code; a local one folds through eval
+      val generated = typed(spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), raw))
+      val interpreted = typed(spark.createDataFrame(rows.asJava, raw))
+      val expected = hexLines(ComposedFormat.format(generated, schema))
+      assert(hexLines(FlfFormat.format(generated, schema)) == expected, s"trial $trial: $schema")
+      assert(hexLines(FlfFormat.format(interpreted, schema)) == expected, s"trial $trial: $schema")
+    }
+    assert(fit.forall(_ > 0), fit.mkString("short/exact/overlong text values: ", "/", ""))
+  }
+
+  test("a value whose last lead byte promises bytes past its end keeps only its own bytes") {
+    // `41 E2` counts as 2 code points, so in a 2-wide cell `lpad`/`rpad`
+    // keep `substring(0, 2)`, which steps the lead's 3 bytes from byte 1 and
+    // copies 4 bytes of a 2-byte string: the composed chain appends bytes
+    // that are not in the value, so it is no oracle here. The expected
+    // cells are the value's own bytes, padded by the code points they
+    // count as.
+    val schema = FixedSchema(name = "t", version = 1, columns = Seq(
+      FixedColumn("v", 0, 2, FlfType.Utf8T, Alignment.Left, '_', isNullable = true),
+      FixedColumn("w", 2, 4, FlfType.Utf8T, Alignment.Right, '_', isNullable = true),
+      FixedColumn("x", 6, 1, FlfType.Utf8T, Alignment.Center, '_', isNullable = true)))
+    val raw = StructType(Seq(StructField("b", BinaryType)))
+    val rows = Seq(Row(Array(0x41, 0xE2).map(_.toByte)))
+    // a local relation folds through `eval`, an RDD relation runs generated code
+    for (df <- Seq(spark.createDataFrame(rows.asJava, raw),
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), raw))) {
+      val v = col("b").cast("string")
+      val got = hexLines(FlfFormat.format(df.select(v.as("v"), v.as("w"), v.as("x")), schema))
+      // v: exact fit, no pad; w: 2 pads on the left; x: truncated to `41`
+      assert(got == Seq("41E2" + "5F5F41E2" + "41"))
+    }
+  }
+
+  test("format plans one FormatFixedLine: no pad/concat chain, one string cast per non-string column") {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Concat, StringLPad, StringRPad}
+    val schema = FixedSchema(name = "p", version = 1, columns = Seq(
+      FixedColumn("i16", 0, 7, FlfType.Int16T, Alignment.Right, '0', isNullable = true),
+      FixedColumn("i64", 7, 14, FlfType.Int64T, Alignment.Right, ' ', isNullable = true),
+      FixedColumn("f64", 21, 24, FlfType.Float64T, Alignment.Left, ' ', isNullable = true),
+      FixedColumn("u", 45, 12, FlfType.Utf8T, Alignment.Center, '.', isNullable = true),
+      FixedColumn("l", 57, 12, FlfType.LargeUtf8T, Alignment.Left, ' ', isNullable = true),
+      FixedColumn("b", 69, 7, FlfType.BooleanT, Alignment.Left, '-', isNullable = true)))
+    val plan = FlfFormat.format(Mocker.mock(spark, schema, 10, seed = 1), schema)
+      .queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(exprs.count(_.isInstanceOf[graft.functions.FormatFixedLine]) == 1, plan)
+    assert(!exprs.exists(e => e.isInstanceOf[StringLPad] || e.isInstanceOf[StringRPad] ||
+      e.isInstanceOf[Concat]), plan)
+    assert(exprs.count { case c: Cast => c.dataType == StringType; case _ => false } ==
+      schema.columns.count(_.dtype.sparkType != StringType), plan)
+  }
+
+  private val firstCell = Seq(FixedColumn("a", 0, 4, FlfType.Utf8T))
+
+  test("format rejects a layout with a gap, naming the column and both offsets") {
+    import spark.implicits._
+    val gap = FixedSchema("g", 1, firstCell :+ FixedColumn("b", 5, 3, FlfType.Utf8T))
+    val e = intercept[IllegalArgumentException] {
+      FlfFormat.format(Seq(("x", "y")).toDF("a", "b"), gap)
+    }
+    assert(e.getMessage.contains("column 'b' declares offset 5, expected 4"), e.getMessage)
+  }
+
+  test("format rejects a layout with an overlap, naming the column and both offsets") {
+    import spark.implicits._
+    val overlap = FixedSchema("o", 1, firstCell :+ FixedColumn("b", 2, 3, FlfType.Utf8T))
+    val e = intercept[IllegalArgumentException] {
+      FlfFormat.format(Seq(("x", "y")).toDF("a", "b"), overlap)
+    }
+    assert(e.getMessage.contains("column 'b' declares offset 2, expected 4"), e.getMessage)
+  }
+}
+
 /** SliceFixedLine (fused one-pass cell extraction) must agree with the
   * composed substring/trim path on every alignment, pad, multi-byte and
   * invalid UTF-8 edge — including mocked data for every dtype.
@@ -686,6 +860,46 @@ class TargetSpec extends AnyFunSuite {
     assert(back.count() == 500)
     assert(back.schema.fieldNames.toSeq == Seq("id", "w"))
     assert(back.schema("id").dataType.typeName == "long")
+  }
+
+  test("flf target rewrites a mocked file byte for byte") {
+    // every pad differs from every character its column's values render
+    // with, so each cell parses back to the value that wrote it
+    val json =
+      """{"name":"f","version":1,"columns":[
+        |{"name":"id","offset":0,"length":11,"dtype":"Int64","alignment":"Right","pad_symbol":"Whitespace","is_nullable":false},
+        |{"name":"name","offset":11,"length":12,"dtype":"Utf8","alignment":"Left","pad_symbol":"Semicolon","is_nullable":true},
+        |{"name":"score","offset":23,"length":24,"dtype":"Float64","alignment":"Right","pad_symbol":"Hashtag","is_nullable":true},
+        |{"name":"ratio","offset":47,"length":16,"dtype":"Float32","alignment":"Center","pad_symbol":"Asterisk","is_nullable":true},
+        |{"name":"qty","offset":63,"length":6,"dtype":"Int16","alignment":"Left","pad_symbol":"Whitespace","is_nullable":true},
+        |{"name":"code","offset":69,"length":9,"dtype":"Int32","alignment":"Center","pad_symbol":"Underscore","is_nullable":true},
+        |{"name":"flag","offset":78,"length":7,"dtype":"Boolean","alignment":"Center","pad_symbol":"Hyphen","is_nullable":true}]}"""
+        .stripMargin
+    val dir = java.nio.file.Files.createTempDirectory("graft_flf_target")
+    val sp = dir.resolve("schema.json")
+    java.nio.file.Files.writeString(sp, json)
+    Evolution.mock(spark, sp.toString, s"$dir/m.flf", nRows = 500, seed = 8, coalesce1 = true)
+    val metrics = Evolution.convert(spark, s"$dir/m.flf", sp.toString, s"$dir/out.flf",
+      Target.Flf, coalesce1 = true)
+    assert(metrics("n_rows") == 500L)
+    def bytes(d: String): Seq[Byte] = new java.io.File(d).listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      .flatMap(f => java.nio.file.Files.readAllBytes(f.toPath)).toSeq
+    val mocked = bytes(s"$dir/m.flf")
+    assert(mocked.count(_ == '\n') == 500)
+    assert(bytes(s"$dir/out.flf") == mocked)
+  }
+
+  test("flf target refuses a non-contiguous layout before writing any output") {
+    val (dir, _) = setup()
+    val gap = java.nio.file.Paths.get(dir, "gap.json")
+    java.nio.file.Files.writeString(gap, schemaJson.replace("\"offset\":8", "\"offset\":9"))
+    val e = intercept[IllegalArgumentException] {
+      Evolution.convert(spark, s"$dir/m.flf", gap.toString, s"$dir/out_gap", Target.Flf,
+        quarantine = Some(s"$dir/q_gap"))
+    }
+    assert(e.getMessage.contains("column 'w' declares offset 9, expected 8"), e.getMessage)
+    assert(!new java.io.File(s"$dir/q_gap").exists() && !new java.io.File(s"$dir/out_gap").exists())
   }
 
   test("write modes: default refuses to overwrite; --truncate-existing replaces") {

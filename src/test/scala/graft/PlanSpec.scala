@@ -751,8 +751,11 @@ class PlanSpec extends AnyFunSuite {
     // deliberately out of scope: they are stream replay work, not
     // driver-side construction probes. Budget semantics match the
     // exchange sweep: committed tsv, assert <=, regenerate deliberately
-    //   GRAFT_REGEN_PROBE_BUDGET=1 sbt "testOnly graft.PlanSpec -- -z probe"
-    // (a count going UP needs a commit-message justification).
+    //   GRAFT_REGEN_PROBE_BUDGET=1 sbt "testOnly graft.PlanSpec -- -z budget"
+    // (a count going UP needs a commit-message justification). `-z budget`
+    // runs the exchange sweep first, as the committed counts assume: the
+    // per-session landings and indexes it leaves warm are not re-probed
+    // here, and this sweep alone reads higher, order-dependent counts.
     val budgetPath = java.nio.file.Paths.get("src/test/resources/probe_job_budget.tsv")
     val sc = spark.sparkContext
     val counts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
