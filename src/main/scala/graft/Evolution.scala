@@ -45,23 +45,26 @@ object Evolution {
     FlfParse.parse(lines, schema)
 
   /** `evolution convert`: fixed-length file → columnar target. The plan is
-    * scan text → `SliceFixedLine` (every trimmed cell in one byte walk of
-    * the line) → cast each cell once → write: narrow, shuffle-free,
-    * whole-stage-codegen'd (SURVEY.md §4).
+    * scan text → `SliceFixedLine` (every cell sliced, trimmed and typed in
+    * one byte walk of the line, FlfParse.parse) → write: narrow,
+    * shuffle-free, one whole-stage-codegen'd stage (SURVEY.md §4).
     *
     * Returns the conversion counters the reference logs per chunk
     * (rows/bytes processed, converter.rs:226-232), observed Spark-natively
     * on the SAME pass that writes (`observe()` piggybacks aggregates on
     * the write job — no second scan): `n_rows` out plus a
     * `nulls__<column>` parse-failure tally per nullable column (N1
-    * append-or-null events; non-nullable failures abort instead, N2).
+    * append-or-null events; non-nullable failures abort instead, N2). A
+    * tally is `n_rows − count(column)`: `count_if(isNull)` would be
+    * rewritten through a common expression that adds a boolean column per
+    * tally and a second whole-row projection above the metrics.
     */
   def convert(spark: SparkSession, input: String, schemaPath: String,
               output: String, target: Target = Target.Parquet,
               coalesce1: Boolean = false,
               mode: String = "errorifexists",
               quarantine: Option[String] = None): Map[String, Any] = {
-    import org.apache.spark.sql.functions.{col, count, count_if, lit, not}
+    import org.apache.spark.sql.functions.{col, count, lit, not}
     val schema = FixedSchema.fromPath(schemaPath)
     // before the quarantine job below writes anything
     if (target == Target.Flf) FlfFormat.requireContiguous(schema)
@@ -93,10 +96,9 @@ object Evolution {
       case None => FlfParse.read(spark, input, schema)
     }
     val obs = org.apache.spark.sql.Observation()
-    val counters = count(lit(1)).as("n_rows") +:
-      schema.columns.filter(_.isNullable)
-        .map(c => count_if(col(c.name).isNull).as(s"nulls__${c.name}"))
-    val df = parsed.observe(obs, counters.head, counters.tail: _*)
+    val nullable = schema.columns.filter(_.isNullable).map(_.name)
+    val df = parsed.observe(obs, count(lit(1)).as("n_rows"),
+      nullable.map(c => count(col(c)).as(s"nonnull__$c")): _*)
     target match {
       case Target.Flf => FlfFormat.write(df, schema, output, coalesce1, mode)
       case Target.Ipc =>
@@ -115,7 +117,11 @@ object Evolution {
               s"${t.format} connector jars are not on the classpath: ${e.getMessage}")
         }
     }
-    obs.get ++ quarantineCount
+    val observed = obs.get
+    val rows = observed("n_rows").asInstanceOf[Long]
+    Map[String, Any]("n_rows" -> rows) ++ nullable.map(c =>
+      s"nulls__$c" -> (rows - observed(s"nonnull__$c").asInstanceOf[Long])) ++
+      quarantineCount
   }
 
   /** `evolution curate <op>`: the LLM-pipeline operators as CLI

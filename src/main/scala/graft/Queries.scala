@@ -151,7 +151,7 @@ object Queries {
 
   q("flf_parse", flfParseSql) { (s, dir) =>
     val lines = tbl(s, dir, "lineitem").select(flfLine().as("value"))
-    lines.select(flfCols.map(c => FlfParse.parseColumn(col("value"), c)): _*)
+    FlfParse.parse(lines, FixedSchema(name = "lineitem_flf", version = 1, columns = flfCols))
       .orderBy("l_orderkey", "l_linenumber")
   }
 

@@ -2,6 +2,7 @@ package graft.flf
 
 import graft.schema._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** The convert read path: fixed-length text lines → typed DataFrame.
@@ -9,7 +10,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * Spark-first re-expression of the reference's extract → trim → cast
   * pipeline (reference: crates/evolution-builder/src/builder.rs:54-64,
   * crates/evolution-parser/src/datatype.rs:37-178). The whole plan is a
-  * single narrow `select` over `spark.read.text` — no shuffle, fully
+  * single narrow `select` over `spark.read.text` whose one kernel,
+  * `SliceFixedLine`, slices, trims and types every cell of a line in one
+  * byte walk — no shuffle, no per-cell cast, fully
   * whole-stage-codegen'd; Hadoop's LineRecordReader provides the
   * newline-aligned chunk splitting the reference hand-rolls
   * (crates/evolution-slicer/src/slicer.rs:159-266).
@@ -21,26 +24,35 @@ object FlfParse {
     parse(spark.read.text(path), schema)
 
   /** Parse a DataFrame of lines (column `value: string`) per the schema:
-    * one fused SliceFixedLine walk per row (all cells extracted + trimmed
-    * in O(line length), independent of column count), then the strict
-    * typed cast + null policy per cell in built-in operators. Staged in
-    * two projections so the slicer evaluates once (CollapseProject keeps
-    * non-cheap producers used more than once in their own projection).
+    * one SliceFixedLine walk per row extracts, trims and types every cell
+    * in O(line length), independent of column count, and each column reads
+    * its field of that struct; a non-nullable column's null aborts the job
+    * ([[strict]]). Staged in two projections so the kernel evaluates once
+    * per row (CollapseProject keeps a non-cheap producer used more than
+    * once in its own projection).
     */
   def parse(lines: DataFrame, schema: FixedSchema): DataFrame =
-    lines.select(cells(col("value"), schema))
+    lines.select(col("value"), typed(col("value"), schema))
       .select(schema.columns.zipWithIndex.map { case (c, i) =>
-        fromTrimmed(col("__cells").getItem(i), c)
+        strict(cell(i), cellText(col("value"), c), c)
       }: _*)
 
-  /** Every column's trimmed cell of `line` in one SliceFixedLine walk, as
-    * the `__cells` array both [[parse]] and [[parseQuarantine]] index.
+  /** Every column's typed cell of `line` in one SliceFixedLine walk, as
+    * the `__typed` struct both [[parse]] and [[parseQuarantine]] read.
     */
-  private def cells(line: Column, schema: FixedSchema): Column =
-    graft.functions.SliceFixedLine(line,
-      schema.columns.map(_.offset), schema.columns.map(_.length),
-      schema.columns.map(_.alignment.code),
-      schema.columns.map(_.padSymbol)).as("__cells")
+  private def typed(line: Column, schema: FixedSchema): Column =
+    slice(line, schema.columns, schema.columns.map(_.dtype.sparkType)).as("__typed")
+
+  /** Column i's value: its field of the `__typed` struct. */
+  private def cell(i: Int): Column = col("__typed").getField(s"_$i")
+
+  /** Column `c`'s trimmed text from the same kernel, typed as one Utf8 cell. */
+  private def cellText(line: Column, c: FixedColumn): Column =
+    slice(line, Seq(c), Seq(StringType)).getField("_0")
+
+  private def slice(line: Column, cols: Seq[FixedColumn], types: Seq[DataType]): Column =
+    graft.functions.SliceFixedLine(line, cols.map(_.offset), cols.map(_.length),
+      cols.map(_.alignment.code), cols.map(_.padSymbol), types)
 
   /** Schema evolution — the reference's namesake scenario: a fleet of
     * fixed-length files written under successive schema generations
@@ -75,7 +87,8 @@ object FlfParse {
   }
 
   /** Per-column composed parse (substring → trim → cast), the semantic
-    * reference for the fused slicer; cross-checked in FlfSpec.
+    * reference for the typed kernel: the test oracle FlfSpec checks
+    * [[parse]] and [[parseQuarantine]] against.
     */
   def parseComposed(lines: DataFrame, schema: FixedSchema): DataFrame =
     lines.select(schema.columns.map(c => parseColumn(col("value"), c)): _*)
@@ -86,16 +99,22 @@ object FlfParse {
     fromTrimmed(trimPad(raw, c), c)
   }
 
-  /** Strict cast + null policy from an already-trimmed cell (reference:
-    * builder/datatype.rs:66-86 + column.rs:123-131): parse failure on a
-    * nullable column → NULL; on a non-nullable column the first bad row
-    * aborts the whole job (N2 strict abort). The abort is the `coalesce`
-    * fallback so that each cell is parsed once: generated code for
-    * `when(parsed.isNull, …).otherwise(parsed)` runs the cast twice, in
-    * the condition and in the value.
+  /** Strict cast + null policy from an already-trimmed cell: the
+    * per-column form of what [[parse]] does for a whole row.
     */
-  def fromTrimmed(trimmed: Column, c: FixedColumn): Column = {
-    val parsed = castStrict(trimmed, c.dtype)
+  def fromTrimmed(trimmed: Column, c: FixedColumn): Column =
+    strict(castStrict(trimmed, c.dtype), trimmed, c)
+
+  /** The null policy (reference: builder/datatype.rs:66-86 +
+    * column.rs:123-131): parse failure on a nullable column → NULL; on a
+    * non-nullable column the first bad row aborts the whole job (N2 strict
+    * abort), naming the column and its trimmed text. The abort is the
+    * `coalesce` fallback, so `trimmed` is evaluated only on a failing row
+    * and `parsed` once: generated code for
+    * `when(parsed.isNull, …).otherwise(parsed)` evaluates `parsed` twice,
+    * in the condition and in the value.
+    */
+  private def strict(parsed: Column, trimmed: Column, c: FixedColumn): Column = {
     val checked =
       if (c.isNullable) parsed
       else
@@ -114,7 +133,7 @@ object FlfParse {
     * (null on failure) and `_quarantined` flags rows where any
     * NON-NULLABLE column failed; callers split on the flag and route bad
     * rows — raw line retained for repair — to a side sink while the good
-    * rows commit. A pure narrow projection over the same fused slicer as
+    * rows commit. A pure narrow projection over the same typed kernel as
     * the strict path.
     */
   def parseQuarantine(lines: DataFrame, schema: FixedSchema,
@@ -125,13 +144,11 @@ object FlfParse {
       s"parseQuarantine reserves column name(s) '$lineCol' (raw line) and " +
         s"'_quarantined' (flag); rename schema column(s) ${reserved.mkString(", ")} " +
         "or pass a different lineCol")
-    val parsedCols = schema.columns.zipWithIndex.map { case (c, i) =>
-      castStrict(col("__cells").getItem(i), c.dtype).as(c.name)
-    }
+    val parsedCols = schema.columns.zipWithIndex.map { case (c, i) => cell(i).as(c.name) }
     val bad = schema.columns.filterNot(_.isNullable)
       .map(c => col(c.name).isNull)
       .reduceOption(_ || _).getOrElse(lit(false))
-    lines.select(col(lineCol), cells(col(lineCol), schema))
+    lines.select(col(lineCol), typed(col(lineCol), schema))
       .select(col(lineCol) +: parsedCols: _*)
       .withColumn("_quarantined", bad)
   }

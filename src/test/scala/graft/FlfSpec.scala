@@ -97,13 +97,20 @@ class FlfParseSpec extends AnyFunSuite {
   }
 
   test("non-nullable garbage aborts the job (N2 strict abort)") {
-    val row = "____12ab_-42.5***************;;;;;;;;;;;;Alice;;;;;;;;;;;;;000true0"
-    val ex = intercept[Exception] {
-      FlfParse.parse(Seq(row).toDF("value"), schemaA).collect()
+    val tail = "-42.5***************;;;;;;;;;;;;Alice;;;;;;;;;;;;;000true0"
+    // the message names the column and its trimmed text, multi-byte included
+    for ((cool, value) <- Seq("____12ab_" -> "12ab_", "___1ä2日ab" -> "1ä2日ab")) {
+      val row = cool + tail
+      val expected =
+        s"strict-mode abort: non-nullable column 'cool' failed to parse value '$value'"
+      assert(FlfParseSpec.abortMessage(
+        FlfParse.parse(Seq(row).toDF("value"), schemaA).collect()) == expected)
+      val dir = java.nio.file.Files.createTempDirectory("flfabort")
+      java.nio.file.Files.writeString(dir.resolve("schema.json"), new SchemaSpec().exampleJson)
+      java.nio.file.Files.writeString(dir.resolve("in.flf"), row + "\n")
+      assert(FlfParseSpec.abortMessage(Evolution.convert(spark, s"$dir/in.flf",
+        s"$dir/schema.json", s"$dir/out.parquet")) == expected)
     }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
-    assert(messages(ex).exists(_.contains("strict-mode abort")))
   }
 
   test("quarantine mode flags non-nullable failures, keeps raw line, nullable nulls pass") {
@@ -189,13 +196,12 @@ class FlfParseSpec extends AnyFunSuite {
     assert(got.getInt(0) == 1234)
   }
 
-  test("strict read parses each numeric cell once: one try_cast per numeric column") {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
+  test("strict read parses each cell once: one typed kernel, no try_cast") {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, RaiseError}
     val numeric = Seq(FlfType.Int16T, FlfType.Int32T, FlfType.Int64T,
       FlfType.Float16T, FlfType.Float32T, FlfType.Float64T)
     // every numeric dtype both nullable and non-nullable, plus the two
-    // non-numeric kinds (no try_cast: boolean is a `when` chain, a
-    // string-to-string cast is removed)
+    // non-numeric kinds
     val cols = (numeric.map(t => (t, true)) ++ numeric.map(t => (t, false)) ++
       Seq((FlfType.BooleanT, false), (FlfType.Utf8T, false))).zipWithIndex.map {
       case ((t, nullable), i) =>
@@ -206,11 +212,36 @@ class FlfParseSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(dir.resolve("data.flf"),
       (Seq.fill(12)("   1") ++ Seq("true", "abcd")).mkString + "\n")
     val df = FlfParse.read(spark, dir.toString, schema)
-    val tryCasts = df.queryExecution.optimizedPlan.expressions.map(_.collect {
-      case c: Cast if c.evalMode == EvalMode.TRY => c
-    }.size).sum
-    assert(tryCasts == 12)
-    assert(df.collect().head.getShort(6) == 1.toShort)
+    val exprs = df.queryExecution.optimizedPlan.flatMap(_.expressions)
+    assert(exprs.map(_.collect { case c: Cast if c.evalMode == EvalMode.TRY => c }.size).sum == 0)
+    assert(FlfParseSpec.kernels(exprs).size == 1)
+    // the only other kernels are the abort messages' one-cell Utf8 slices,
+    // one per non-nullable column
+    val aborts = exprs.flatMap(_.collect { case r: RaiseError => r })
+    assert(aborts.size == 8 && FlfParseSpec.kernels(aborts.flatMap(_.children)).forall(
+      _.types == Seq(org.apache.spark.sql.types.StringType)))
+    val row = df.collect().head
+    assert(row.getShort(6) == 1.toShort && row.getDouble(11) == 1.0 && row.getString(13) == "abcd")
+  }
+}
+
+object FlfParseSpec {
+  /** The typed kernels of `exprs`, not counting those inside an abort. */
+  def kernels(exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+      : Seq[graft.functions.SliceFixedLine] = exprs.flatMap {
+    case _: org.apache.spark.sql.catalyst.expressions.RaiseError => Nil
+    case k: graft.functions.SliceFixedLine => Seq(k)
+    case e => kernels(e.children)
+  }
+
+  /** The message of the strict-mode abort that `job` fails with. */
+  def abortMessage(job: => Any): String = {
+    val ex = org.scalatest.Assertions.intercept[Exception](job)
+    def chain(t: Throwable): Seq[Throwable] = Option(t).toSeq.flatMap(e => e +: chain(e.getCause))
+    chain(ex).collectFirst {
+      case e: org.apache.spark.SparkThrowable if e.getCondition == "USER_RAISED_EXCEPTION" =>
+        e.getMessageParameters.get("errorMessage")
+    }.getOrElse(throw ex)
   }
 }
 
@@ -741,11 +772,19 @@ class SliceFixedLineSpec extends AnyFunSuite {
     check(schema, lines)
   }
 
-  /** Every column of `df`, as hex of its binary cast, in row order. */
-  private def hexRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
-    df.select(df.columns.map(c =>
-        org.apache.spark.sql.functions.hex(org.apache.spark.sql.functions.col(c).cast("binary"))): _*)
-      .collect().map(r => r.toSeq.map(_.asInstanceOf[String])).toSeq
+  /** Every column of `df` comparable exactly: a string as the hex of its
+    * bytes, a float or double as its bits (NaN equals NaN, -0.0 is not 0.0).
+    */
+  private def exactRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.select(df.schema.fields.map { f =>
+      if (f.dataType == org.apache.spark.sql.types.StringType)
+        org.apache.spark.sql.functions.hex(df.col(f.name).cast("binary"))
+      else df.col(f.name)
+    }: _*).collect().map(_.toSeq.map {
+      case f: java.lang.Float => s"f${java.lang.Float.floatToIntBits(f)}"
+      case d: java.lang.Double => s"d${java.lang.Double.doubleToLongBits(d)}"
+      case v => v
+    }).toSeq
 
   /** Lines of raw bytes, cast to string with no UTF-8 validation. */
   private def byteLines(lines: Seq[Array[Byte]]): org.apache.spark.sql.DataFrame =
@@ -770,10 +809,10 @@ class SliceFixedLineSpec extends AnyFunSuite {
       (Seq.fill(rnd.nextInt(24))(pool(rnd.nextInt(pool.length))).flatten ++ "zzz".getBytes).toArray
     }
     val df = byteLines(lines)
-    val composed = hexRows(FlfParse.parseComposed(df, schema))
-    assert(composed.exists(_.exists(_.contains("A9"))))
-    assert(hexRows(FlfParse.parse(df, schema)) == composed)
-    assert(hexRows(FlfParse.parseQuarantine(df, schema)
+    val composed = exactRows(FlfParse.parseComposed(df, schema))
+    assert(composed.exists(_.exists(v => String.valueOf(v).contains("A9"))))
+    assert(exactRows(FlfParse.parse(df, schema)) == composed)
+    assert(exactRows(FlfParse.parseQuarantine(df, schema)
       .select(schema.columns.map(c => org.apache.spark.sql.functions.col(c.name)): _*)) == composed)
   }
 
@@ -787,8 +826,8 @@ class SliceFixedLineSpec extends AnyFunSuite {
       FixedColumn("r", 1, 5, FlfType.Utf8T, Alignment.Right, ' ', isNullable = true),
       FixedColumn("e", 3, 2, FlfType.Utf8T, Alignment.Center, ' ', isNullable = true)))
     val df = byteLines(Seq(Array(0x41, 0x42, 0xE2).map(_.toByte)))
-    assert(hexRows(FlfParse.parse(df, schema)) == Seq(Seq("4142E2", "42E2", "")))
-    assert(hexRows(FlfParse.parseQuarantine(df, schema).drop("value", "_quarantined")) ==
+    assert(exactRows(FlfParse.parse(df, schema)) == Seq(Seq("4142E2", "42E2", "")))
+    assert(exactRows(FlfParse.parseQuarantine(df, schema).drop("value", "_quarantined")) ==
       Seq(Seq("4142E2", "42E2", "")))
   }
 
@@ -827,6 +866,187 @@ class SliceFixedLineSpec extends AnyFunSuite {
       FixedColumn("b", 57, 7, FlfType.BooleanT, Alignment.Left, '-', isNullable = true)))
     val flf = FlfFormat.format(graft.mock.Mocker.mock(spark, schema, 300, seed = 5), schema)
     check(schema, flf.collect().map(_.getString(0)).toSeq)
+  }
+
+  private val allTypes = Seq(FlfType.BooleanT, FlfType.Float16T, FlfType.Float32T,
+    FlfType.Float64T, FlfType.Int16T, FlfType.Int32T, FlfType.Int64T, FlfType.Utf8T,
+    FlfType.LargeUtf8T)
+
+  /** Cells each cast rule has an edge at: decimals, signs, whitespace,
+    * overflow by one, special literals, hex, suffixes, long mantissas,
+    * exponents past the fast path, case, and malformed numbers.
+    */
+  private val edgeCells = Seq("1.5", "1.", ".5", "+7", "-", "", "1 2", "\t7\t", " 8",
+    "32767", "32768", "-32768", "-32769", "2147483647", "2147483648", "-2147483648",
+    "-2147483649", "9223372036854775807", "9223372036854775808", "-9223372036854775808",
+    "-9223372036854775809", "NaN", "nan", "Infinity", "-Infinity", "inf", "-inf", "+INF",
+    "1e400", "-1e400", "1e-400", "0x1p3", "1.5f", "2d", "-0.0", "-0", "0", "00", "+0.0e5",
+    "12345678", "1.2345678", "1234567.8", "0.1234567890123456", "1234567890123456",
+    "123456789012345", "9007199254740993", "1e10", "1e11", "1.5e-10", "1.5e-11", "1e22",
+    "1e23", "1e-22", "1e-23", "3.4028235e38", "3.4028236e38", "1.4e-45", "true", "false",
+    "TRUE", "tru", "falsey", "1e", "e5", ".", "+", "--1", "1..2", "1e5.5", "1_000", "٣")
+
+  /** A random decimal: 1-18 digits, maybe a point, a sign, an exponent. */
+  private def randomNumber(rnd: scala.util.Random): String = {
+    val digits = Seq.fill(1 + rnd.nextInt(18))(('0' + rnd.nextInt(10)).toChar).mkString
+    val point = rnd.nextInt(digits.length + 2) - 1
+    val body = if (point < 0) digits else digits.take(point) + "." + digits.drop(point)
+    val exp = if (rnd.nextInt(3) > 0) "" else
+      (if (rnd.nextBoolean()) "e" else "E") + Seq("", "+", "-")(rnd.nextInt(3)) + rnd.nextInt(30)
+    Seq("", "-", "+")(rnd.nextInt(3)) + body + exp
+  }
+
+  private val invalidUtf8: Seq[Array[Byte]] =
+    Seq(Array(0xFF), Array(0xC3), Array(0x80), Array(0xE2, 0x82)).map(_.map(_.toByte))
+
+  /** `n` lines of `schema` with random cells, each padded to its column's
+    * width by alignment (an overlong cell spills into the next column). An
+    * ASCII tail keeps every lead byte's sequence inside the line.
+    */
+  private def fuzzLines(rnd: scala.util.Random, schema: FixedSchema, n: Int): Seq[Array[Byte]] =
+    Seq.fill(n) {
+      schema.columns.flatMap { c =>
+        val text = rnd.nextInt(20) match {
+          case k if k < 10 => edgeCells(rnd.nextInt(edgeCells.size))
+          case k if k < 17 => randomNumber(rnd)
+          case _ => Seq.fill(rnd.nextInt(6))("aé日 .-0"(rnd.nextInt(7))).mkString
+        }
+        val value = text.getBytes("UTF-8") ++
+          (if (rnd.nextInt(10) == 0) invalidUtf8(rnd.nextInt(invalidUtf8.size)) else Array.empty[Byte])
+        val short = math.max(0, c.length -
+          org.apache.spark.unsafe.types.UTF8String.fromBytes(value).numChars())
+        val left = c.alignment match {
+          case Alignment.Left => 0
+          case Alignment.Right => short
+          case Alignment.Center => short / 2
+        }
+        val pad = c.padSymbol.toString.getBytes("UTF-8")
+        Array.fill(left)(pad).flatten ++ value ++ Array.fill(short - left)(pad).flatten
+      }.toArray ++ "zzz".getBytes("UTF-8")
+    }
+
+  private def fuzzSchema(rnd: scala.util.Random, types: Seq[FlfType]): FixedSchema = {
+    val pads = Seq(' ', '0', '_', '*', '.', '-', '#', 'é', '日')
+    val aligns = Seq(Alignment.Left, Alignment.Right, Alignment.Center)
+    val lengths = types.map(_ => 6 + rnd.nextInt(20))
+    FixedSchema("fuzz", 1, types.zip(lengths.scanLeft(0)(_ + _)).zipWithIndex.map {
+      case ((t, offset), i) =>
+        FixedColumn(s"c$i", offset, lengths(i), t, aligns(rnd.nextInt(3)),
+          pads(rnd.nextInt(pads.size)), isNullable = rnd.nextBoolean())
+    })
+  }
+
+  /** parse and parseQuarantine agree with parseComposed on fuzzed lines,
+    * and a null one, of random schemas (the first holds every dtype once).
+    */
+  private def fuzzCheck(seed: Int, schemas: Int, rows: Int): Unit = {
+    val rnd = new scala.util.Random(seed)
+    for (k <- 0 until schemas) {
+      val types =
+        if (k == 0) rnd.shuffle(allTypes)
+        else Seq.fill(1 + rnd.nextInt(9))(allTypes(rnd.nextInt(allTypes.size)))
+      val schema = fuzzSchema(rnd, types)
+      // strict parse aborts on a non-nullable failure, so compare it leniently
+      val lenient = schema.copy(columns = schema.columns.map(_.copy(isNullable = true)))
+      val lines = fuzzLines(rnd, schema, rows) :+ null
+      val df = byteLines(lines)
+      val composed = exactRows(FlfParse.parseComposed(df, lenient))
+      def same(got: Seq[Seq[Any]]): Unit = {
+        val bad = got.indices.find(i => got(i) != composed(i))
+        assert(bad.isEmpty, bad.map(i => s"line ${Option(lines(i)).map(new String(_, "UTF-8"))}: kernel " +
+          s"${got(i)}, composed ${composed(i)}; $schema"))
+      }
+      same(exactRows(FlfParse.parse(df, lenient)))
+      val quarantined = FlfParse.parseQuarantine(df, schema)
+      same(exactRows(quarantined.drop("value", "_quarantined")))
+      val nonNull = schema.columns.zipWithIndex.filterNot(_._1.isNullable).map(_._2)
+      assert(quarantined.select("_quarantined").collect().map(_.getBoolean(0)).toSeq ==
+        composed.map(r => nonNull.exists(r(_) == null)), schema)
+    }
+  }
+
+  test("typed kernel == composed path on a seeded fuzz of schemas and adversarial cells") {
+    fuzzCheck(seed = 13, schemas = 8, rows = 500)
+  }
+
+  test("typed kernel == composed path without whole-stage codegen or generated code") {
+    val conf = spark.conf
+    val keys = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val prior = keys.map { case (k, _) => k -> conf.getOption(k) }
+    keys.foreach { case (k, v) => conf.set(k, v) }
+    try fuzzCheck(seed = 29, schemas = 4, rows = 300)
+    finally prior.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  test("typed kernel == composed path on a schema wider than codegen's field limit") {
+    val rnd = new scala.util.Random(31)
+    val maxFields = spark.conf.get("spark.sql.codegen.maxFields").toInt
+    val schema = fuzzSchema(rnd, Seq.fill(maxFields + 20)(allTypes(rnd.nextInt(allTypes.size))))
+    val lenient = schema.copy(columns = schema.columns.map(_.copy(isNullable = true)))
+    val df = byteLines(fuzzLines(rnd, schema, 200))
+    val composed = exactRows(FlfParse.parseComposed(df, lenient))
+    assert(exactRows(FlfParse.parse(df, lenient)) == composed)
+    assert(exactRows(FlfParse.parseQuarantine(df, schema).drop("value", "_quarantined")) ==
+      composed)
+  }
+
+  test("every typed cell equals Spark's try_cast of its text on random numbers") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode}
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val types = Seq(ShortType, IntegerType, LongType, FloatType, DoubleType)
+    val line = BoundReference(0, StringType, nullable = true)
+    // every column is the whole line, which holds no pad
+    val kernel = graft.functions.SliceFixedLine(line, types.map(_ => 0), types.map(_ => 64),
+      types.map(_ => 2), types.map(_ => '#'), types)
+    val casts = types.map(t => Cast(line, t, None, EvalMode.TRY))
+    val rnd = new scala.util.Random(17)
+    val texts = edgeCells ++ Seq.fill(200000)(randomNumber(rnd))
+    var numeric = 0
+    for (text <- texts) {
+      val row = InternalRow(UTF8String.fromString(text))
+      val cells = kernel.eval(row).asInstanceOf[InternalRow]
+      types.zip(casts).zipWithIndex.foreach { case ((t, cast), i) =>
+        val want = cast.eval(row)
+        val got = if (cells.isNullAt(i)) null else cells.get(i, t)
+        val same = (got, want) match {
+          case (g: java.lang.Float, w: java.lang.Float) =>
+            java.lang.Float.floatToIntBits(g) == java.lang.Float.floatToIntBits(w)
+          case (g: java.lang.Double, w: java.lang.Double) =>
+            java.lang.Double.doubleToLongBits(g) == java.lang.Double.doubleToLongBits(w)
+          case _ => got == want
+        }
+        assert(same, s"'$text' as $t: kernel $got, try_cast $want")
+      }
+      if (!cells.isNullAt(4)) numeric += 1
+    }
+    assert(numeric > 100000, s"only $numeric texts parsed as doubles")
+  }
+
+  test("read, parseQuarantine and parseEvolving keep their output schemas") {
+    import org.apache.spark.sql.types._
+    val cols = (allTypes.map((_, true)) ++ allTypes.map((_, false))).zipWithIndex.map {
+      case ((t, nullable), i) =>
+        FixedColumn(s"c$i", i * 4, 4, t, Alignment.Right, ' ', isNullable = nullable)
+    }
+    val schema = FixedSchema("s", 2, cols)
+    // every column nullable, whatever its dtype and null policy
+    val fields = cols.map(c => StructField(c.name, c.dtype.sparkType))
+    val dir = java.nio.file.Files.createTempDirectory("flfschema")
+    java.nio.file.Files.writeString(dir.resolve("data.flf"), " " * 72 + "\n")
+    assert(FlfParse.read(spark, dir.toString, schema).schema == StructType(fields))
+    val lines = spark.read.text(dir.toString)
+    assert(FlfParse.parseQuarantine(lines, schema).schema == StructType(
+      lines.schema.fields.toSeq ++ fields :+ StructField("_quarantined", BooleanType, false)))
+    // a column the first generation predates null-fills
+    val older = FixedSchema("s", 1, cols.take(9))
+    assert(FlfParse.parseEvolving(Seq((lines, older), (lines, schema))).schema ==
+      StructType(fields))
   }
 }
 

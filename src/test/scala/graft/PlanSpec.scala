@@ -54,6 +54,36 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"), plan)
     val formatted = FlfFormat.format(parsed, schema)
     assert(!formatted.queryExecution.executedPlan.toString.contains("Exchange"))
+    val dir = java.nio.file.Files.createTempDirectory("plan_convert")
+    java.nio.file.Files.writeString(dir.resolve("schema.json"),
+      """{"name":"p","version":1,"columns":[
+        |{"name":"id","offset":0,"length":10,"dtype":"Int64","pad_symbol":"Zero","is_nullable":false},
+        |{"name":"n","offset":10,"length":4,"dtype":"Int32","is_nullable":true},
+        |{"name":"w","offset":14,"length":8,"dtype":"Utf8","alignment":"Left","is_nullable":true}
+        |]}""".stripMargin)
+    java.nio.file.Files.writeString(dir.resolve("in.flf"), "0000000001  42alpha   \n")
+    // the scan's parse: one typed kernel, no per-cell cast, no cell array
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
+    val read = FlfParse.read(spark, s"$dir/in.flf", FixedSchema.fromPath(s"$dir/schema.json"))
+    val optimized = read.queryExecution.optimizedPlan
+    val exprs = optimized.flatMap(_.expressions)
+    assert(FlfParseSpec.kernels(exprs).size == 1, optimized)
+    assert(!exprs.exists(_.exists {
+      case c: Cast => c.evalMode == EvalMode.TRY
+      case _ => false
+    }), optimized)
+    assert(!optimized.toString.contains("__cells"), optimized)
+    // the convert write: one codegen stage under the metrics, no
+    // projection above them
+    import org.apache.spark.sql.execution.{CollectMetricsExec, ProjectExec, WholeStageCodegenExec}
+    val write = PlanSpec.executedPlanOf(spark) {
+      Evolution.convert(spark, s"$dir/in.flf", s"$dir/schema.json", s"$dir/out.parquet")
+    }.find(_.collectFirst { case m: CollectMetricsExec => m }.isDefined)
+      .getOrElse(fail("no write plan with CollectMetrics was executed"))
+    assert(write.collect { case w: WholeStageCodegenExec => w }.size == 1, write)
+    assert(write.collect {
+      case p: ProjectExec if p.collectFirst { case m: CollectMetricsExec => m }.isDefined => p
+    }.isEmpty, write)
   }
 
   test("knn: corpus side is joined against a broadcast query side") {
@@ -917,5 +947,26 @@ class ExtensionsSpec extends AnyFunSuite {
       org.apache.spark.sql.SparkSession.setDefaultSession(shared)
       org.apache.spark.sql.SparkSession.setActiveSession(shared)
     }
+  }
+}
+
+object PlanSpec {
+  /** The executed plans of every query `body` runs, in run order. */
+  def executedPlanOf(spark: SparkSession)(body: => Any)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.sql.graftbridge.GraftListener.waitUntilListenerBusEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    scala.jdk.CollectionConverters.IteratorHasAsScala(plans.iterator()).asScala.toSeq
   }
 }
