@@ -11,9 +11,12 @@ import org.apache.spark.sql.{Column, DataFrame}
   * the mocker's pad-and-serialize step (reference:
   * crates/evolution-writer/src/writer.rs:35-272,
   * crates/evolution-mocker/src/mocker.rs:146-152). One narrow projection,
-  * shuffle-free and codegen'd: each column's string cast feeds one
-  * FormatFixedLine kernel, which pads every cell and writes the row into
-  * one pre-sized buffer.
+  * shuffle-free and codegen'd: every column's typed value feeds one
+  * FormatFixedLine kernel, which renders each cell as the exact text of
+  * Spark's string cast (decimal digits for integers, `true`/`false`,
+  * `String.valueOf` for floats and doubles), pads it and writes the row
+  * into one pre-sized buffer. A column of any other type (decimal, date,
+  * timestamp, binary) reaches the kernel as its `cast("string")`.
   */
 object FlfFormat {
 
@@ -24,7 +27,12 @@ object FlfFormat {
     */
   def format(df: DataFrame, schema: FixedSchema): DataFrame = {
     requireContiguous(schema)
-    df.select(line(schema.columns.map(c => col(c.name)), schema.columns).as("value"))
+    val values = schema.columns.map(c => col(c.name))
+    val types = df.select(values: _*).schema.map(_.dataType)
+    val cells = values.zip(types).map { case (v, t) =>
+      if (FormatFixedLine.renders(t)) v else v.cast("string")
+    }
+    df.select(line(cells, schema.columns).as("value"))
   }
 
   /** Fails unless each column's offset is the sum of the lengths before
@@ -60,15 +68,16 @@ object FlfFormat {
     * → 12 left / 13 right, FIXTURES.md §2). Overlong values truncate to
     * the cell.
     */
-  def formatColumn(value: Column, c: FixedColumn): Column = line(Seq(value), Seq(c))
+  def formatColumn(value: Column, c: FixedColumn): Column =
+    line(Seq(value.cast("string")), Seq(c))
 
   /** The cells of `values` under `cols`, as one line. A value's text is its
-    * string cast, so floats keep Spark's canonical double/float-to-string
+    * string cast's, so floats keep Spark's canonical double/float-to-string
     * form; a NULL renders as an all-pad cell (the flf format has no null
     * marker — parsing an all-pad cell yields NULL for nullable columns, the
     * round-trip-consistent choice).
     */
   private def line(values: Seq[Column], cols: Seq[FixedColumn]): Column =
-    FormatFixedLine(values.map(_.cast("string")), cols.map(_.length),
-      cols.map(_.alignment.code), cols.map(_.padSymbol))
+    FormatFixedLine(values, cols.map(_.length), cols.map(_.alignment.code),
+      cols.map(_.padSymbol))
 }

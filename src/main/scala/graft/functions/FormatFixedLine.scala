@@ -10,23 +10,34 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One-pass fixed-width line writer: pads every cell of a row and writes
-  * them back to back into one pre-sized byte buffer.
+/** One-pass fixed-width line writer: renders and pads every cell of a row
+  * and writes them back to back into one pre-sized byte buffer.
   *
   * Byte-identical to the per-column composition `concat` of
   * `lpad`/`rpad`/`rpad(concat(repeat(pad, ⌊deficit/2⌋), s))` over
   * `s = coalesce(value.cast("string"), "")` (the test oracle,
   * `ComposedFormat` in FlfSpec), by construction rather than by
   * approximation:
-  *  - Children. Each child is its column's `cast("string")`, so a cell's
-  *    text is Spark's own cast (float/double text included), computed once
-  *    per value. A null child renders as an all-pad cell.
-  *  - Count. A cell keeps at most `length` code points of its value,
-  *    counted with `UTF8String.numBytesForFirstByte`, the rule `lpad`,
-  *    `rpad`, `length` and `substring` count a string by, so invalid UTF-8
-  *    keeps exactly the bytes the composed chain keeps. The walk steps
-  *    8 bytes at a time while a word has no high bit set
-  *    (`SliceFixedLine.walk`).
+  *  - Children. Each child is its column's typed value, rendered as the
+  *    exact text of Spark's string cast without building that string:
+  *    - String: its own bytes.
+  *    - Byte, Short, Int, Long: decimal digits, a `-` first when negative
+  *      (`String.valueOf`), written straight into the line; the count of
+  *      characters is known before one is written.
+  *    - Boolean: `true` or `false`.
+  *    - Float, Double: `String.valueOf`, the text the cast produces. The
+  *      JDK renderer stays because JDK 17's digits are not always the
+  *      shortest (JDK-4511638, fixed in 19); the text is ASCII, so its
+  *      chars are copied in, with no `UTF8String` and no code-point walk.
+  *    Any other type reaches the kernel as its `cast("string")`
+  *    (FlfFormat.format). A null child renders as an all-pad cell.
+  *  - Count. A cell keeps at most `length` code points of its text, the
+  *    first ones, as `lpad`/`rpad` truncate. A string is counted with
+  *    `UTF8String.numBytesForFirstByte`, the rule `lpad`, `rpad`, `length`
+  *    and `substring` count a string by, so invalid UTF-8 keeps exactly the
+  *    bytes the composed chain keeps. The walk steps 8 bytes at a time
+  *    while a word has no high bit set (`SliceFixedLine.walk`). Every
+  *    other text is ASCII: one byte per code point.
   *  - Clamping. The kept bytes lie inside the value's bytes: a value whose
   *    last lead byte promises bytes past its end (`41 E2` in a 2-wide cell)
   *    keeps only its own bytes. There `substring` reads past the string, so
@@ -35,15 +46,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *    each written as the pad's UTF-8 bytes: all on the left for Right
   *    (`lpad`), all on the right for Left (`rpad`), and for Center floor
   *    half on the left, ceil half on the right (the reference padder's
-  *    split, FIXTURES.md §2).
+  *    split, FIXTURES.md §2). A run is one array copy out of the cell's pad
+  *    repeated `length` times.
   *  - Buffer. A first pass counts every cell, so the row is one `byte[]`
-  *    of its exact size and one copy per value; the composed chain builds a
-  *    string per pad, per cell and per concat.
+  *    of its exact size; the composed chain builds a string per cast, per
+  *    pad, per cell and per concat.
   *
   * Reference: the mocker's pad-and-serialize step and the fixed-length
   * writer (crates/evolution-mocker/src/mocker.rs:146-152,
-  * crates/evolution-writer/src/writer.rs:35-272), re-expressed as one
-  * Catalyst expression so the value text stays Spark's own string cast.
+  * crates/evolution-writer/src/writer.rs:35-272), which write typed values
+  * into one buffer, re-expressed as one Catalyst expression whose text is
+  * Spark's own string cast.
   *
   * alignCodes: `Alignment.code` — 0 = Left (pad right), 1 = Right (pad
   * left), 2 = Center (both).
@@ -60,27 +73,42 @@ case class FormatFixedLine(children: Seq[Expression], lengths: Seq[Int],
   override def dataType: DataType = StringType
 
   @transient private lazy val spec: FormatFixedLine.Spec =
-    FormatFixedLine.Spec(lengths.toArray, alignCodes.toArray, pads.toArray)
+    FormatFixedLine.Spec(lengths.toArray, alignCodes.toArray, pads.toArray,
+      children.map { c =>
+        val kind = FormatFixedLine.kindOf(c.dataType)
+        require(kind >= 0, s"FormatFixedLine cannot render ${c.dataType}; cast it to string first")
+        kind
+      }.toArray)
 
-  override def eval(input: InternalRow): Any =
-    FormatFixedLine.compute(children.map(_.eval(input).asInstanceOf[UTF8String]).toArray, spec)
+  override def eval(input: InternalRow): Any = {
+    val cells = new FormatFixedLine.Cells(children.length)
+    children.zipWithIndex.foreach { case (c, i) => cells.put(i, c.eval(input)) }
+    FormatFixedLine.compute(cells, spec)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val specRef = ctx.addReferenceObj("formatSpec", spec,
       "graft.functions.FormatFixedLine.Spec")
-    val values = ctx.freshName("values")
+    val cellsClass = "graft.functions.FormatFixedLine.Cells"
+    val cells = ctx.freshName("cells")
     val assigns = children.zipWithIndex.map { case (c, i) =>
       val e = c.genCode(ctx)
+      val set = spec.kinds(i) match {
+        case FormatFixedLine.Utf8 => s"$cells.setText($i, ${e.value});"
+        case FormatFixedLine.Ascii => s"$cells.setText($i, String.valueOf(${e.value}));"
+        case FormatFixedLine.Bool => s"$cells.setBits($i, ${e.value} ? 1L : 0L);"
+        case _ => s"$cells.setBits($i, (long) ${e.value});"
+      }
       s"""${e.code}
-         |$values[$i] = ${e.isNull} ? null : ${e.value};""".stripMargin
+         |if (${e.isNull}) $cells.setNull($i); else $set""".stripMargin
     }
     val body = ctx.splitExpressionsWithCurrentInputs(assigns, "formatFixedLineCells",
-      extraArguments = ("UTF8String[]", values) :: Nil)
+      extraArguments = (cellsClass, cells) :: Nil)
     ev.copy(code = code"""
-      UTF8String[] $values = new UTF8String[${children.length}];
+      $cellsClass $cells = new $cellsClass(${children.length});
       $body
       UTF8String ${ev.value} =
-        graft.functions.FormatFixedLine$$.MODULE$$.compute($values, $specRef);
+        graft.functions.FormatFixedLine$$.MODULE$$.compute($cells, $specRef);
       """, isNull = FalseLiteral)
   }
 
@@ -90,70 +118,173 @@ case class FormatFixedLine(children: Seq[Expression], lengths: Seq[Int],
 
 object FormatFixedLine {
 
-  final case class Spec(lengths: Array[Int], alignCodes: Array[Int], pads: Array[Char]) {
-    /** Each pad as the composed chain's pad literal encodes it. */
-    val padBytes: Array[Array[Byte]] =
-      pads.map(p => UTF8String.fromString(p.toString).getBytes)
+  // cell kinds, by how a value's text is held
+  private final val Utf8 = 0  // a UTF8String, any bytes
+  private final val Ascii = 1 // a java.lang.String of ASCII chars
+  private final val Bool = 2  // 0/1 in `bits`
+  private final val Digits = 3 // an integer in `bits`
+
+  /** Whether the kernel renders a value of type `t` itself; a column of any
+    * other type must reach it as its `cast("string")`.
+    */
+  def renders(t: DataType): Boolean = kindOf(t) >= 0
+
+  /** The cell kind of a value of type `t`, or -1 for a type not rendered. */
+  private def kindOf(t: DataType): Int = t match {
+    case StringType => Utf8
+    case FloatType | DoubleType => Ascii
+    case BooleanType => Bool
+    case ByteType | ShortType | IntegerType | LongType => Digits
+    case _ => -1
   }
 
-  /** The formatting kernel (also invoked from generated code): one line
-    * from every cell's string value, a null value being an empty one.
+  final case class Spec(lengths: Array[Int], alignCodes: Array[Int], pads: Array[Char],
+                        kinds: Array[Int]) {
+    /** Each pad's width in bytes, as the composed chain's pad literal
+      * encodes it.
+      */
+    val padWidths: Array[Int] = pads.map(p => UTF8String.fromString(p.toString).numBytes)
+    /** Each cell's pad `length` times over: k pads are its first
+      * k × pad-width bytes, so any run is one array copy.
+      */
+    val padRuns: Array[Array[Byte]] = pads.indices.map(i =>
+      UTF8String.fromString(pads(i).toString * lengths(i)).getBytes).toArray
+  }
+
+  /** One row's cells: a null flag, an integer or boolean in `bits`, or a
+    * text in `texts` (a string's UTF8String, a float's `String.valueOf`).
+    * `widths` is the kernel's own scratch.
     */
-  def compute(values: Array[UTF8String], spec: Spec): UTF8String = {
-    val n = values.length
-    // per cell: value bytes kept (low 32 bits), pad characters (high 32)
-    val cells = new Array[Long](n)
+  final class Cells(n: Int) {
+    private[FormatFixedLine] val nulls = new Array[Boolean](n)
+    private[FormatFixedLine] val bits = new Array[Long](n)
+    private[FormatFixedLine] val texts = new Array[AnyRef](n)
+    // per cell: bytes kept (low 32 bits), pad characters (high 32)
+    private[FormatFixedLine] val widths = new Array[Long](n)
+
+    def setNull(i: Int): Unit = nulls(i) = true
+    def setBits(i: Int, v: Long): Unit = { nulls(i) = false; bits(i) = v }
+    def setText(i: Int, v: AnyRef): Unit = { nulls(i) = false; texts(i) = v }
+
+    /** Cell `i` from its evaluated (boxed) value. */
+    def put(i: Int, v: Any): Unit = v match {
+      case null => setNull(i)
+      case s: UTF8String => setText(i, s)
+      case b: Boolean => setBits(i, if (b) 1L else 0L)
+      case f: Float => setText(i, String.valueOf(f))
+      case d: Double => setText(i, String.valueOf(d))
+      case n: Number => setBits(i, n.longValue)
+    }
+  }
+
+  private val True = "true".getBytes("UTF-8")
+  private val False = "false".getBytes("UTF-8")
+
+  /** The formatting kernel (also invoked from generated code): one line
+    * from every cell, a null one being empty.
+    */
+  def compute(cells: Cells, spec: Spec): UTF8String = {
+    val n = spec.kinds.length
+    val widths = cells.widths
     var size = 0L
     var i = 0
     while (i < n) {
-      val v = values(i)
       val len = spec.lengths(i)
-      val cell =
-        if (v == null) len.toLong << 32
-        else SliceFixedLine.walk(v.getBaseObject, v.getBaseOffset, v.numBytes, 0, len)
-      cells(i) = cell
-      size += cell.toInt + (cell >>> 32) * spec.padBytes(i).length
+      val w =
+        if (cells.nulls(i)) len.toLong << 32
+        else spec.kinds(i) match {
+          case Utf8 =>
+            val v = cells.texts(i).asInstanceOf[UTF8String]
+            SliceFixedLine.walk(v.getBaseObject, v.getBaseOffset, v.numBytes, 0, len)
+          case Ascii => fit(cells.texts(i).asInstanceOf[String].length, len)
+          case Bool => fit(if (cells.bits(i) != 0) True.length else False.length, len)
+          case _ => fit(decimalChars(cells.bits(i)), len)
+        }
+      widths(i) = w
+      size += w.toInt + (w >>> 32) * spec.padWidths(i)
       i += 1
     }
     val buf = new Array[Byte](Math.toIntExact(size))
     var pos = 0
     i = 0
     while (i < n) {
-      val kept = cells(i).toInt
-      val short = (cells(i) >>> 32).toInt
+      val kept = widths(i).toInt
+      val short = (widths(i) >>> 32).toInt
       val left = spec.alignCodes(i) match {
         case 0 => 0
         case 1 => short
         case _ => short / 2
       }
-      pos = fill(buf, pos, spec.padBytes(i), left)
-      if (kept > 0) {
-        val v = values(i)
-        Platform.copyMemory(v.getBaseObject, v.getBaseOffset, buf,
-          Platform.BYTE_ARRAY_OFFSET + pos, kept)
-        pos += kept
+      val run = spec.padRuns(i)
+      val padWidth = spec.padWidths(i)
+      System.arraycopy(run, 0, buf, pos, left * padWidth)
+      pos += left * padWidth
+      if (kept > 0) spec.kinds(i) match {
+        case Utf8 =>
+          val v = cells.texts(i).asInstanceOf[UTF8String]
+          Platform.copyMemory(v.getBaseObject, v.getBaseOffset, buf,
+            Platform.BYTE_ARRAY_OFFSET + pos, kept)
+        case Ascii => copyAscii(cells.texts(i).asInstanceOf[String], kept, buf, pos)
+        case Bool =>
+          System.arraycopy(if (cells.bits(i) != 0) True else False, 0, buf, pos, kept)
+        case _ =>
+          val v = cells.bits(i)
+          writeDecimal(buf, pos, v, decimalChars(v), kept)
       }
-      pos = fill(buf, pos, spec.padBytes(i), short - left)
+      pos += kept
+      System.arraycopy(run, 0, buf, pos, (short - left) * padWidth)
+      pos += (short - left) * padWidth
       i += 1
     }
     UTF8String.fromBytes(buf)
   }
 
-  /** Writes `count` copies of `pad` at `from`; returns the end. */
-  private def fill(buf: Array[Byte], from: Int, pad: Array[Byte], count: Int): Int =
-    if (pad.length == 1) {
-      java.util.Arrays.fill(buf, from, from + count, pad(0))
-      from + count
-    } else {
-      var p = from
-      var k = 0
-      while (k < count) {
-        System.arraycopy(pad, 0, buf, p, pad.length)
-        p += pad.length
-        k += 1
-      }
-      p
+  /** The first `count` chars of the ASCII `s`, one byte each, at `pos`. */
+  @annotation.nowarn("cat=deprecation")
+  private def copyAscii(s: String, count: Int, buf: Array[Byte], pos: Int): Unit =
+    s.getBytes(0, count, buf, pos) // the deprecated form copies each char's low byte
+
+  /** A text of `chars` one-byte code points in a `len`-wide cell. */
+  private def fit(chars: Int, len: Int): Long = {
+    val kept = math.min(chars, len)
+    ((len - kept).toLong << 32) | kept
+  }
+
+  /** Characters of `v`'s decimal text (`String.valueOf`), sign included. */
+  private def decimalChars(v: Long): Int =
+    if (v == Long.MinValue) 20
+    else {
+      val x = math.abs(v)
+      // ⌊log10(x)⌋ or one less, from the bit length (1233 / 4096 ≈ log10 2)
+      val t = ((64 - java.lang.Long.numberOfLeadingZeros(x)) * 1233) >>> 12
+      val digits = math.max(1, if (x >= Pow10(t)) t + 1 else t)
+      if (v < 0) digits + 1 else digits
     }
+
+  private val Pow10 = Array.iterate(1L, 19)(_ * 10) // 10^0 to 10^18
+
+  /** Writes the first `kept` of the `chars` characters of `v`'s decimal
+    * text at `pos`: the dropped trailing digits are divided off first.
+    */
+  private def writeDecimal(buf: Array[Byte], pos: Int, v: Long, chars: Int, kept: Int): Unit = {
+    var q = if (v < 0) v else -v
+    var drop = chars - kept
+    while (drop > 0) { q /= 10; drop -= 1 }
+    val first = if (v < 0) { buf(pos) = '-'; pos + 1 } else pos
+    var p = pos + kept
+    while (p - 2 >= first) { // two digits a step
+      val q100 = q / 100
+      val r = ((q100 * 100 - q) << 1).toInt
+      q = q100
+      p -= 2
+      buf(p) = DigitPairs(r)
+      buf(p + 1) = DigitPairs(r + 1)
+    }
+    if (p > first) buf(first) = ('0' - q).toByte
+  }
+
+  // "00" to "99", back to back
+  private val DigitPairs: Array[Byte] = (0 until 100).flatMap(k => f"$k%02d".getBytes).toArray
 
   def apply(values: Seq[Column], lengths: Seq[Int], alignCodes: Seq[Int],
             pads: Seq[Char]): Column =

@@ -115,30 +115,40 @@ object FixedSchema {
     val root =
       try mapper.readTree(json)
       catch { case e: Exception => throw SchemaError(s"malformed schema JSON: ${e.getMessage}") }
-    def req(node: JsonNode, field: String): JsonNode = {
+    // `field` of `node`, which must hold JSON of the kind `want` names:
+    // Jackson's asInt/asBoolean/asText coerce ("abc" → 0, 7.9 → 7, "yes" →
+    // false) where serde rejects the field. `where` names the column.
+    def req(node: JsonNode, field: String, want: String, ok: JsonNode => Boolean,
+            where: String = ""): JsonNode = {
       val n = node.get(field)
-      if (n == null) throw SchemaError(s"missing required field '$field'")
+      if (n == null) throw SchemaError(s"${where}missing required field '$field'")
+      if (!ok(n)) throw SchemaError(s"${where}field '$field' must be $want, got $n")
       n
     }
-    val columns = req(root, "columns").elements().asScala.toSeq.map { c =>
-      FixedColumn(
-        name = req(c, "name").asText(),
-        offset = req(c, "offset").asInt(),
-        length = req(c, "length").asInt(),
-        dtype = FlfType.fromString(req(c, "dtype").asText()),
-        alignment =
-          if (c.has("alignment")) Alignment.fromString(c.get("alignment").asText())
-          else Alignment.Right,
-        padSymbol =
-          if (c.has("pad_symbol")) PadSymbol.fromString(c.get("pad_symbol").asText())
-          else ' ',
-        isNullable = req(c, "is_nullable").asBoolean())
-    }
+    val isText = (n: JsonNode) => n.isTextual
+    val isInt = (n: JsonNode) => n.isIntegralNumber && n.canConvertToInt
+    val columns = req(root, "columns", "an array", _.isArray).elements().asScala.toSeq
+      .zipWithIndex.map { case (c, i) =>
+        val named = c.get("name")
+        val where =
+          if (named != null && named.isTextual) s"column '${named.asText()}': " else s"column $i: "
+        def str(field: String): String = req(c, field, "a string", isText, where).asText()
+        FixedColumn(
+          name = str("name"),
+          offset = req(c, "offset", "an integer", isInt, where).asInt(),
+          length = req(c, "length", "an integer", isInt, where).asInt(),
+          dtype = FlfType.fromString(str("dtype")),
+          alignment = if (c.has("alignment")) Alignment.fromString(str("alignment")) else Alignment.Right,
+          padSymbol = if (c.has("pad_symbol")) PadSymbol.fromString(str("pad_symbol")) else ' ',
+          isNullable = req(c, "is_nullable", "true or false", _.isBoolean, where).asBoolean())
+      }
     if (columns.isEmpty) throw SchemaError("schema must declare at least one column (minItems: 1)")
     columns.foreach { c =>
       if (c.length <= 0) throw SchemaError(s"column '${c.name}': length must be positive")
       if (c.offset < 0) throw SchemaError(s"column '${c.name}': offset must be non-negative")
     }
-    FixedSchema(req(root, "name").asText(), req(root, "version").asLong(), columns)
+    FixedSchema(req(root, "name", "a string", isText).asText(),
+      req(root, "version", "an integer", n => n.isIntegralNumber && n.canConvertToLong).asLong(),
+      columns)
   }
 }

@@ -15,6 +15,26 @@ object SparkTestSession {
       java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Runs `body` with the session confs `kv` set, restoring the prior values after. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val prior = kv.map { case (k, _) => k -> conf.getOption(k) }
+    kv.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  /** Generated code that fails to compile fails the query instead of
+    * silently falling back to `eval`: whole-stage codegen
+    * (`codegen.fallback`) and the projections outside it (`factoryMode`).
+    */
+  val strictCodegen: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.fallback" -> "false",
+    "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
 }
 
 class SchemaSpec extends AnyFunSuite {
@@ -65,6 +85,23 @@ class SchemaSpec extends AnyFunSuite {
       """{"name":"x","version":1,"columns":[{"name":"a","offset":0,"length":1,"dtype":"Utf8","pad_symbol":"Tilde","is_nullable":true}]}"""))
     assertThrows[SchemaError](FixedSchema.fromJson("""{"name":"x","version":1,"columns":[]}"""))
     assertThrows[SchemaError](FixedSchema.fromJson("""{"version":1,"columns":[]}"""))
+    // a mistyped field fails, naming its column and itself, where Jackson's
+    // asInt/asBoolean would coerce it ("abc" → 0, 7.9 → 7, "yes" → false)
+    def mistyped(name: String = "\"a\"", offset: String = "0", length: String = "1",
+                 nullable: String = "true", version: String = "1"): String =
+      intercept[SchemaError](FixedSchema.fromJson(
+        s"""{"name":"x","version":$version,"columns":[{"name":$name,"offset":$offset,""" +
+          s""""length":$length,"dtype":"Utf8","is_nullable":$nullable}]}""")).getMessage
+    assert(mistyped(offset = "\"abc\"") ==
+      """column 'a': field 'offset' must be an integer, got "abc"""")
+    assert(mistyped(offset = "null") == "column 'a': field 'offset' must be an integer, got null")
+    assert(mistyped(offset = "4294967296").startsWith("column 'a': field 'offset'"))
+    assert(mistyped(length = "7.9") == "column 'a': field 'length' must be an integer, got 7.9")
+    assert(mistyped(nullable = "\"yes\"") ==
+      """column 'a': field 'is_nullable' must be true or false, got "yes"""")
+    assert(mistyped(nullable = "1").startsWith("column 'a': field 'is_nullable'"))
+    assert(mistyped(name = "5") == "column 0: field 'name' must be a string, got 5")
+    assert(mistyped(version = "\"1\"") == """field 'version' must be an integer, got "1"""")
   }
 
   test("all 21 pad symbols resolve") {
@@ -579,6 +616,7 @@ object ComposedFormat {
 
 /** FormatFixedLine (fused one-buffer line writer) must write the bytes the
   * composed chain writes, on every alignment, pad, dtype and UTF-8 edge.
+  * Generated code runs with the codegen fallback off.
   */
 class FormatFixedLineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -587,32 +625,60 @@ class FormatFixedLineSpec extends AnyFunSuite {
   import org.apache.spark.sql.{DataFrame, Row}
   import scala.jdk.CollectionConverters._
 
+  override def withFixture(test: NoArgTest) =
+    SparkTestSession.withConf(SparkTestSession.strictCodegen: _*)(super.withFixture(test))
+
   private def hexLines(lines: DataFrame): Seq[String] =
     lines.select(hex(col("value"))).collect().map(_.getString(0)).toSeq
 
-  test("FormatFixedLine == composed chain byte for byte on a seeded fuzz") {
-    val rnd = new scala.util.Random(6)
-    // the 21 named pads, 'é' (2 UTF-8 bytes) and '€' (3 bytes)
-    val pads = PadSymbol.table.values.toSeq.sorted ++ Seq('é', '€')
-    val aligns = Seq(Alignment.Left, Alignment.Right, Alignment.Center)
-    val kinds = Seq[(String, FlfType, DataType)](
-      ("text", FlfType.Utf8T, StringType), ("bytes", FlfType.Utf8T, BinaryType),
-      ("f64", FlfType.Float64T, DoubleType), ("f32", FlfType.Float32T, FloatType),
-      ("i64", FlfType.Int64T, LongType), ("i32", FlfType.Int32T, IntegerType),
-      ("i16", FlfType.Int16T, ShortType), ("bool", FlfType.BooleanT, BooleanType))
-    // ASCII (pads among them), 2/3-byte BMP and astral (surrogate-pair) chars
-    val textPool = Array("a", "Z", " ", "0", "*", "é", "漢", "€", "😀", "𐀀")
-    // ASCII, whole 'é' and '€', lone continuation bytes, bare 2/3/4-byte leads, 0xFF
-    val bytePool: Array[Array[Byte]] = Array(
-      Array(0x30), Array(0x2A), Array(0x61), Array(0xC3, 0xA9), Array(0xE2, 0x82, 0xAC),
-      Array(0x80), Array(0xA9), Array(0xBF), Array(0xC3), Array(0xE2), Array(0xF0),
-      Array(0xFF)).map(_.map(_.toByte))
-    val doubles = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0, 0.0,
-      Double.MinPositiveValue, Double.MaxValue, -1e-7, 1.5, 123456.789)
-    val floats = Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, -0.0f, 0.0f,
-      Float.MinPositiveValue, Float.MaxValue, -1e-7f, 1.5f, 12345.6f)
+  // the 21 named pads, 'é' (2 UTF-8 bytes) and '€' (3 bytes)
+  private val pads = PadSymbol.table.values.toSeq.sorted ++ Seq('é', '€')
+  private val aligns = Seq(Alignment.Left, Alignment.Right, Alignment.Center)
+  // the column's dtype only names it: FlfFormat renders the value's Spark type
+  private val kinds = Seq[(String, FlfType, DataType)](
+    ("text", FlfType.Utf8T, StringType), ("bytes", FlfType.Utf8T, BinaryType),
+    ("f64", FlfType.Float64T, DoubleType), ("f32", FlfType.Float32T, FloatType),
+    ("i64", FlfType.Int64T, LongType), ("i32", FlfType.Int32T, IntegerType),
+    ("i16", FlfType.Int16T, ShortType), ("i8", FlfType.Int16T, ByteType),
+    ("bool", FlfType.BooleanT, BooleanType), ("dec", FlfType.Utf8T, DecimalType(12, 3)),
+    ("date", FlfType.Utf8T, DateType), ("ts", FlfType.Utf8T, TimestampType))
+  // ASCII (pads among them), 2/3-byte BMP and astral (surrogate-pair) chars
+  private val textPool = Array("a", "Z", " ", "0", "*", "é", "漢", "€", "😀", "𐀀")
+  // ASCII, whole 'é' and '€', lone continuation bytes, bare 2/3/4-byte leads, 0xFF
+  private val bytePool: Array[Array[Byte]] = Array(
+    Array(0x30), Array(0x2A), Array(0x61), Array(0xC3, 0xA9), Array(0xE2, 0x82, 0xAC),
+    Array(0x80), Array(0xA9), Array(0xBF), Array(0xC3), Array(0xE2), Array(0xF0),
+    Array(0xFF)).map(_.map(_.toByte))
+  private val doubles = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0,
+    0.0, Double.MinPositiveValue, Double.MaxValue, -1e-7, 1.5, 123456.789)
+  private val floats = Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, -0.0f,
+    0.0f, Float.MinPositiveValue, Float.MaxValue, -1e-7f, 1.5f, 12345.6f)
+
+  /** `trials` random layouts of `columns` cells each, with `rows` random
+    * rows: FlfFormat.format writes the composed chain's bytes through
+    * generated code (an RDD relation) and through `eval` (a local relation,
+    * which the optimizer folds).
+    */
+  private def fuzzCheck(seed: Int, trials: Int, columns: scala.util.Random => Int,
+                        rows: Int): Unit = {
+    val rnd = new scala.util.Random(seed)
     // how many text values fall short of, fit exactly and overflow their cell
     val fit = Array(0, 0, 0)
+    // integral values longer than their cell, and the types' extremes written
+    var cut = 0
+    var extremes = Set.empty[(Int, Boolean)] // (bits, is MaxValue)
+
+    // MinValue, MaxValue, ±(a power of ten or one less), where the digit
+    // count steps, or a random value of a random magnitude, `bits` wide
+    def integral(bits: Int): Long = rnd.nextInt(7) match {
+      case 0 => -1L << (bits - 1)
+      case 1 => ~(-1L << (bits - 1))
+      case 2 =>
+        val max = ~(-1L << (bits - 1))
+        val tens = Iterator.iterate(1L)(_ * 10).takeWhile(p => p > 0 && p <= max).toSeq
+        (tens(rnd.nextInt(tens.size)) - rnd.nextInt(2)) * (if (rnd.nextBoolean()) 1 else -1)
+      case _ => rnd.nextLong() >> (64 - bits + rnd.nextInt(bits))
+    }
 
     def value(kind: String, len: Int): Any = kind match {
       case "text" =>
@@ -632,14 +698,27 @@ class FormatFixedLineSpec extends AnyFunSuite {
       case "f32" =>
         if (rnd.nextBoolean()) floats(rnd.nextInt(floats.size))
         else (rnd.nextGaussian() * math.pow(10, rnd.nextInt(16) - 4)).toFloat
-      case "i64" => if (rnd.nextInt(4) == 0) Long.MinValue else rnd.nextLong() >> rnd.nextInt(64)
-      case "i32" => if (rnd.nextInt(4) == 0) Int.MinValue else rnd.nextInt() >> rnd.nextInt(32)
-      case "i16" => (rnd.nextInt(65536) - 32768).toShort
+      case "i64" | "i32" | "i16" | "i8" =>
+        val bits = kind.drop(1).toInt
+        val v = integral(bits)
+        if (v.toString.length > len) cut += 1
+        val typed: Any = bits match {
+          case 64 => v
+          case 32 => v.toInt
+          case 16 => v.toShort
+          case _ => v.toByte
+        }
+        if (v == (-1L << (bits - 1)) || v == ~(-1L << (bits - 1))) extremes += ((bits, v > 0))
+        typed
       case "bool" => rnd.nextBoolean()
+      case "dec" =>
+        new java.math.BigDecimal(java.math.BigInteger.valueOf(rnd.nextLong() % 1000000000000L), 3)
+      case "date" => new java.sql.Date((rnd.nextLong() % 4000000000000L) / 86400000L * 86400000L)
+      case "ts" => new java.sql.Timestamp(rnd.nextLong() % 4000000000000L)
     }
 
-    for (trial <- 0 until 40) {
-      val spec = Seq.fill(1 + rnd.nextInt(12))((kinds(rnd.nextInt(kinds.size)),
+    for (trial <- 0 until trials) {
+      val spec = Seq.fill(columns(rnd))((kinds(rnd.nextInt(kinds.size)),
         1 + rnd.nextInt(10), aligns(rnd.nextInt(3)), pads(rnd.nextInt(pads.size))))
       val offsets = spec.scanLeft(0)(_ + _._2)
       val schema = FixedSchema("fuzz", 1, spec.zipWithIndex.map { case (((_, t, _), len, a, p), i) =>
@@ -647,20 +726,36 @@ class FormatFixedLineSpec extends AnyFunSuite {
       })
       val raw = StructType(spec.zipWithIndex.map { case (((_, _, dt), _, _, _), i) =>
         StructField(s"c$i", dt) })
-      val rows = Seq.fill(40)(Row.fromSeq(spec.map { case ((kind, _, _), len, _, _) =>
+      val data = Seq.fill(rows)(Row.fromSeq(spec.map { case ((kind, _, _), len, _, _) =>
         if (rnd.nextInt(8) == 0) null else value(kind, len)
       }))
-      // binary columns reach the formatter as unvalidated strings
-      def typed(df: DataFrame): DataFrame = df.select(raw.fields.toSeq.map(f =>
-        if (f.dataType == BinaryType) col(f.name).cast("string").as(f.name) else col(f.name)): _*)
-      // an RDD relation runs generated code; a local one folds through eval
-      val generated = typed(spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), raw))
-      val interpreted = typed(spark.createDataFrame(rows.asJava, raw))
+      val generated = spark.createDataFrame(spark.sparkContext.parallelize(data, 2), raw)
+      val interpreted = spark.createDataFrame(data.asJava, raw)
       val expected = hexLines(ComposedFormat.format(generated, schema))
       assert(hexLines(FlfFormat.format(generated, schema)) == expected, s"trial $trial: $schema")
       assert(hexLines(FlfFormat.format(interpreted, schema)) == expected, s"trial $trial: $schema")
     }
     assert(fit.forall(_ > 0), fit.mkString("short/exact/overlong text values: ", "/", ""))
+    assert(cut > 0, "no integral value overflows its cell")
+    assert(extremes.size == 8, s"MinValue/MaxValue written, as (bits, is max): $extremes")
+  }
+
+  test("FormatFixedLine == composed chain byte for byte on a seeded fuzz") {
+    fuzzCheck(seed = 6, trials = 40, columns = rnd => 1 + rnd.nextInt(12), rows = 40)
+  }
+
+  test("FormatFixedLine == composed chain on a schema whose cells split into helper methods") {
+    // Past codegen's field limit the projection leaves whole-stage codegen,
+    // and its generated code fills the cells in helper methods.
+    val maxFields = spark.conf.get("spark.sql.codegen.maxFields").toInt
+    val types = kinds.map(_._3).filter(graft.functions.FormatFixedLine.renders)
+    val kernel = graft.functions.FormatFixedLine(Seq.tabulate(maxFields + 20)(i =>
+      org.apache.spark.sql.catalyst.expressions.BoundReference(i, types(i % types.size), true)),
+      Seq.fill(maxFields + 20)(4), Seq.fill(maxFields + 20)(1), Seq.fill(maxFields + 20)(' '))
+    val ctx = new org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+    kernel.genCode(ctx)
+    assert(ctx.declareAddedFunctions().contains("formatFixedLineCells"))
+    fuzzCheck(seed = 8, trials = 2, columns = _ => maxFields + 20, rows = 60)
   }
 
   test("a value whose last lead byte promises bytes past its end keeps only its own bytes") {
@@ -686,23 +781,37 @@ class FormatFixedLineSpec extends AnyFunSuite {
     }
   }
 
-  test("format plans one FormatFixedLine: no pad/concat chain, one string cast per non-string column") {
+  test("format plans one FormatFixedLine: no pad/concat chain, a string cast only per decimal or date column") {
     import org.apache.spark.sql.catalyst.expressions.{Cast, Concat, StringLPad, StringRPad}
+    import org.apache.spark.sql.functions.date_from_unix_date
     val schema = FixedSchema(name = "p", version = 1, columns = Seq(
       FixedColumn("i16", 0, 7, FlfType.Int16T, Alignment.Right, '0', isNullable = true),
-      FixedColumn("i64", 7, 14, FlfType.Int64T, Alignment.Right, ' ', isNullable = true),
-      FixedColumn("f64", 21, 24, FlfType.Float64T, Alignment.Left, ' ', isNullable = true),
-      FixedColumn("u", 45, 12, FlfType.Utf8T, Alignment.Center, '.', isNullable = true),
-      FixedColumn("l", 57, 12, FlfType.LargeUtf8T, Alignment.Left, ' ', isNullable = true),
-      FixedColumn("b", 69, 7, FlfType.BooleanT, Alignment.Left, '-', isNullable = true)))
-    val plan = FlfFormat.format(Mocker.mock(spark, schema, 10, seed = 1), schema)
-      .queryExecution.optimizedPlan
-    val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
-    assert(exprs.count(_.isInstanceOf[graft.functions.FormatFixedLine]) == 1, plan)
-    assert(!exprs.exists(e => e.isInstanceOf[StringLPad] || e.isInstanceOf[StringRPad] ||
-      e.isInstanceOf[Concat]), plan)
-    assert(exprs.count { case c: Cast => c.dataType == StringType; case _ => false } ==
-      schema.columns.count(_.dtype.sparkType != StringType), plan)
+      FixedColumn("i32", 7, 9, FlfType.Int32T, Alignment.Right, ' ', isNullable = true),
+      FixedColumn("i64", 16, 14, FlfType.Int64T, Alignment.Right, ' ', isNullable = true),
+      FixedColumn("f32", 30, 16, FlfType.Float32T, Alignment.Left, ' ', isNullable = true),
+      FixedColumn("f64", 46, 24, FlfType.Float64T, Alignment.Left, ' ', isNullable = true),
+      FixedColumn("u", 70, 12, FlfType.Utf8T, Alignment.Center, '.', isNullable = true),
+      FixedColumn("l", 82, 12, FlfType.LargeUtf8T, Alignment.Left, ' ', isNullable = true),
+      FixedColumn("b", 94, 7, FlfType.BooleanT, Alignment.Left, '-', isNullable = true)))
+    // the dtype only names the column: the decimal and date cells take the cast
+    val wider = FixedSchema("q", 1, schema.columns ++ Seq(
+      FixedColumn("i8", 101, 4, FlfType.Int16T), FixedColumn("dec", 105, 12, FlfType.Utf8T),
+      FixedColumn("day", 117, 10, FlfType.Utf8T)))
+    val mocked = Mocker.mock(spark, schema, 10, seed = 1)
+    def stringCasts(lines: DataFrame): Seq[DataType] = {
+      val plan = lines.queryExecution.optimizedPlan
+      val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      assert(exprs.count(_.isInstanceOf[graft.functions.FormatFixedLine]) == 1, plan)
+      assert(!exprs.exists(e => e.isInstanceOf[StringLPad] || e.isInstanceOf[StringRPad] ||
+        e.isInstanceOf[Concat]), plan)
+      exprs.collect { case c: Cast if c.dataType == StringType => c.child.dataType }
+    }
+    // boolean, integral, float and double cells are rendered by the kernel
+    assert(stringCasts(FlfFormat.format(mocked, schema)).isEmpty)
+    val typed = mocked.select(col("*"), col("i16").cast("byte").as("i8"),
+      col("i64").cast("decimal(12,2)").as("dec"), date_from_unix_date(col("i16")).as("day"))
+    val casts = stringCasts(FlfFormat.format(typed, wider))
+    assert(casts.size == 2 && casts.toSet == Set(DecimalType(12, 2), DateType), casts)
   }
 
   private val firstCell = Seq(FixedColumn("a", 0, 4, FlfType.Utf8T))
@@ -728,14 +837,19 @@ class FormatFixedLineSpec extends AnyFunSuite {
 
 /** SliceFixedLine (fused one-pass cell extraction) must agree with the
   * composed substring/trim path on every alignment, pad, multi-byte and
-  * invalid UTF-8 edge — including mocked data for every dtype.
+  * invalid UTF-8 edge — including mocked data for every dtype. Lines come
+  * from an RDD relation, so the kernel runs as generated code, with the
+  * codegen fallback off; a local relation would fold through `eval`.
   */
 class SliceFixedLineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
+  override def withFixture(test: NoArgTest) =
+    SparkTestSession.withConf(SparkTestSession.strictCodegen: _*)(super.withFixture(test))
+
   private def check(schema: FixedSchema, lines: Seq[String]): Unit = {
-    val df = lines.toDF("value")
+    val df = spark.sparkContext.parallelize(lines, 2).toDF("value")
     val fused = FlfParse.parse(df, schema).collect().map(_.toSeq)
     val composed = FlfParse.parseComposed(df, schema).collect().map(_.toSeq)
     assert(fused.toSeq == composed.toSeq)
@@ -788,7 +902,8 @@ class SliceFixedLineSpec extends AnyFunSuite {
 
   /** Lines of raw bytes, cast to string with no UTF-8 validation. */
   private def byteLines(lines: Seq[Array[Byte]]): org.apache.spark.sql.DataFrame =
-    lines.toDF("b").select(org.apache.spark.sql.functions.col("b").cast("string").as("value"))
+    spark.sparkContext.parallelize(lines, 2).toDF("b")
+      .select(org.apache.spark.sql.functions.col("b").cast("string").as("value"))
 
   test("fused slicer == composed path byte for byte on random invalid UTF-8") {
     val schema = FixedSchema(name = "r", version = 1, columns = Seq(
@@ -970,15 +1085,9 @@ class SliceFixedLineSpec extends AnyFunSuite {
   }
 
   test("typed kernel == composed path without whole-stage codegen or generated code") {
-    val conf = spark.conf
-    val keys = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val prior = keys.map { case (k, _) => k -> conf.getOption(k) }
-    keys.foreach { case (k, v) => conf.set(k, v) }
-    try fuzzCheck(seed = 29, schemas = 4, rows = 300)
-    finally prior.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
+    SparkTestSession.withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+      fuzzCheck(seed = 29, schemas = 4, rows = 300)
     }
   }
 
