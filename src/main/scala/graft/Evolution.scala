@@ -231,7 +231,10 @@ object Evolution {
     * `java -jar` / sbt-run path the harness uses) does the builder fall
     * back to `local[$SPARK_GRAFT_CPUS]` with shuffle parallelism pinned
     * to the core count — the right local default, and previously a pin
-    * that silently overrode YARN/k8s submission into local mode.
+    * that silently overrode YARN/k8s submission into local mode. Unset,
+    * `SPARK_GRAFT_CPUS` is the machine's available processors; the CLI,
+    * `Bench`, `Profile` and `Verify` all open their session here, so this
+    * is their one default.
     */
   def session(appName: String = "evolutionspark"): SparkSession = {
     val b = SparkSession.builder()
@@ -252,7 +255,8 @@ object Evolution {
     envMaster.filter(_ => !sys.props.contains("spark.master"))
       .foreach(b.master)
     if (!sys.props.contains("spark.master") && envMaster.isEmpty) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+        Runtime.getRuntime.availableProcessors.toString)
       b.master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.ui.enabled", "false")

@@ -13,10 +13,14 @@ import org.apache.spark.sql.{Column, DataFrame}
   * crates/evolution-mocker/src/mocker.rs:146-152). One narrow projection,
   * shuffle-free and codegen'd: every column's typed value feeds one
   * FormatFixedLine kernel, which renders each cell as the exact text of
-  * Spark's string cast (decimal digits for integers, `true`/`false`,
-  * `String.valueOf` for floats and doubles), pads it and writes the row
-  * into one pre-sized buffer. A column of any other type (decimal, date,
-  * timestamp, binary) reaches the kernel as its `cast("string")`.
+  * Spark's string cast (decimal digits for integers, `true`/`false`, and
+  * for floats and doubles `FloatText`: JDK 17's `String.valueOf` digits
+  * from a shortest-digit core on finite normal values below 2^53, or 2^24
+  * for floats, and `String.valueOf`'s own chars for every other value or
+  * on a runtime that fails FloatText's class-init witness check), pads it
+  * and writes the row into one pre-sized buffer. A column of any other
+  * type (decimal, date, timestamp, binary) reaches the kernel as its
+  * `cast("string")`.
   */
 object FlfFormat {
 

@@ -25,10 +25,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *      (`String.valueOf`), written straight into the line; the count of
   *      characters is known before one is written.
   *    - Boolean: `true` or `false`.
-  *    - Float, Double: `String.valueOf`, the text the cast produces. The
-  *      JDK renderer stays because JDK 17's digits are not always the
-  *      shortest (JDK-4511638, fixed in 19); the text is ASCII, so its
-  *      chars are copied in, with no `UTF8String` and no code-point walk.
+  *    - Float, Double: `FloatText`, the text the cast produces
+  *      (`String.valueOf`), rendered into a per-cell scratch in the first
+  *      pass and copied in. JDK 17's digits are not always the shortest
+  *      (JDK-4511638, fixed in 19), so FloatText reproduces JDK 17's rule
+  *      for normal values below 2^53 (2^24 for floats) and copies
+  *      `String.valueOf` for every other value, and for every value on a
+  *      runtime whose `String.valueOf` fails its witness check.
   *    Any other type reaches the kernel as its `cast("string")`
   *    (FlfFormat.format). A null child renders as an all-pad cell.
   *  - Count. A cell keeps at most `length` code points of its text, the
@@ -95,7 +98,8 @@ case class FormatFixedLine(children: Seq[Expression], lengths: Seq[Int],
       val e = c.genCode(ctx)
       val set = spec.kinds(i) match {
         case FormatFixedLine.Utf8 => s"$cells.setText($i, ${e.value});"
-        case FormatFixedLine.Ascii => s"$cells.setText($i, String.valueOf(${e.value}));"
+        case FormatFixedLine.Float32 => s"$cells.setBits($i, Float.floatToRawIntBits(${e.value}));"
+        case FormatFixedLine.Float64 => s"$cells.setBits($i, Double.doubleToRawLongBits(${e.value}));"
         case FormatFixedLine.Bool => s"$cells.setBits($i, ${e.value} ? 1L : 0L);"
         case _ => s"$cells.setBits($i, (long) ${e.value});"
       }
@@ -119,10 +123,11 @@ case class FormatFixedLine(children: Seq[Expression], lengths: Seq[Int],
 object FormatFixedLine {
 
   // cell kinds, by how a value's text is held
-  private final val Utf8 = 0  // a UTF8String, any bytes
-  private final val Ascii = 1 // a java.lang.String of ASCII chars
-  private final val Bool = 2  // 0/1 in `bits`
-  private final val Digits = 3 // an integer in `bits`
+  private final val Utf8 = 0    // a UTF8String, any bytes
+  private final val Float32 = 1 // a float's bits in `bits`
+  private final val Float64 = 2 // a double's bits in `bits`
+  private final val Bool = 3    // 0/1 in `bits`
+  private final val Digits = 4  // an integer in `bits`
 
   /** Whether the kernel renders a value of type `t` itself; a column of any
     * other type must reach it as its `cast("string")`.
@@ -132,7 +137,8 @@ object FormatFixedLine {
   /** The cell kind of a value of type `t`, or -1 for a type not rendered. */
   private def kindOf(t: DataType): Int = t match {
     case StringType => Utf8
-    case FloatType | DoubleType => Ascii
+    case FloatType => Float32
+    case DoubleType => Float64
     case BooleanType => Bool
     case ByteType | ShortType | IntegerType | LongType => Digits
     case _ => -1
@@ -149,30 +155,35 @@ object FormatFixedLine {
       */
     val padRuns: Array[Array[Byte]] = pads.indices.map(i =>
       UTF8String.fromString(pads(i).toString * lengths(i)).getBytes).toArray
+    /** Where each float cell's text goes in a row's scratch:
+      * `FloatText.Room` bytes per float cell, in cell order.
+      */
+    val textAt: Array[Int] = kinds.scanLeft(0)((at, kind) =>
+      if (kind == Float32 || kind == Float64) at + FloatText.Room else at).toArray
   }
 
-  /** One row's cells: a null flag, an integer or boolean in `bits`, or a
-    * text in `texts` (a string's UTF8String, a float's `String.valueOf`).
-    * `widths` is the kernel's own scratch.
+  /** One row's cells: a null flag, an integer, boolean or float's bits in
+    * `bits`, or a string's UTF8String in `texts`. `widths` is the kernel's
+    * own scratch.
     */
   final class Cells(n: Int) {
     private[FormatFixedLine] val nulls = new Array[Boolean](n)
     private[FormatFixedLine] val bits = new Array[Long](n)
-    private[FormatFixedLine] val texts = new Array[AnyRef](n)
+    private[FormatFixedLine] val texts = new Array[UTF8String](n)
     // per cell: bytes kept (low 32 bits), pad characters (high 32)
     private[FormatFixedLine] val widths = new Array[Long](n)
 
     def setNull(i: Int): Unit = nulls(i) = true
     def setBits(i: Int, v: Long): Unit = { nulls(i) = false; bits(i) = v }
-    def setText(i: Int, v: AnyRef): Unit = { nulls(i) = false; texts(i) = v }
+    def setText(i: Int, v: UTF8String): Unit = { nulls(i) = false; texts(i) = v }
 
     /** Cell `i` from its evaluated (boxed) value. */
     def put(i: Int, v: Any): Unit = v match {
       case null => setNull(i)
       case s: UTF8String => setText(i, s)
       case b: Boolean => setBits(i, if (b) 1L else 0L)
-      case f: Float => setText(i, String.valueOf(f))
-      case d: Double => setText(i, String.valueOf(d))
+      case f: Float => setBits(i, java.lang.Float.floatToRawIntBits(f))
+      case d: Double => setBits(i, java.lang.Double.doubleToRawLongBits(d))
       case n: Number => setBits(i, n.longValue)
     }
   }
@@ -186,6 +197,8 @@ object FormatFixedLine {
   def compute(cells: Cells, spec: Spec): UTF8String = {
     val n = spec.kinds.length
     val widths = cells.widths
+    val textBytes = spec.textAt(n)
+    val text = if (textBytes > 0) new Array[Byte](textBytes) else null
     var size = 0L
     var i = 0
     while (i < n) {
@@ -194,9 +207,12 @@ object FormatFixedLine {
         if (cells.nulls(i)) len.toLong << 32
         else spec.kinds(i) match {
           case Utf8 =>
-            val v = cells.texts(i).asInstanceOf[UTF8String]
+            val v = cells.texts(i)
             SliceFixedLine.walk(v.getBaseObject, v.getBaseOffset, v.numBytes, 0, len)
-          case Ascii => fit(cells.texts(i).asInstanceOf[String].length, len)
+          case Float32 => fit(FloatText.write(java.lang.Float.intBitsToFloat(cells.bits(i).toInt),
+            text, spec.textAt(i)), len)
+          case Float64 => fit(FloatText.write(java.lang.Double.longBitsToDouble(cells.bits(i)),
+            text, spec.textAt(i)), len)
           case Bool => fit(if (cells.bits(i) != 0) True.length else False.length, len)
           case _ => fit(decimalChars(cells.bits(i)), len)
         }
@@ -221,10 +237,10 @@ object FormatFixedLine {
       pos += left * padWidth
       if (kept > 0) spec.kinds(i) match {
         case Utf8 =>
-          val v = cells.texts(i).asInstanceOf[UTF8String]
+          val v = cells.texts(i)
           Platform.copyMemory(v.getBaseObject, v.getBaseOffset, buf,
             Platform.BYTE_ARRAY_OFFSET + pos, kept)
-        case Ascii => copyAscii(cells.texts(i).asInstanceOf[String], kept, buf, pos)
+        case Float32 | Float64 => System.arraycopy(text, spec.textAt(i), buf, pos, kept)
         case Bool =>
           System.arraycopy(if (cells.bits(i) != 0) True else False, 0, buf, pos, kept)
         case _ =>
@@ -239,11 +255,6 @@ object FormatFixedLine {
     UTF8String.fromBytes(buf)
   }
 
-  /** The first `count` chars of the ASCII `s`, one byte each, at `pos`. */
-  @annotation.nowarn("cat=deprecation")
-  private def copyAscii(s: String, count: Int, buf: Array[Byte], pos: Int): Unit =
-    s.getBytes(0, count, buf, pos) // the deprecated form copies each char's low byte
-
   /** A text of `chars` one-byte code points in a `len`-wide cell. */
   private def fit(chars: Int, len: Int): Long = {
     val kept = math.min(chars, len)
@@ -251,7 +262,7 @@ object FormatFixedLine {
   }
 
   /** Characters of `v`'s decimal text (`String.valueOf`), sign included. */
-  private def decimalChars(v: Long): Int =
+  private[functions] def decimalChars(v: Long): Int =
     if (v == Long.MinValue) 20
     else {
       val x = math.abs(v)
@@ -261,7 +272,7 @@ object FormatFixedLine {
       if (v < 0) digits + 1 else digits
     }
 
-  private val Pow10 = Array.iterate(1L, 19)(_ * 10) // 10^0 to 10^18
+  private[functions] val Pow10 = Array.iterate(1L, 19)(_ * 10) // 10^0 to 10^18
 
   /** Writes the first `kept` of the `chars` characters of `v`'s decimal
     * text at `pos`: the dropped trailing digits are divided off first.
@@ -284,7 +295,7 @@ object FormatFixedLine {
   }
 
   // "00" to "99", back to back
-  private val DigitPairs: Array[Byte] = (0 until 100).flatMap(k => f"$k%02d".getBytes).toArray
+  private[functions] val DigitPairs: Array[Byte] = (0 until 100).flatMap(k => f"$k%02d".getBytes).toArray
 
   def apply(values: Seq[Column], lengths: Seq[Int], alignCodes: Seq[Int],
             pads: Seq[Char]): Column =

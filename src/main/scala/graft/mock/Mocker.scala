@@ -61,6 +61,15 @@ object Mocker {
     FlfFormat.write(mock(spark, schema, n, seed, numPartitions), schema, path,
       coalesce1, mode)
 
+  /** Every integer of [lo, hi] equally likely, as a long column:
+    * ⌊rand·(hi − lo + 1)⌋ + lo. The product stays below hi − lo + 1 in
+    * double arithmetic for spans below 2^53, and the floor, unlike a
+    * cast's truncation toward zero, draws lo and lands on 0 no more often
+    * than on any other value.
+    */
+  def uniformInt(lo: Long, hi: Long, seed: Long): Column =
+    floor(rand(seed) * (hi - lo + 1)) + lo
+
   /** One seeded generator column per dtype (reference ranges lib.rs:34-39,
     * generators lib.rs:57-94).
     */
@@ -71,9 +80,9 @@ object Mocker {
       case FlfType.Float16T => uniform(-256, 256).cast("float")
       case FlfType.Float32T => uniform(-1e6, 1e6).cast("float")
       case FlfType.Float64T => uniform(-1e9, 1e9)
-      case FlfType.Int16T   => uniform(-1e4, 1e4 + 1).cast("short")
-      case FlfType.Int32T   => uniform(-1e6, 1e6 + 1).cast("int")
-      case FlfType.Int64T   => uniform(-1e9, 1e9 + 1).cast("long")
+      case FlfType.Int16T   => uniformInt(-10000, 10000, seed).cast("short")
+      case FlfType.Int32T   => uniformInt(-1000000, 1000000, seed).cast("int")
+      case FlfType.Int64T   => uniformInt(-1000000000L, 1000000000L, seed)
       case FlfType.Utf8T | FlfType.LargeUtf8T =>
         element_at(
           array(firstNames.map(lit): _*),

@@ -587,6 +587,14 @@ class FlfFormatSpec extends AnyFunSuite {
     val again = Mocker.mock(spark, schema, 2000, seed = 11).collect()
     assert(rows.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
   }
+
+  test("mocked integers are uniform: every value of the range occurs, 0 no more often") {
+    // 21 values, 10,000 draws each expected (σ = 100)
+    val counts = spark.range(210000).select(Mocker.uniformInt(-10, 10, seed = 3).as("v"))
+      .groupBy("v").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(counts.keySet == (-10L to 10L).toSet, counts)
+    assert(counts.values.forall(n => math.abs(n - 10000) < 600), counts)
+  }
 }
 
 /** The composed per-cell chain FlfFormat ran before FormatFixedLine:
@@ -649,10 +657,19 @@ class FormatFixedLineSpec extends AnyFunSuite {
     Array(0x30), Array(0x2A), Array(0x61), Array(0xC3, 0xA9), Array(0xE2, 0x82, 0xAC),
     Array(0x80), Array(0xA9), Array(0xBF), Array(0xC3), Array(0xE2), Array(0xF0),
     Array(0xFF)).map(_.map(_.toByte))
+  // FloatText's domain edges among them: the smallest normal, the last
+  // value below 2^53 (2^24 for floats) and the first past it, the plain /
+  // E-notation switches at 10^-3 and 10^7, a power of two and a tie
   private val doubles = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0,
-    0.0, Double.MinPositiveValue, Double.MaxValue, -1e-7, 1.5, 123456.789)
+    0.0, Double.MinPositiveValue, Double.MaxValue, -1e-7, 1.5, 123456.789,
+    java.lang.Double.MIN_NORMAL, -math.nextDown(math.scalb(1.0, 53)), math.scalb(1.0, 53),
+    math.nextDown(1e-3), -1e-3, math.nextDown(1e7), 1e7, math.scalb(1.0, -44),
+    math.scalb(16401.0, -18))
   private val floats = Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, -0.0f,
-    0.0f, Float.MinPositiveValue, Float.MaxValue, -1e-7f, 1.5f, 12345.6f)
+    0.0f, Float.MinPositiveValue, Float.MaxValue, -1e-7f, 1.5f, 12345.6f,
+    java.lang.Float.MIN_NORMAL, -math.nextDown(math.scalb(1.0f, 24)), math.scalb(1.0f, 24),
+    math.nextDown(1e-3f), -1e-3f, math.nextDown(1e7f), 1e7f, math.scalb(1.0f, -27),
+    math.scalb(16401.0f, -18))
 
   /** `trials` random layouts of `columns` cells each, with `rows` random
     * rows: FlfFormat.format writes the composed chain's bytes through

@@ -30,10 +30,10 @@ class SessionMasterSpec extends AnyFunSuite {
   /** Fork SessionMasterCheck with the given -D props / env, return the
     * CHECK line.
     */
-  private def forkCheck(props: Seq[String],
-                        env: Map[String, String]): String = {
+  private def forkCheck(props: Seq[String], env: Map[String, String],
+                        unset: Seq[String] = Nil): String = {
     val (rc, out) = ForkedJvm.run("graft.SessionMasterCheck",
-      props = props, env = env)
+      props = props, env = env, unset = unset)
     assert(rc == 0, s"forked session check failed (rc=$rc):\n$out")
     out.linesIterator.find(_.startsWith("CHECK "))
       .getOrElse(fail(s"no CHECK line in forked output:\n$out"))
@@ -77,5 +77,13 @@ class SessionMasterSpec extends AnyFunSuite {
     val line = forkCheck(Seq.empty, Map("SPARK_GRAFT_CPUS" -> "3"))
     assert(line.contains("master=local[3]"), line)
     assert(line.contains("shuffle=3"), line)
+  }
+
+  test("SPARK_GRAFT_CPUS unset: the fallback is local[<available processors>], " +
+    "the one default of the CLI, Bench, Profile and Verify") {
+    val line = forkCheck(Seq.empty, Map.empty, unset = Seq("SPARK_GRAFT_CPUS", "SPARK_MASTER"))
+    val cpus = Runtime.getRuntime.availableProcessors
+    assert(line.contains(s"master=local[$cpus]"), line)
+    assert(line.contains(s"shuffle=$cpus"), line)
   }
 }

@@ -17,13 +17,14 @@ object ForkedJvm {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
-  /** Fork a fresh JVM on the suite classpath: returns (rc, combined
-    * stdout+stderr). Callers assert on rc so the failure message can
-    * carry their own context.
+  /** Fork a fresh JVM on the suite classpath, with `env` set and the
+    * variables in `unset` removed: returns (rc, combined stdout+stderr).
+    * Callers assert on rc so the failure message can carry their own
+    * context.
     */
   def run(mainClass: String, args: Seq[String] = Nil,
           props: Seq[String] = Nil, env: Map[String, String] = Map.empty,
-          maxHeap: String = "2g"): (Int, String) = {
+          maxHeap: String = "2g", unset: Seq[String] = Nil): (Int, String) = {
     val java = s"${sys.props("java.home")}/bin/java"
     val cmd = (Seq(java) ++ addOpens ++ props ++ Seq(
       "-Dspark.ui.enabled=false", s"-Xmx$maxHeap",
@@ -31,6 +32,7 @@ object ForkedJvm {
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(true)
     env.foreach { case (k, v) => pb.environment().put(k, v) }
+    unset.foreach(pb.environment().remove)
     val p = pb.start()
     val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
     (p.waitFor(), out)
