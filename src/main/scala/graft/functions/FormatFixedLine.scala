@@ -10,8 +10,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One-pass fixed-width line writer: renders and pads every cell of a row
-  * and writes them back to back into one pre-sized byte buffer.
+/** Fused fixed-width line writer: renders and pads every cell of a row
+  * and writes them back to back into one byte buffer of the row's size.
   *
   * Byte-identical to the per-column composition `concat` of
   * `lpad`/`rpad`/`rpad(concat(repeat(pad, ⌊deficit/2⌋), s))` over
@@ -26,12 +26,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *      characters is known before one is written.
   *    - Boolean: `true` or `false`.
   *    - Float, Double: `FloatText`, the text the cast produces
-  *      (`String.valueOf`), rendered into a per-cell scratch in the first
-  *      pass and copied in. JDK 17's digits are not always the shortest
-  *      (JDK-4511638, fixed in 19), so FloatText reproduces JDK 17's rule
-  *      for normal values below 2^53 (2^24 for floats) and copies
-  *      `String.valueOf` for every other value, and for every value on a
-  *      runtime whose `String.valueOf` fails its witness check.
+  *      (`String.valueOf`), rendered into a scratch and copied in. JDK
+  *      17's digits are not always the shortest (JDK-4511638, fixed in
+  *      19), so FloatText reproduces JDK 17's rule for normal values below
+  *      2^53 (2^24 for floats) and copies `String.valueOf` for every other
+  *      value, and for every value on a runtime whose `String.valueOf`
+  *      fails its witness check.
   *    Any other type reaches the kernel as its `cast("string")`
   *    (FlfFormat.format). A null child renders as an all-pad cell.
   *  - Count. A cell keeps at most `length` code points of its text, the
@@ -49,11 +49,24 @@ import org.apache.spark.unsafe.types.UTF8String
   *    each written as the pad's UTF-8 bytes: all on the left for Right
   *    (`lpad`), all on the right for Left (`rpad`), and for Center floor
   *    half on the left, ceil half on the right (the reference padder's
-  *    split, FIXTURES.md §2). A run is one array copy out of the cell's pad
-  *    repeated `length` times.
-  *  - Buffer. A first pass counts every cell, so the row is one `byte[]`
-  *    of its exact size; the composed chain builds a string per cast, per
-  *    pad, per cell and per concat.
+  *    split, FIXTURES.md §2).
+  *  - Layouts. The composed chain builds a string per cast, per pad, per
+  *    cell and per concat; the kernel writes one `byte[]` per row, in one
+  *    of two layouts, picked per row:
+  *    - In place, when every pad of the spec is one byte (every
+  *      `FixedSchema` pad is, `PadSymbol.table`) and every string cell's
+  *      kept bytes, the first `min(numBytes, length)`, are ASCII, so kept
+  *      code points are kept bytes: the row starts as a copy of the
+  *      all-pad line (`Spec.padLine`) and each non-null cell's kept text
+  *      is written once at its slot plus its left pad; a null cell stays
+  *      all pad. Float text goes through one `FloatText.Room` scratch per
+  *      row. A non-ASCII kept byte stops the row, which is then written
+  *      again in two passes.
+  *    - Two passes, for any pad and text: the first counts every cell
+  *      (`walk` for strings), so the row is one `byte[]` of its exact
+  *      size; the second writes each cell's left pad run, kept text and
+  *      right pad run, a run being one array copy out of the cell's pad
+  *      repeated `length` times.
   *
   * Reference: the mocker's pad-and-serialize step and the fixed-length
   * writer (crates/evolution-mocker/src/mocker.rs:146-152,
@@ -75,7 +88,7 @@ case class FormatFixedLine(children: Seq[Expression], lengths: Seq[Int],
 
   override def dataType: DataType = StringType
 
-  @transient private lazy val spec: FormatFixedLine.Spec =
+  @transient private[graft] lazy val spec: FormatFixedLine.Spec =
     FormatFixedLine.Spec(lengths.toArray, alignCodes.toArray, pads.toArray,
       children.map { c =>
         val kind = FormatFixedLine.kindOf(c.dataType)
@@ -155,23 +168,27 @@ object FormatFixedLine {
       */
     val padRuns: Array[Array[Byte]] = pads.indices.map(i =>
       UTF8String.fromString(pads(i).toString * lengths(i)).getBytes).toArray
-    /** Where each float cell's text goes in a row's scratch:
+    /** Where each float cell's text goes in a two-pass row's scratch:
       * `FloatText.Room` bytes per float cell, in cell order.
       */
     val textAt: Array[Int] = kinds.scanLeft(0)((at, kind) =>
       if (kind == Float32 || kind == Float64) at + FloatText.Room else at).toArray
+    /** The row with every cell all pad, the pad runs back to back, when
+      * every pad is one byte; null when one is wider, and then every row
+      * takes the two-pass layout.
+      */
+    val padLine: Array[Byte] = if (padWidths.forall(_ == 1)) padRuns.flatten else null
+    /** Where each cell starts in `padLine`. */
+    val slots: Array[Int] = lengths.scanLeft(0)(_ + _)
   }
 
   /** One row's cells: a null flag, an integer, boolean or float's bits in
-    * `bits`, or a string's UTF8String in `texts`. `widths` is the kernel's
-    * own scratch.
+    * `bits`, or a string's UTF8String in `texts`.
     */
   final class Cells(n: Int) {
     private[FormatFixedLine] val nulls = new Array[Boolean](n)
     private[FormatFixedLine] val bits = new Array[Long](n)
     private[FormatFixedLine] val texts = new Array[UTF8String](n)
-    // per cell: bytes kept (low 32 bits), pad characters (high 32)
-    private[FormatFixedLine] val widths = new Array[Long](n)
 
     def setNull(i: Int): Unit = nulls(i) = true
     def setBits(i: Int, v: Long): Unit = { nulls(i) = false; bits(i) = v }
@@ -192,11 +209,90 @@ object FormatFixedLine {
   private val False = "false".getBytes("UTF-8")
 
   /** The formatting kernel (also invoked from generated code): one line
-    * from every cell, a null one being empty.
+    * from every cell, a null one being empty. A row is written in place
+    * over a copy of the all-pad line when it can be, else in two passes.
     */
   def compute(cells: Cells, spec: Spec): UTF8String = {
+    val row = if (spec.padLine != null) inPlace(cells, spec) else null
+    if (row != null) row else twoPass(cells, spec)
+  }
+
+  /** The row written over a copy of `spec.padLine`: each non-null cell's
+    * kept text at its slot plus its left pad, null cells left all pad. Null
+    * (the row takes `twoPass`) when a string cell keeps a byte that is not
+    * ASCII, since its kept code points are then not its kept bytes.
+    */
+  private[graft] def inPlace(cells: Cells, spec: Spec): UTF8String = {
+    val buf = spec.padLine.clone()
     val n = spec.kinds.length
-    val widths = cells.widths
+    val text = if (spec.textAt(n) > 0) new Array[Byte](FloatText.Room) else null
+    var i = 0
+    while (i < n) {
+      if (!cells.nulls(i)) {
+        val len = spec.lengths(i)
+        val at = spec.slots(i)
+        val align = spec.alignCodes(i)
+        spec.kinds(i) match {
+          case Utf8 =>
+            val v = cells.texts(i)
+            val kept = math.min(v.numBytes, len)
+            if (!ascii(v.getBaseObject, v.getBaseOffset, kept)) return null
+            Platform.copyMemory(v.getBaseObject, v.getBaseOffset, buf,
+              Platform.BYTE_ARRAY_OFFSET + at + left(align, len - kept), kept)
+          case Float32 => place(text, FloatText.write(
+            java.lang.Float.intBitsToFloat(cells.bits(i).toInt), text, 0), buf, at, len, align)
+          case Float64 => place(text, FloatText.write(
+            java.lang.Double.longBitsToDouble(cells.bits(i)), text, 0), buf, at, len, align)
+          case Bool =>
+            val t = if (cells.bits(i) != 0) True else False
+            place(t, t.length, buf, at, len, align)
+          case _ =>
+            val v = cells.bits(i)
+            val chars = decimalChars(v)
+            val kept = math.min(chars, len)
+            writeDecimal(buf, at + left(align, len - kept), v, chars, kept)
+        }
+      }
+      i += 1
+    }
+    UTF8String.fromBytes(buf)
+  }
+
+  /** Copies the first `min(chars, len)` bytes of `src` into the cell at
+    * `at`, after its left pad.
+    */
+  private def place(src: Array[Byte], chars: Int, buf: Array[Byte], at: Int, len: Int,
+                    align: Int): Unit = {
+    val kept = math.min(chars, len)
+    System.arraycopy(src, 0, buf, at + left(align, len - kept), kept)
+  }
+
+  /** Whether the `count` bytes at `off` are all ASCII: 8 at a time, then
+    * the rest one by one.
+    */
+  private def ascii(base: AnyRef, off: Long, count: Int): Boolean = {
+    var high = 0L
+    var i = 0
+    while (i + 8 <= count) { high |= Platform.getLong(base, off + i); i += 8 }
+    while (i < count) { high |= Platform.getByte(base, off + i); i += 1 }
+    (high & SliceFixedLine.HighBits) == 0
+  }
+
+  /** Pad characters left of a cell `short` characters short of its length. */
+  private def left(align: Int, short: Int): Int = align match {
+    case 0 => 0
+    case 1 => short
+    case _ => short / 2
+  }
+
+  /** The row in two passes, for any pads and text: the first counts every
+    * cell, so the row is one `byte[]` of its exact size, the second writes
+    * each cell's pad runs and kept text.
+    */
+  private[graft] def twoPass(cells: Cells, spec: Spec): UTF8String = {
+    val n = spec.kinds.length
+    // per cell: bytes kept (low 32 bits), pad characters (high 32)
+    val widths = new Array[Long](n)
     val textBytes = spec.textAt(n)
     val text = if (textBytes > 0) new Array[Byte](textBytes) else null
     var size = 0L
@@ -226,15 +322,11 @@ object FormatFixedLine {
     while (i < n) {
       val kept = widths(i).toInt
       val short = (widths(i) >>> 32).toInt
-      val left = spec.alignCodes(i) match {
-        case 0 => 0
-        case 1 => short
-        case _ => short / 2
-      }
+      val lead = left(spec.alignCodes(i), short)
       val run = spec.padRuns(i)
       val padWidth = spec.padWidths(i)
-      System.arraycopy(run, 0, buf, pos, left * padWidth)
-      pos += left * padWidth
+      System.arraycopy(run, 0, buf, pos, lead * padWidth)
+      pos += lead * padWidth
       if (kept > 0) spec.kinds(i) match {
         case Utf8 =>
           val v = cells.texts(i)
@@ -248,8 +340,8 @@ object FormatFixedLine {
           writeDecimal(buf, pos, v, decimalChars(v), kept)
       }
       pos += kept
-      System.arraycopy(run, 0, buf, pos, (short - left) * padWidth)
-      pos += (short - left) * padWidth
+      System.arraycopy(run, 0, buf, pos, (short - lead) * padWidth)
+      pos += (short - lead) * padWidth
       i += 1
     }
     UTF8String.fromBytes(buf)
@@ -275,12 +367,14 @@ object FormatFixedLine {
   private[functions] val Pow10 = Array.iterate(1L, 19)(_ * 10) // 10^0 to 10^18
 
   /** Writes the first `kept` of the `chars` characters of `v`'s decimal
-    * text at `pos`: the dropped trailing digits are divided off first.
+    * text at `pos`: the dropped trailing digits are divided off first, in
+    * one division. 19 are dropped only from `Long.MinValue` in a 1-wide
+    * cell, which keeps its sign alone.
     */
   private def writeDecimal(buf: Array[Byte], pos: Int, v: Long, chars: Int, kept: Int): Unit = {
-    var q = if (v < 0) v else -v
-    var drop = chars - kept
-    while (drop > 0) { q /= 10; drop -= 1 }
+    val drop = chars - kept
+    val negated = if (v < 0) v else -v
+    var q = if (drop == 0) negated else if (drop < Pow10.length) negated / Pow10(drop) else 0L
     val first = if (v < 0) { buf(pos) = '-'; pos + 1 } else pos
     var p = pos + kept
     while (p - 2 >= first) { // two digits a step

@@ -628,7 +628,10 @@ object ComposedFormat {
   */
 class FormatFixedLineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
+  import graft.functions.FormatFixedLine
+  import org.apache.spark.sql.catalyst.expressions.BoundReference
   import org.apache.spark.sql.functions.{col, hex}
+  import org.apache.spark.unsafe.types.UTF8String
   import org.apache.spark.sql.types._
   import org.apache.spark.sql.{DataFrame, Row}
   import scala.jdk.CollectionConverters._
@@ -671,13 +674,14 @@ class FormatFixedLineSpec extends AnyFunSuite {
     math.nextDown(1e-3f), -1e-3f, math.nextDown(1e7f), 1e7f, math.scalb(1.0f, -27),
     math.scalb(16401.0f, -18))
 
+  /** One random layout, the Spark types of its values and its rows. */
+  private case class Trial(schema: FixedSchema, raw: StructType, rows: Seq[Row])
+
   /** `trials` random layouts of `columns` cells each, with `rows` random
-    * rows: FlfFormat.format writes the composed chain's bytes through
-    * generated code (an RDD relation) and through `eval` (a local relation,
-    * which the optimizer folds).
+    * rows each; asserts that the draws reach the edges they are made for.
     */
-  private def fuzzCheck(seed: Int, trials: Int, columns: scala.util.Random => Int,
-                        rows: Int): Unit = {
+  private def fuzz(seed: Int, trials: Int, columns: scala.util.Random => Int,
+                   rows: Int): Seq[Trial] = {
     val rnd = new scala.util.Random(seed)
     // how many text values fall short of, fit exactly and overflow their cell
     val fit = Array(0, 0, 0)
@@ -734,7 +738,7 @@ class FormatFixedLineSpec extends AnyFunSuite {
       case "ts" => new java.sql.Timestamp(rnd.nextLong() % 4000000000000L)
     }
 
-    for (trial <- 0 until trials) {
+    val out = Seq.fill(trials) {
       val spec = Seq.fill(columns(rnd))((kinds(rnd.nextInt(kinds.size)),
         1 + rnd.nextInt(10), aligns(rnd.nextInt(3)), pads(rnd.nextInt(pads.size))))
       val offsets = spec.scanLeft(0)(_ + _._2)
@@ -743,18 +747,119 @@ class FormatFixedLineSpec extends AnyFunSuite {
       })
       val raw = StructType(spec.zipWithIndex.map { case (((_, _, dt), _, _, _), i) =>
         StructField(s"c$i", dt) })
-      val data = Seq.fill(rows)(Row.fromSeq(spec.map { case ((kind, _, _), len, _, _) =>
+      Trial(schema, raw, Seq.fill(rows)(Row.fromSeq(spec.map { case ((kind, _, _), len, _, _) =>
         if (rnd.nextInt(8) == 0) null else value(kind, len)
-      }))
+      })))
+    }
+    assert(fit.forall(_ > 0), fit.mkString("short/exact/overlong text values: ", "/", ""))
+    assert(cut > 0, "no integral value overflows its cell")
+    assert(extremes.size == 8, s"MinValue/MaxValue written, as (bits, is max): $extremes")
+    out
+  }
+
+  /** The fuzz's trials: FlfFormat.format writes the composed chain's bytes
+    * through generated code (an RDD relation) and through `eval` (a local
+    * relation, which the optimizer folds).
+    */
+  private def fuzzCheck(seed: Int, trials: Int, columns: scala.util.Random => Int,
+                        rows: Int): Unit =
+    for ((Trial(schema, raw, data), trial) <- fuzz(seed, trials, columns, rows).zipWithIndex) {
       val generated = spark.createDataFrame(spark.sparkContext.parallelize(data, 2), raw)
       val interpreted = spark.createDataFrame(data.asJava, raw)
       val expected = hexLines(ComposedFormat.format(generated, schema))
       assert(hexLines(FlfFormat.format(generated, schema)) == expected, s"trial $trial: $schema")
       assert(hexLines(FlfFormat.format(interpreted, schema)) == expected, s"trial $trial: $schema")
     }
-    assert(fit.forall(_ > 0), fit.mkString("short/exact/overlong text values: ", "/", ""))
-    assert(cut > 0, "no integral value overflows its cell")
-    assert(extremes.size == 8, s"MinValue/MaxValue written, as (bits, is max): $extremes")
+
+  /** The kernel over `schema` and its Cells for each row, with no Spark
+    * job: a value of a type the kernel does not render becomes a string
+    * cell of its `toString` (any text will do, as both layouts get it).
+    */
+  private def kernelCells(schema: FixedSchema, raw: StructType,
+                          rows: Seq[Row]): (FormatFixedLine, Seq[FormatFixedLine.Cells]) = {
+    val types = raw.map(f => if (FormatFixedLine.renders(f.dataType)) f.dataType else StringType)
+    val kernel = FormatFixedLine(types.zipWithIndex.map { case (t, i) => BoundReference(i, t, true) },
+      schema.columns.map(_.length), schema.columns.map(_.alignment.code),
+      schema.columns.map(_.padSymbol))
+    kernel -> rows.map { row =>
+      val cells = new FormatFixedLine.Cells(types.size)
+      for (i <- types.indices) cells.put(i, row.get(i) match {
+        case b: Array[Byte] => UTF8String.fromBytes(b)
+        case v if v != null && types(i) == StringType => UTF8String.fromString(v.toString)
+        case v => v
+      })
+      cells
+    }
+  }
+
+  test("compute == the two-pass layout on every fuzz row, both layouts taken") {
+    // rows written in place; rows that fall back because a kept string
+    // holds 'é' or an astral char; rows of a spec with an 'é' or '€' pad
+    var inPlace = 0
+    var keptE, keptAstral, padE, padEuro = 0
+    val trials = fuzz(seed = 6, trials = 40, columns = rnd => 1 + rnd.nextInt(12), rows = 40) ++
+      fuzz(seed = 7, trials = 2000, columns = rnd => 1 + rnd.nextInt(12), rows = 40)
+    for (Trial(schema, raw, data) <- trials) {
+      val (kernel, rowCells) = kernelCells(schema, raw, data)
+      val spec = kernel.spec
+      for ((row, cells) <- data.zip(rowCells)) {
+        val expected = FormatFixedLine.twoPass(cells, spec)
+        assert(FormatFixedLine.compute(cells, spec) == expected, s"$schema: $row")
+        if (spec.padLine == null) {
+          if (schema.columns.exists(_.padSymbol == 'é')) padE += 1
+          if (schema.columns.exists(_.padSymbol == '€')) padEuro += 1
+        } else if (FormatFixedLine.inPlace(cells, spec) == null) {
+          val kept = schema.columns.indices.collect { case i if row.get(i).isInstanceOf[String] =>
+            row.getString(i).codePoints.limit(schema.columns(i).length).toArray
+          }
+          if (kept.exists(_.contains('é'.toInt))) keptE += 1
+          if (kept.exists(_.exists(Character.isSupplementaryCodePoint))) keptAstral += 1
+        } else inPlace += 1
+      }
+    }
+    assert(Seq(inPlace, keptE, keptAstral, padE, padEuro).forall(_ > 0),
+      s"in place $inPlace, kept é $keptE, kept astral $keptAstral, pad é $padE, pad € $padEuro")
+  }
+
+  test("an integer cell keeps the first characters of its text at every width, in both layouts") {
+    // Long.MinValue in a 1-wide cell drops all 19 digits and keeps its sign
+    val values = Seq(Long.MinValue, Long.MaxValue, -1L, 0L, 1000000000000000000L,
+      -999999999999999999L, 123456789L)
+    for (len <- 1 to 21; pad <- Seq(' ', 'é')) {
+      val schema = FixedSchema("i", 1, Seq(
+        FixedColumn("v", 0, len, FlfType.Int64T, Alignment.Left, pad, isNullable = true)))
+      val (kernel, rowCells) =
+        kernelCells(schema, StructType(Seq(StructField("v", LongType))), values.map(Row(_)))
+      for ((v, cells) <- values.zip(rowCells))
+        assert(FormatFixedLine.compute(cells, kernel.spec).toString ==
+          v.toString.take(len).padTo(len, pad), s"$v in a $len-wide cell, pad $pad")
+    }
+  }
+
+  test("FormatFixedLine == composed chain on rows in place and rows that fall back") {
+    val schema = FixedSchema(name = "t", version = 1, columns = Seq(
+      FixedColumn("s", 0, 6, FlfType.Utf8T, Alignment.Right, '_', isNullable = true),
+      FixedColumn("n", 6, 5, FlfType.Int32T, Alignment.Center, '0', isNullable = true),
+      FixedColumn("t", 11, 7, FlfType.Utf8T, Alignment.Center, '*', isNullable = true)))
+    val raw = StructType(Seq(StructField("s", StringType), StructField("n", IntegerType),
+      StructField("t", StringType)))
+    // (row, written in place)
+    val cases = Seq(
+      Row("abc", 42, "xy") -> true,
+      Row("abcdef", -7, null) -> true,
+      Row(null, null, "Zz") -> true,
+      // the only non-ASCII byte lies past the cell's 6 characters
+      Row("abcdefé", 123456, "q") -> true,
+      // a kept 'é'
+      Row("aé", 5, "q") -> false,
+      Row("abc", 5, "é") -> false)
+    val (kernel, rowCells) = kernelCells(schema, raw, cases.map(_._1))
+    for (((row, inPlace), cells) <- cases.zip(rowCells))
+      assert((FormatFixedLine.inPlace(cells, kernel.spec) != null) == inPlace, row)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(cases.map(_._1), 1), raw)
+    val got = hexLines(FlfFormat.format(df, schema))
+    assert(got == hexLines(ComposedFormat.format(df, schema)))
+    assert(got.head == "5F5F5F616263" + "3034323030" + "2A2A78792A2A2A")
   }
 
   test("FormatFixedLine == composed chain byte for byte on a seeded fuzz") {
@@ -765,9 +870,9 @@ class FormatFixedLineSpec extends AnyFunSuite {
     // Past codegen's field limit the projection leaves whole-stage codegen,
     // and its generated code fills the cells in helper methods.
     val maxFields = spark.conf.get("spark.sql.codegen.maxFields").toInt
-    val types = kinds.map(_._3).filter(graft.functions.FormatFixedLine.renders)
-    val kernel = graft.functions.FormatFixedLine(Seq.tabulate(maxFields + 20)(i =>
-      org.apache.spark.sql.catalyst.expressions.BoundReference(i, types(i % types.size), true)),
+    val types = kinds.map(_._3).filter(FormatFixedLine.renders)
+    val kernel = FormatFixedLine(Seq.tabulate(maxFields + 20)(i =>
+      BoundReference(i, types(i % types.size), true)),
       Seq.fill(maxFields + 20)(4), Seq.fill(maxFields + 20)(1), Seq.fill(maxFields + 20)(' '))
     val ctx = new org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
     kernel.genCode(ctx)
@@ -818,7 +923,7 @@ class FormatFixedLineSpec extends AnyFunSuite {
     def stringCasts(lines: DataFrame): Seq[DataType] = {
       val plan = lines.queryExecution.optimizedPlan
       val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
-      assert(exprs.count(_.isInstanceOf[graft.functions.FormatFixedLine]) == 1, plan)
+      assert(exprs.count(_.isInstanceOf[FormatFixedLine]) == 1, plan)
       assert(!exprs.exists(e => e.isInstanceOf[StringLPad] || e.isInstanceOf[StringRPad] ||
         e.isInstanceOf[Concat]), plan)
       exprs.collect { case c: Cast if c.dataType == StringType => c.child.dataType }
