@@ -60,8 +60,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *      all-pad line (`Spec.padLine`) and each non-null cell's kept text
   *      is written once at its slot plus its left pad; a null cell stays
   *      all pad. Float text goes through one `FloatText.Room` scratch per
-  *      row. A non-ASCII kept byte stops the row, which is then written
-  *      again in two passes.
+  *      row. The string cells are checked before any cell is rendered.
   *    - Two passes, for any pad and text: the first counts every cell
   *      (`walk` for strings), so the row is one `byte[]` of its exact
   *      size; the second writes each cell's left pad run, kept text and
@@ -212,17 +211,33 @@ object FormatFixedLine {
     * from every cell, a null one being empty. A row is written in place
     * over a copy of the all-pad line when it can be, else in two passes.
     */
-  def compute(cells: Cells, spec: Spec): UTF8String = {
-    val row = if (spec.padLine != null) inPlace(cells, spec) else null
-    if (row != null) row else twoPass(cells, spec)
+  def compute(cells: Cells, spec: Spec): UTF8String =
+    if (fitsInPlace(cells, spec)) inPlace(cells, spec) else twoPass(cells, spec)
+
+  /** Whether the row can be written in place: every pad is one byte and
+    * every string cell's kept bytes, the first `min(numBytes, length)`, are
+    * ASCII, so its kept code points are its kept bytes. Checked before any
+    * cell is rendered, so a row that cannot wastes no rendering.
+    */
+  private[graft] def fitsInPlace(cells: Cells, spec: Spec): Boolean = {
+    if (spec.padLine == null) return false
+    var i = 0
+    while (i < spec.kinds.length) {
+      if (spec.kinds(i) == Utf8 && !cells.nulls(i)) {
+        val v = cells.texts(i)
+        if (!ascii(v.getBaseObject, v.getBaseOffset, math.min(v.numBytes, spec.lengths(i))))
+          return false
+      }
+      i += 1
+    }
+    true
   }
 
-  /** The row written over a copy of `spec.padLine`: each non-null cell's
-    * kept text at its slot plus its left pad, null cells left all pad. Null
-    * (the row takes `twoPass`) when a string cell keeps a byte that is not
-    * ASCII, since its kept code points are then not its kept bytes.
+  /** A row that `fitsInPlace`, written over a copy of `spec.padLine`: each
+    * non-null cell's kept text at its slot plus its left pad, null cells
+    * left all pad.
     */
-  private[graft] def inPlace(cells: Cells, spec: Spec): UTF8String = {
+  private def inPlace(cells: Cells, spec: Spec): UTF8String = {
     val buf = spec.padLine.clone()
     val n = spec.kinds.length
     val text = if (spec.textAt(n) > 0) new Array[Byte](FloatText.Room) else null
@@ -236,7 +251,6 @@ object FormatFixedLine {
           case Utf8 =>
             val v = cells.texts(i)
             val kept = math.min(v.numBytes, len)
-            if (!ascii(v.getBaseObject, v.getBaseOffset, kept)) return null
             Platform.copyMemory(v.getBaseObject, v.getBaseOffset, buf,
               Platform.BYTE_ARRAY_OFFSET + at + left(align, len - kept), kept)
           case Float32 => place(text, FloatText.write(

@@ -808,7 +808,7 @@ class FormatFixedLineSpec extends AnyFunSuite {
         if (spec.padLine == null) {
           if (schema.columns.exists(_.padSymbol == 'é')) padE += 1
           if (schema.columns.exists(_.padSymbol == '€')) padEuro += 1
-        } else if (FormatFixedLine.inPlace(cells, spec) == null) {
+        } else if (!FormatFixedLine.fitsInPlace(cells, spec)) {
           val kept = schema.columns.indices.collect { case i if row.get(i).isInstanceOf[String] =>
             row.getString(i).codePoints.limit(schema.columns(i).length).toArray
           }
@@ -855,7 +855,7 @@ class FormatFixedLineSpec extends AnyFunSuite {
       Row("abc", 5, "é") -> false)
     val (kernel, rowCells) = kernelCells(schema, raw, cases.map(_._1))
     for (((row, inPlace), cells) <- cases.zip(rowCells))
-      assert((FormatFixedLine.inPlace(cells, kernel.spec) != null) == inPlace, row)
+      assert(FormatFixedLine.fitsInPlace(cells, kernel.spec) == inPlace, row)
     val df = spark.createDataFrame(spark.sparkContext.parallelize(cases.map(_._1), 1), raw)
     val got = hexLines(FlfFormat.format(df, schema))
     assert(got == hexLines(ComposedFormat.format(df, schema)))
