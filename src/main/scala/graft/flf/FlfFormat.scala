@@ -18,9 +18,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * from a shortest-digit core on finite normal values below 2^53, or 2^24
   * for floats, and `String.valueOf`'s own chars for every other value or
   * on a runtime that fails FloatText's class-init witness check), pads it
-  * and writes the row into one buffer: over a copy of the all-pad line
-  * when every pad is one byte and every kept string byte is ASCII, else in
-  * two passes (count, then write). A column of any other
+  * and writes the row into one buffer of its exact size, over a copy of
+  * the all-pad line, each cell shifted by how many bytes the kept text of
+  * the cells before it adds to or takes from their pads. A column of any other
   * type (decimal, date, timestamp, binary) reaches the kernel as its
   * `cast("string")`.
   */

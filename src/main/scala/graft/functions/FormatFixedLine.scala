@@ -50,22 +50,30 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (`lpad`), all on the right for Left (`rpad`), and for Center floor
   *    half on the left, ceil half on the right (the reference padder's
   *    split, FIXTURES.md §2).
-  *  - Layouts. The composed chain builds a string per cast, per pad, per
-  *    cell and per concat; the kernel writes one `byte[]` per row, in one
-  *    of two layouts, picked per row:
-  *    - In place, when every pad of the spec is one byte (every
-  *      `FixedSchema` pad is, `PadSymbol.table`) and every string cell's
-  *      kept bytes, the first `min(numBytes, length)`, are ASCII, so kept
-  *      code points are kept bytes: the row starts as a copy of the
-  *      all-pad line (`Spec.padLine`) and each non-null cell's kept text
-  *      is written once at its slot plus its left pad; a null cell stays
-  *      all pad. Float text goes through one `FloatText.Room` scratch per
-  *      row. The string cells are checked before any cell is rendered.
-  *    - Two passes, for any pad and text: the first counts every cell
-  *      (`walk` for strings), so the row is one `byte[]` of its exact
-  *      size; the second writes each cell's left pad run, kept text and
-  *      right pad run, a run being one array copy out of the cell's pad
-  *      repeated `length` times.
+  *  - Layout. The composed chain builds a string per cast, per pad, per
+  *    cell and per concat; the kernel writes one `byte[]` per row, over
+  *    the all-pad line (`Spec.padLine`, each pad's UTF-8 bytes `length`
+  *    times, back to back, each cell at its byte `slot`). A cell grows the
+  *    row by its kept bytes less its kept characters' pad bytes; only a
+  *    string cell or a cell whose pad is wider than one byte can. A first
+  *    pass sums the growth (`walk` for strings), so the row is one
+  *    `byte[]` of its exact size, a copy of the pad line clipped or
+  *    extended to it. The second writes each non-null cell's kept text at
+  *    its slot plus the shift so far plus its left pad; a null cell stays
+  *    all pad. A cell that grows or shrinks copies the pad line's tail
+  *    after its kept text again, shifted by its growth and clipped to the
+  *    row, and adds its growth to the shift.
+  *    - Clipping is safe because a cell shrinks by at most its own pad
+  *      bytes (a kept character is at least one byte): a copy overshoots
+  *      the row's end by no more than the cells after it will shrink, so a
+  *      clipped copy drops only bytes that a later cell's tail copy writes
+  *      again.
+  *    - With one-byte pads (every `FixedSchema` pad is one, `PadSymbol.table`)
+  *      no cell shrinks, so a row that does not grow shifts no cell: its
+  *      strings keep their first `min(numBytes, length)` bytes and are not
+  *      walked again. A float is rendered in the first pass only when its
+  *      pad is wider than one byte, through the row's one `FloatText.Room`
+  *      scratch.
   *
   * Reference: the mocker's pad-and-serialize step and the fixed-length
   * writer (crates/evolution-mocker/src/mocker.rs:146-152,
@@ -162,23 +170,17 @@ object FormatFixedLine {
       * encodes it.
       */
     val padWidths: Array[Int] = pads.map(p => UTF8String.fromString(p.toString).numBytes)
-    /** Each cell's pad `length` times over: k pads are its first
-      * k × pad-width bytes, so any run is one array copy.
+    /** The row with every cell all pad: each pad's bytes `length` times,
+      * back to back.
       */
-    val padRuns: Array[Array[Byte]] = pads.indices.map(i =>
+    val padLine: Array[Byte] = pads.indices.flatMap(i =>
       UTF8String.fromString(pads(i).toString * lengths(i)).getBytes).toArray
-    /** Where each float cell's text goes in a two-pass row's scratch:
-      * `FloatText.Room` bytes per float cell, in cell order.
-      */
-    val textAt: Array[Int] = kinds.scanLeft(0)((at, kind) =>
-      if (kind == Float32 || kind == Float64) at + FloatText.Room else at).toArray
-    /** The row with every cell all pad, the pad runs back to back, when
-      * every pad is one byte; null when one is wider, and then every row
-      * takes the two-pass layout.
-      */
-    val padLine: Array[Byte] = if (padWidths.forall(_ == 1)) padRuns.flatten else null
-    /** Where each cell starts in `padLine`. */
-    val slots: Array[Int] = lengths.scanLeft(0)(_ + _)
+    /** Where each cell starts in `padLine`, in bytes. */
+    val slots: Array[Int] = lengths.indices.scanLeft(0)((at, i) => at + lengths(i) * padWidths(i)).toArray
+    /** Whether every pad is one byte, so that no cell shrinks. */
+    val bytePads: Boolean = padWidths.forall(_ == 1)
+    /** Whether a row has float cells, rendered through one scratch. */
+    val floats: Boolean = kinds.exists(k => k == Float32 || k == Float64)
   }
 
   /** One row's cells: a null flag, an integer, boolean or float's bits in
@@ -208,63 +210,70 @@ object FormatFixedLine {
   private val False = "false".getBytes("UTF-8")
 
   /** The formatting kernel (also invoked from generated code): one line
-    * from every cell, a null one being empty. A row is written in place
-    * over a copy of the all-pad line when it can be, else in two passes.
+    * from every cell, a null one being empty. A first pass sums the row's
+    * growth over the all-pad line; the second writes each cell over a copy
+    * of that line, shifted by the growth of the cells before it.
     */
-  def compute(cells: Cells, spec: Spec): UTF8String =
-    if (fitsInPlace(cells, spec)) inPlace(cells, spec) else twoPass(cells, spec)
-
-  /** Whether the row can be written in place: every pad is one byte and
-    * every string cell's kept bytes, the first `min(numBytes, length)`, are
-    * ASCII, so its kept code points are its kept bytes. Checked before any
-    * cell is rendered, so a row that cannot wastes no rendering.
-    */
-  private[graft] def fitsInPlace(cells: Cells, spec: Spec): Boolean = {
-    if (spec.padLine == null) return false
+  def compute(cells: Cells, spec: Spec): UTF8String = {
+    val n = spec.kinds.length
+    val text = if (spec.floats) new Array[Byte](FloatText.Room) else null
+    var growth = 0
     var i = 0
-    while (i < spec.kinds.length) {
-      if (spec.kinds(i) == Utf8 && !cells.nulls(i)) {
-        val v = cells.texts(i)
-        if (!ascii(v.getBaseObject, v.getBaseOffset, math.min(v.numBytes, spec.lengths(i))))
-          return false
-      }
+    while (i < n) {
+      if (!cells.nulls(i) && (spec.kinds(i) == Utf8 || spec.padWidths(i) > 1))
+        growth += grows(cells, spec, i, text)
       i += 1
     }
-    true
-  }
-
-  /** A row that `fitsInPlace`, written over a copy of `spec.padLine`: each
-    * non-null cell's kept text at its slot plus its left pad, null cells
-    * left all pad.
-    */
-  private def inPlace(cells: Cells, spec: Spec): UTF8String = {
-    val buf = spec.padLine.clone()
-    val n = spec.kinds.length
-    val text = if (spec.textAt(n) > 0) new Array[Byte](FloatText.Room) else null
-    var i = 0
+    // with one-byte pads no cell shrinks, so in a row that does not grow
+    // every kept character is one byte and no cell shifts
+    val plain = growth == 0 && spec.bytePads
+    val line = spec.padLine
+    val buf = if (growth == 0) line.clone() else java.util.Arrays.copyOf(line, line.length + growth)
+    var shift = 0
+    i = 0
     while (i < n) {
       if (!cells.nulls(i)) {
         val len = spec.lengths(i)
-        val at = spec.slots(i)
+        val width = spec.padWidths(i)
         val align = spec.alignCodes(i)
-        spec.kinds(i) match {
-          case Utf8 =>
-            val v = cells.texts(i)
-            val kept = math.min(v.numBytes, len)
-            Platform.copyMemory(v.getBaseObject, v.getBaseOffset, buf,
-              Platform.BYTE_ARRAY_OFFSET + at + left(align, len - kept), kept)
-          case Float32 => place(text, FloatText.write(
-            java.lang.Float.intBitsToFloat(cells.bits(i).toInt), text, 0), buf, at, len, align)
-          case Float64 => place(text, FloatText.write(
-            java.lang.Double.longBitsToDouble(cells.bits(i)), text, 0), buf, at, len, align)
-          case Bool =>
-            val t = if (cells.bits(i) != 0) True else False
-            place(t, t.length, buf, at, len, align)
-          case _ =>
-            val v = cells.bits(i)
-            val chars = decimalChars(v)
-            val kept = math.min(chars, len)
-            writeDecimal(buf, at + left(align, len - kept), v, chars, kept)
+        val at = spec.slots(i) + shift
+        val kind = spec.kinds(i)
+        var bytes = 0 // the cell's kept bytes
+        var chars = 0 // the characters they hold
+        if (kind == Utf8) {
+          val v = cells.texts(i)
+          if (plain) { bytes = math.min(v.numBytes, len); chars = bytes }
+          else {
+            val w = SliceFixedLine.walk(v.getBaseObject, v.getBaseOffset, v.numBytes, 0, len)
+            bytes = w.toInt
+            chars = len - (w >>> 32).toInt
+          }
+          Platform.copyMemory(v.getBaseObject, v.getBaseOffset, buf,
+            Platform.BYTE_ARRAY_OFFSET + at + left(align, len - chars) * width, bytes)
+        } else {
+          bytes = kind match {
+            case Float32 | Float64 =>
+              place(text, floatText(cells, i, kind, text), buf, at, len, align, width)
+            case Bool =>
+              val t = if (cells.bits(i) != 0) True else False
+              place(t, t.length, buf, at, len, align, width)
+            case _ =>
+              val v = cells.bits(i)
+              val all = decimalChars(v)
+              val kept = math.min(all, len)
+              writeDecimal(buf, at + left(align, len - kept) * width, v, all, kept)
+              kept
+          }
+          chars = bytes
+        }
+        val delta = bytes - chars * width
+        if (delta != 0) {
+          // the rest of the row moves by delta: the pad line again from the
+          // end of this cell's kept characters, clipped to the row
+          val from = spec.slots(i) + (left(align, len - chars) + chars) * width
+          val to = from + shift + delta
+          System.arraycopy(line, from, buf, to, math.min(line.length - from, buf.length - to))
+          shift += delta
         }
       }
       i += 1
@@ -272,24 +281,41 @@ object FormatFixedLine {
     UTF8String.fromBytes(buf)
   }
 
-  /** Copies the first `min(chars, len)` bytes of `src` into the cell at
-    * `at`, after its left pad.
+  /** The bytes non-null cell `i` adds to its all-pad run: its kept bytes
+    * less its kept characters' pad bytes. A float is rendered into `text`
+    * to be counted.
     */
-  private def place(src: Array[Byte], chars: Int, buf: Array[Byte], at: Int, len: Int,
-                    align: Int): Unit = {
-    val kept = math.min(chars, len)
-    System.arraycopy(src, 0, buf, at + left(align, len - kept), kept)
+  private def grows(cells: Cells, spec: Spec, i: Int, text: Array[Byte]): Int = {
+    val len = spec.lengths(i)
+    val width = spec.padWidths(i)
+    spec.kinds(i) match {
+      case Utf8 =>
+        val v = cells.texts(i)
+        val w = SliceFixedLine.walk(v.getBaseObject, v.getBaseOffset, v.numBytes, 0, len)
+        w.toInt - (len - (w >>> 32).toInt) * width
+      case kind =>
+        val chars = kind match {
+          case Float32 | Float64 => floatText(cells, i, kind, text)
+          case Bool => if (cells.bits(i) != 0) True.length else False.length
+          case _ => decimalChars(cells.bits(i))
+        }
+        math.min(chars, len) * (1 - width)
+    }
   }
 
-  /** Whether the `count` bytes at `off` are all ASCII: 8 at a time, then
-    * the rest one by one.
+  /** Renders float cell `i` into `text`; returns its length. */
+  private def floatText(cells: Cells, i: Int, kind: Int, text: Array[Byte]): Int =
+    if (kind == Float32) FloatText.write(java.lang.Float.intBitsToFloat(cells.bits(i).toInt), text, 0)
+    else FloatText.write(java.lang.Double.longBitsToDouble(cells.bits(i)), text, 0)
+
+  /** Copies the first `min(chars, len)` bytes of `src` into the cell at
+    * `at`, after its left pad of `width`-byte pads; returns how many.
     */
-  private def ascii(base: AnyRef, off: Long, count: Int): Boolean = {
-    var high = 0L
-    var i = 0
-    while (i + 8 <= count) { high |= Platform.getLong(base, off + i); i += 8 }
-    while (i < count) { high |= Platform.getByte(base, off + i); i += 1 }
-    (high & SliceFixedLine.HighBits) == 0
+  private def place(src: Array[Byte], chars: Int, buf: Array[Byte], at: Int, len: Int,
+                    align: Int, width: Int): Int = {
+    val kept = math.min(chars, len)
+    System.arraycopy(src, 0, buf, at + left(align, len - kept) * width, kept)
+    kept
   }
 
   /** Pad characters left of a cell `short` characters short of its length. */
@@ -297,74 +323,6 @@ object FormatFixedLine {
     case 0 => 0
     case 1 => short
     case _ => short / 2
-  }
-
-  /** The row in two passes, for any pads and text: the first counts every
-    * cell, so the row is one `byte[]` of its exact size, the second writes
-    * each cell's pad runs and kept text.
-    */
-  private[graft] def twoPass(cells: Cells, spec: Spec): UTF8String = {
-    val n = spec.kinds.length
-    // per cell: bytes kept (low 32 bits), pad characters (high 32)
-    val widths = new Array[Long](n)
-    val textBytes = spec.textAt(n)
-    val text = if (textBytes > 0) new Array[Byte](textBytes) else null
-    var size = 0L
-    var i = 0
-    while (i < n) {
-      val len = spec.lengths(i)
-      val w =
-        if (cells.nulls(i)) len.toLong << 32
-        else spec.kinds(i) match {
-          case Utf8 =>
-            val v = cells.texts(i)
-            SliceFixedLine.walk(v.getBaseObject, v.getBaseOffset, v.numBytes, 0, len)
-          case Float32 => fit(FloatText.write(java.lang.Float.intBitsToFloat(cells.bits(i).toInt),
-            text, spec.textAt(i)), len)
-          case Float64 => fit(FloatText.write(java.lang.Double.longBitsToDouble(cells.bits(i)),
-            text, spec.textAt(i)), len)
-          case Bool => fit(if (cells.bits(i) != 0) True.length else False.length, len)
-          case _ => fit(decimalChars(cells.bits(i)), len)
-        }
-      widths(i) = w
-      size += w.toInt + (w >>> 32) * spec.padWidths(i)
-      i += 1
-    }
-    val buf = new Array[Byte](Math.toIntExact(size))
-    var pos = 0
-    i = 0
-    while (i < n) {
-      val kept = widths(i).toInt
-      val short = (widths(i) >>> 32).toInt
-      val lead = left(spec.alignCodes(i), short)
-      val run = spec.padRuns(i)
-      val padWidth = spec.padWidths(i)
-      System.arraycopy(run, 0, buf, pos, lead * padWidth)
-      pos += lead * padWidth
-      if (kept > 0) spec.kinds(i) match {
-        case Utf8 =>
-          val v = cells.texts(i)
-          Platform.copyMemory(v.getBaseObject, v.getBaseOffset, buf,
-            Platform.BYTE_ARRAY_OFFSET + pos, kept)
-        case Float32 | Float64 => System.arraycopy(text, spec.textAt(i), buf, pos, kept)
-        case Bool =>
-          System.arraycopy(if (cells.bits(i) != 0) True else False, 0, buf, pos, kept)
-        case _ =>
-          val v = cells.bits(i)
-          writeDecimal(buf, pos, v, decimalChars(v), kept)
-      }
-      pos += kept
-      System.arraycopy(run, 0, buf, pos, (short - lead) * padWidth)
-      pos += (short - lead) * padWidth
-      i += 1
-    }
-    UTF8String.fromBytes(buf)
-  }
-
-  /** A text of `chars` one-byte code points in a `len`-wide cell. */
-  private def fit(chars: Int, len: Int): Long = {
-    val kept = math.min(chars, len)
-    ((len - kept).toLong << 32) | kept
   }
 
   /** Characters of `v`'s decimal text (`String.valueOf`), sign included. */

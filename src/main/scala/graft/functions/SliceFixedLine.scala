@@ -187,7 +187,7 @@ object SliceFixedLine {
     override def getMap(i: Int): MapData = unsupported
   }
 
-  private[functions] final val HighBits = 0x8080808080808080L
+  private final val HighBits = 0x8080808080808080L
 
   /** The parsing kernel (also invoked from generated code). */
   def compute(input: UTF8String, spec: Spec): Cells = {

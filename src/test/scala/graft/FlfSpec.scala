@@ -604,6 +604,7 @@ class FlfFormatSpec extends AnyFunSuite {
 object ComposedFormat {
   import org.apache.spark.sql.functions._
   import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.unsafe.types.UTF8String
 
   def format(df: DataFrame, schema: FixedSchema): DataFrame =
     df.select(concat(schema.columns.map(c => formatColumn(col(c.name), c)): _*).as("value"))
@@ -618,6 +619,22 @@ object ComposedFormat {
         val deficit = greatest(lit(c.length) - length(s), lit(0))
         val left = floor(deficit / 2).cast("int")
         rpad(concat(repeat(lit(pad), left), s), c.length, pad)
+    }
+  }
+
+  /** `formatColumn` without Spark: the `UTF8String` calls `StringLPad`,
+    * `StringRPad`, `StringRepeat`, `Concat` and `Length` make, on a value's
+    * cast text, null for a NULL.
+    */
+  def formatText(text: UTF8String, c: FixedColumn): UTF8String = {
+    val s = if (text == null) UTF8String.EMPTY_UTF8 else text
+    val pad = UTF8String.fromString(c.padSymbol.toString)
+    c.alignment match {
+      case Alignment.Right => s.lpad(c.length, pad)
+      case Alignment.Left  => s.rpad(c.length, pad)
+      case Alignment.Center =>
+        val left = math.max(c.length - s.numChars, 0) / 2
+        UTF8String.concat(pad.repeat(left), s).rpad(c.length, pad)
     }
   }
 }
@@ -773,7 +790,8 @@ class FormatFixedLineSpec extends AnyFunSuite {
 
   /** The kernel over `schema` and its Cells for each row, with no Spark
     * job: a value of a type the kernel does not render becomes a string
-    * cell of its `toString` (any text will do, as both layouts get it).
+    * cell of its `toString` (any text will do, as `castText` gives the
+    * same).
     */
   private def kernelCells(schema: FixedSchema, raw: StructType,
                           rows: Seq[Row]): (FormatFixedLine, Seq[FormatFixedLine.Cells]) = {
@@ -792,36 +810,52 @@ class FormatFixedLineSpec extends AnyFunSuite {
     }
   }
 
-  test("compute == the two-pass layout on every fuzz row, both layouts taken") {
-    // rows written in place; rows that fall back because a kept string
-    // holds 'é' or an astral char; rows of a spec with an 'é' or '€' pad
-    var inPlace = 0
-    var keptE, keptAstral, padE, padEuro = 0
+  /** A value's string cast as `compute` renders it, without Spark:
+    * `String.valueOf`, the text Spark's cast gives for every type the
+    * kernel renders, and a binary value's own bytes.
+    */
+  private def castText(v: Any): UTF8String = v match {
+    case null => null
+    case b: Array[Byte] => UTF8String.fromBytes(b)
+    case v => UTF8String.fromString(String.valueOf(v))
+  }
+
+  test("compute == the UTF8String composed chain on every fuzz row") {
+    // rows no cell shifts; rows a kept 'é' or astral char shifts; rows of a
+    // spec with an 'é' or '€' pad; rows with a growing and a shrinking cell
+    var unshifted, keptE, keptAstral, padE, padEuro, growAndShrink = 0
     val trials = fuzz(seed = 6, trials = 40, columns = rnd => 1 + rnd.nextInt(12), rows = 40) ++
       fuzz(seed = 7, trials = 2000, columns = rnd => 1 + rnd.nextInt(12), rows = 40)
     for (Trial(schema, raw, data) <- trials) {
       val (kernel, rowCells) = kernelCells(schema, raw, data)
-      val spec = kernel.spec
+      val cols = schema.columns
       for ((row, cells) <- data.zip(rowCells)) {
-        val expected = FormatFixedLine.twoPass(cells, spec)
-        assert(FormatFixedLine.compute(cells, spec) == expected, s"$schema: $row")
-        if (spec.padLine == null) {
-          if (schema.columns.exists(_.padSymbol == 'é')) padE += 1
-          if (schema.columns.exists(_.padSymbol == '€')) padEuro += 1
-        } else if (!FormatFixedLine.fitsInPlace(cells, spec)) {
-          val kept = schema.columns.indices.collect { case i if row.get(i).isInstanceOf[String] =>
-            row.getString(i).codePoints.limit(schema.columns(i).length).toArray
+        val composed = cols.indices.map(i => ComposedFormat.formatText(castText(row.get(i)), cols(i)))
+        assert(FormatFixedLine.compute(cells, kernel.spec) == UTF8String.concat(composed: _*),
+          s"$schema: $row")
+        // each cell's bytes over its all-pad run's
+        val growth = composed.zip(cols).map { case (cell, c) =>
+          cell.numBytes - c.length * c.padSymbol.toString.getBytes("UTF-8").length }
+        if (cols.exists(_.padSymbol > 0x7F)) {
+          if (cols.exists(_.padSymbol == 'é')) padE += 1
+          if (cols.exists(_.padSymbol == '€')) padEuro += 1
+        } else if (growth.forall(_ == 0)) unshifted += 1
+        else {
+          val kept = cols.indices.collect { case i if row.get(i).isInstanceOf[String] =>
+            row.getString(i).codePoints.limit(cols(i).length).toArray
           }
           if (kept.exists(_.contains('é'.toInt))) keptE += 1
           if (kept.exists(_.exists(Character.isSupplementaryCodePoint))) keptAstral += 1
-        } else inPlace += 1
+        }
+        if (growth.exists(_ > 0) && growth.exists(_ < 0)) growAndShrink += 1
       }
     }
-    assert(Seq(inPlace, keptE, keptAstral, padE, padEuro).forall(_ > 0),
-      s"in place $inPlace, kept é $keptE, kept astral $keptAstral, pad é $padE, pad € $padEuro")
+    assert(Seq(unshifted, keptE, keptAstral, padE, padEuro, growAndShrink).forall(_ > 0),
+      s"unshifted $unshifted, kept é $keptE, kept astral $keptAstral, pad é $padE, " +
+        s"pad € $padEuro, growing and shrinking $growAndShrink")
   }
 
-  test("an integer cell keeps the first characters of its text at every width, in both layouts") {
+  test("an integer cell keeps its first characters at any width, pad ' ' or 'é'") {
     // Long.MinValue in a 1-wide cell drops all 19 digits and keeps its sign
     val values = Seq(Long.MinValue, Long.MaxValue, -1L, 0L, 1000000000000000000L,
       -999999999999999999L, 123456789L)
@@ -836,30 +870,41 @@ class FormatFixedLineSpec extends AnyFunSuite {
     }
   }
 
-  test("FormatFixedLine == composed chain on rows in place and rows that fall back") {
+  test("FormatFixedLine == composed chain on named unshifted and shifted rows") {
     val schema = FixedSchema(name = "t", version = 1, columns = Seq(
       FixedColumn("s", 0, 6, FlfType.Utf8T, Alignment.Right, '_', isNullable = true),
       FixedColumn("n", 6, 5, FlfType.Int32T, Alignment.Center, '0', isNullable = true),
       FixedColumn("t", 11, 7, FlfType.Utf8T, Alignment.Center, '*', isNullable = true)))
     val raw = StructType(Seq(StructField("s", StringType), StructField("n", IntegerType),
       StructField("t", StringType)))
-    // (row, written in place)
+    // (row, its bytes: the pad line's 18 where no cell shifts)
     val cases = Seq(
-      Row("abc", 42, "xy") -> true,
-      Row("abcdef", -7, null) -> true,
-      Row(null, null, "Zz") -> true,
+      Row("abc", 42, "xy") -> 18,
+      Row("abcdef", -7, null) -> 18,
+      Row(null, null, "Zz") -> 18,
       // the only non-ASCII byte lies past the cell's 6 characters
-      Row("abcdefé", 123456, "q") -> true,
-      // a kept 'é'
-      Row("aé", 5, "q") -> false,
-      Row("abc", 5, "é") -> false)
-    val (kernel, rowCells) = kernelCells(schema, raw, cases.map(_._1))
-    for (((row, inPlace), cells) <- cases.zip(rowCells))
-      assert(FormatFixedLine.fitsInPlace(cells, kernel.spec) == inPlace, row)
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(cases.map(_._1), 1), raw)
-    val got = hexLines(FlfFormat.format(df, schema))
-    assert(got == hexLines(ComposedFormat.format(df, schema)))
-    assert(got.head == "5F5F5F616263" + "3034323030" + "2A2A78792A2A2A")
+      Row("abcdefé", 123456, "q") -> 18,
+      // a kept 'é' grows its cell by a byte
+      Row("aé", 5, "q") -> 19,
+      Row("abc", 5, "é") -> 19)
+    // an 'é'-padded digits cell shrinks by 2 bytes before a kept '€' grows
+    // its cell by 2: the row keeps the pad line's 13 bytes, shifted between
+    val shifting = FixedSchema(name = "u", version = 1, columns = Seq(
+      FixedColumn("n", 0, 5, FlfType.Int32T, Alignment.Right, 'é', isNullable = true),
+      FixedColumn("t", 5, 3, FlfType.Utf8T, Alignment.Left, '_', isNullable = true)))
+    val shiftingRaw = StructType(Seq(StructField("n", IntegerType), StructField("t", StringType)))
+    val got = for ((schema, raw, cases) <- Seq((schema, raw, cases),
+        (shifting, shiftingRaw, Seq(Row(42, "€x") -> 13)))) yield {
+      val (kernel, rowCells) = kernelCells(schema, raw, cases.map(_._1))
+      for (((row, bytes), cells) <- cases.zip(rowCells))
+        assert(FormatFixedLine.compute(cells, kernel.spec).numBytes == bytes, row)
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(cases.map(_._1), 1), raw)
+      val lines = hexLines(FlfFormat.format(df, schema))
+      assert(lines == hexLines(ComposedFormat.format(df, schema)))
+      lines
+    }
+    assert(got.head.head == "5F5F5F616263" + "3034323030" + "2A2A78792A2A2A")
+    assert(got(1) == Seq("C3A9C3A9C3A93432" + "E282AC785F"))
   }
 
   test("FormatFixedLine == composed chain byte for byte on a seeded fuzz") {
@@ -886,20 +931,24 @@ class FormatFixedLineSpec extends AnyFunSuite {
     // copies 4 bytes of a 2-byte string: the composed chain appends bytes
     // that are not in the value, so it is no oracle here. The expected
     // cells are the value's own bytes, padded by the code points they
-    // count as.
+    // count as. A kept 'é' before them shifts them by a byte.
     val schema = FixedSchema(name = "t", version = 1, columns = Seq(
-      FixedColumn("v", 0, 2, FlfType.Utf8T, Alignment.Left, '_', isNullable = true),
-      FixedColumn("w", 2, 4, FlfType.Utf8T, Alignment.Right, '_', isNullable = true),
-      FixedColumn("x", 6, 1, FlfType.Utf8T, Alignment.Center, '_', isNullable = true)))
+      FixedColumn("e", 0, 3, FlfType.Utf8T, Alignment.Left, '_', isNullable = true),
+      FixedColumn("v", 3, 2, FlfType.Utf8T, Alignment.Left, '_', isNullable = true),
+      FixedColumn("w", 5, 4, FlfType.Utf8T, Alignment.Right, '_', isNullable = true),
+      FixedColumn("x", 9, 1, FlfType.Utf8T, Alignment.Center, '_', isNullable = true)))
     val raw = StructType(Seq(StructField("b", BinaryType)))
     val rows = Seq(Row(Array(0x41, 0xE2).map(_.toByte)))
     // a local relation folds through `eval`, an RDD relation runs generated code
     for (df <- Seq(spark.createDataFrame(rows.asJava, raw),
         spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), raw))) {
       val v = col("b").cast("string")
-      val got = hexLines(FlfFormat.format(df.select(v.as("v"), v.as("w"), v.as("x")), schema))
-      // v: exact fit, no pad; w: 2 pads on the left; x: truncated to `41`
-      assert(got == Seq("41E2" + "5F5F41E2" + "41"))
+      val e = org.apache.spark.sql.functions.lit("é")
+      val got = hexLines(FlfFormat.format(
+        df.select(e.as("e"), v.as("v"), v.as("w"), v.as("x")), schema))
+      // e: 'é' and 2 pads; v: exact fit, no pad; w: 2 pads on the left;
+      // x: truncated to `41`
+      assert(got == Seq("C3A95F5F" + "41E2" + "5F5F41E2" + "41"))
     }
   }
 

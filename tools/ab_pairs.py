@@ -8,10 +8,16 @@ Runs `python3 perfbench/run.py` in two separate checkouts, one pair per
 seed (seed, seed + 1, ...), with the side that runs first alternating: the
 parent first in odd pairs, the change first in even ones. Each checkout
 builds and caches its own program under its own `perfbench/.work/`.
-Prints each pair's `pass_s` and `setup_s`, then per metric each side's
-median and quartiles, the change's wins and whether the gap between the
-medians exceeds the parent's quartile spread. Exits 1 if any run fails or
-reports failed operations.
+Prints each pair's end-to-end metrics (`end_to_end` in BENCHMARK.json),
+then per metric each side's median and quartiles, the change's wins,
+whether the gap between the medians exceeds the parent's quartile spread,
+and a no-regression verdict against the metric's bound. The bound is a
+share of the parent's median (perfbench/README.md): the change regresses
+when its median is worse than the parent's by more than that share, and
+the verdict is "unresolved" when the parent's quartile spread is a larger
+share of its median than the bound, unless every run of the change reads
+better than every run of the parent. Exits 1 if any run fails or reports
+failed operations.
 """
 import argparse
 import json
@@ -20,7 +26,10 @@ import statistics
 import subprocess
 import sys
 
-METRICS = ("pass_s", "setup_s")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+    END_TO_END = {m["name"]: m for m in json.load(fh)["end_to_end"]}
+METRICS = tuple(END_TO_END)
 
 
 def run(checkout, args, seed, log):
@@ -40,6 +49,19 @@ def run(checkout, args, seed, log):
 def quartiles(xs):
     q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
     return q1, med, q3
+
+
+def verdict(base, new, metric):
+    """No regression, regression or unresolved, as the module docstring says."""
+    bound, lower = metric["bound"], metric["better"] == "lower"
+    q1, med, q3 = quartiles(base)
+    new_med = statistics.median(new)
+    if (max(new) < min(base)) if lower else (min(new) > max(base)):
+        return "no regression (every change run better than every parent run)"
+    if (q3 - q1) / med > bound:
+        return f"unresolved (parent spread {(q3 - q1) / med:.3f} of its median > bound {bound})"
+    ok = new_med <= med * (1 + bound) if lower else new_med >= med * (1 - bound)
+    return f"{'no regression' if ok else 'REGRESSION'} (bound {bound} of the parent median)"
 
 
 def main():
@@ -85,6 +107,7 @@ def main():
               f"{wins}/{len(base)}, quartiles parent {q1:.3f}-{q3:.3f} (spread {q3 - q1:.3f}), "
               f"change {n1:.3f}-{n3:.3f}; median gap {gap:.3f} "
               f"{'>' if gap > q3 - q1 else '<='} parent spread")
+        print(f"{m}: {verdict(base, new, END_TO_END[m])}")
     print(f"failed operations: {failed}")
     sys.exit(1 if failed else 0)
 
